@@ -273,10 +273,14 @@ object Bench {
     ioSeq += ioCalibMbs(ioDir)
     val ioStart = ioSeq.head
     val ioEnd = ioSeq.last
-    // the ~mid sample of the legacy 3-point field = the sequence
-    // element nearest the sweep midpoint
-    val ioMid = ioSeq(math.min(ioSeq.length - 1,
-      math.max(0, math.round(midIdx.toDouble / ioEvery).toInt)))
+    // the ~mid sample of the legacy 3-point field = the probe whose
+    // position is nearest the sweep midpoint (probe k ran before query
+    // k*ioEvery, the end probe after the last query); a tie goes to the
+    // later probe, so a sweep too short for a periodic probe reports
+    // its end probe instead of repeating the start
+    val probeAt = ioSeq.indices.init.map(_ * ioEvery) :+ qlist.size
+    val ioMid = ioSeq(probeAt.indices.minBy(k =>
+      (math.abs(2 * probeAt(k) - qlist.size), -k)))
     def r2(s: Double): String = BigDecimal(s).setScale(2,
       BigDecimal.RoundingMode.HALF_UP).toString
     def r1(s: Double): String = BigDecimal(s).setScale(1,

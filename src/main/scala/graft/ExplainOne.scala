@@ -1,5 +1,14 @@
 package graft
 
+import java.util.concurrent.TimeUnit
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Dev instrument: print the formatted physical plan of registered
   * queries (`SPARK_GRAFT_ONLY=<name>[,<name>...]`, default
   * q_sim_ann_kmeans) at `SPARK_GRAFT_SF_DIR` — the .explain loop the
@@ -25,19 +34,15 @@ object ExplainOne {
           graft.queries.Surface18.scoutHits(spark, sfDir)
         case _ => SparkEntry.queries(name)(spark, sfDir)
       }
-      // SPARK_GRAFT_EXEC=1 (round 21): execute the query through the
-      // noop sink first and dump the AQE FINAL plan (ReusedExchange /
-      // AQEShuffleRead nodes only exist there) — the pre-execution
-      // explain shows isFinalPlan=false and cannot substantiate
-      // runtime-reuse claims.
+      // SPARK_GRAFT_EXEC=1: execute the query through the noop sink
+      // and dump the AQE FINAL plan (ReusedExchange / AQEShuffleRead
+      // nodes only exist there). The write runs its own QueryExecution
+      // around the write command, so `df.queryExecution` never executes;
+      // the listener captures the write's, whose plan is the final one.
       val execFinal = sys.env.get("SPARK_GRAFT_EXEC").exists(_ == "1")
       val planStr =
-        if (execFinal) {
-          df.write.format("noop").mode("overwrite").save()
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        } else df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        if (execFinal) executedPlan(spark, df)
+        else df.queryExecution.explainString(FormattedMode)
       outDir match {
         case Some(dir) =>
           val p = java.nio.file.Paths.get(dir,
@@ -49,5 +54,38 @@ object ExplainOne {
       }
     }
     spark.stop()
+  }
+
+  /** Runs `df` through a `noop` write and returns the formatted plan of
+    * that write's own QueryExecution. Fails unless the top adaptive node
+    * reports `isFinalPlan=true`. */
+  def executedPlan(spark: SparkSession, df: DataFrame): String = {
+    val captured = new AtomicReference[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      // events of earlier actions may still be queued; keep the write's
+      def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = qe.logical match {
+        case _: V2WriteCommand => captured.compareAndSet(null, qe)
+        case _ =>
+      }
+      def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      // listener events are delivered asynchronously
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      while (captured.get == null && System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    val qe = captured.get
+    require(qe != null, "no QueryExecution was reported for the noop write")
+    val top = qe.executedPlan.collectFirst {
+      case a: AdaptiveSparkPlanExec => a
+    }
+    require(top.exists(_.isFinalPlan),
+      "the noop write's plan is not the AQE final plan (isFinalPlan=false)")
+    qe.explainString(FormattedMode)
   }
 }

@@ -12,6 +12,35 @@ import org.apache.spark.sql.SparkSession
   *    keys are the expected hot spot at 100 TB (SURVEY.md §4.2).
   *  - shuffle.partitions = cores: local-mode right-sizing; a real cluster
   *    deployment would raise this (or rely on AQE coalescing, enabled).
+  *
+  * Three fixed values make generated code compile once per JVM instead
+  * of once per session. Callers open a `newSession()` per query or per
+  * pass (Bench, StreamFleet, the suites, perfbench), and the 4CE site
+  * job recompiled 137 generated classes in every `perfbench/run.py`
+  * pass. With the three values it compiles 4, and its median pass
+  * falls from 5.6 to 4.0 s (local[4], 4 cores):
+  *  - `spark.sql.artifact.isolation.enabled=false`: Spark keys its
+  *    generated-class cache by (context class loader, code), and with
+  *    isolation on every session runs its tasks under its own class
+  *    loader, so no session reuses the classes another session's tasks
+  *    compiled. The engine adds no session artifacts (no `addArtifact`
+  *    call), so isolation buys nothing here.
+  *  - `spark.sql.codegen.cache.maxEntries=2000`: one 4CE pass fills 138
+  *    cache entries (98 distinct classes, each cached under the
+  *    driver's and the executors' class loader), past the default 100;
+  *    with isolation off alone about 90 classes still compiled per
+  *    pass. The entries grow slowly from pass to pass (170 after five),
+  *    because a query planned on a new session can emit a class whose
+  *    code differs (e.g. in the order of its distinct-aggregate
+  *    groups); 2000 holds that and the working sets of other workloads
+  *    in the same JVM.
+  *  - `spark.buffer.pageSize=4m`: with the default 16 MB page every
+  *    small broadcast relation, sort or aggregate buffer holds a whole
+  *    page (the traced 4CE pass broadcasts 51.1 MB, three one-page
+  *    relations; 15.1 MB with 4 MB pages). Once the collections stop
+  *    landing in compile garbage they catch those live pages: with
+  *    isolation off alone, peak heap per `query_mix` pass rose from 112
+  *    to 142 MB; with 4 MB pages it is 102 MB.
   */
 object Sessions {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -43,6 +72,10 @@ object Sessions {
       // keep managed tables (bucketed-layout tests) out of the repo root
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.ui.enabled", "false")
+      // compile generated code once per JVM (see the scaladoc above)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.buffer.pageSize", "4m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

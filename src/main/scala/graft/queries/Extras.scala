@@ -2025,9 +2025,14 @@ object Extras {
       // NOT restructured either (round 21, VERDICT r20 item 7,
       // both variants measured on matched windows): (a) basket-grain
       // collect_set + row-local a<b pair fan-out — 2.54 vs 1.97 s
-      // min at sf0.1 (three un-reused ObjectHashAggregate subtrees
-      // replace codegen HashAggregates; the AQE final plan confirms
-      // ReusedExchange does not fire for them); (b) one explicit
+      // min at sf0.1. Its AQE final plan
+      // (plans/r21/q_basket_pairs_rejected_collectset_final.txt)
+      // reuses the basket shuffle for the brand-count leg and the
+      // brand-count broadcast for the second lift join, but the final
+      // collect_set ObjectHashAggregate, which has no codegen, still
+      // runs twice over that shuffle, and the order-count leg re-scans
+      // lineitem ⋈ part (its collect_set is pruned, so its plan no
+      // longer matches the reused one); (b) one explicit
       // repartition(l_orderkey) feeding distinct + both self-join
       // sides (the scoutUnionScored rule) — 2.26 vs 1.97 s (the
       // pre-distinct raw-frame exchange loses the map-side partial

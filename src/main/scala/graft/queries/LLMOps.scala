@@ -170,13 +170,14 @@ object LLMOps {
     // prefilter measured ~10% SLOWER there (3.29 vs 3.00 s min at
     // sf0.1 — the eager checkpoint job plus four candDocs subtrees
     // outweigh the broadcast shrinkage), so it is gated to the form
-    // whose corpus-sized exchange it actually removes. At corpus
-    // scales where the endpoint set outgrows a broadcast, the same
-    // prefilter degrades to a bloom_agg probe (the qDedupIncremental
-    // tier-1 pattern) — no false negatives, FP rows die in the
-    // candidate join. The conf forces either path for matched-window
-    // A/B reruns (the labelprop.broadcast convention — this host's io
-    // drift makes stash-rebuild A/B windows incomparable).
+    // whose corpus-sized exchange it actually removes. The endpoint
+    // set is broadcast unconditionally: no fallback for a set that
+    // outgrows a broadcast (e.g. a bloom_agg probe, the
+    // qDedupIncremental tier-1 pattern) is implemented; guarding it is
+    // tracked by ROADMAP direction 3 (the verifyJaccard bloom_agg arm).
+    // The conf forces either path for matched-window A/B reruns (the
+    // labelprop.broadcast convention — io drift between builds makes
+    // stash-rebuild A/B windows incomparable).
     val useArray = forceArrayForm || docCount(spark, sfDir) > 20000
     val prefilter = spark.conf
       .getOption("spark.graft.verify.prefilter")

@@ -5498,4 +5498,36 @@ class OperatorSuite extends AnyFunSuite {
     val nVertices = a.map(_._2).sum
     assert(nVertices > 0 && a.forall(_._2 > 0))
   }
+
+  test("a new session reuses generated code: no class compiles") {
+    // Sessions.local turns artifact isolation off (with it on, each
+    // session runs its tasks under its own class loader, a key of
+    // Spark's generated-class cache) and sizes the cache above a
+    // pass's working set, so a query re-run on a NEW session compiles
+    // nothing once its code has been seen. A later session can still
+    // plan a few classes differently from an earlier one: a session
+    // that finds the shared cohort cache built plans a scan unlike the
+    // session that built it, and the distinct-aggregate rewrite
+    // numbers its groups in expression-id hash order. So sessions run
+    // until one compiles nothing, at most five after the first. With
+    // isolation on, every session recompiles each class its tasks run
+    // (about 20 of 54).
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val q = SparkEntry.queries("q_fource_demographics")
+    def compiles(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      q(spark.newSession(), sf).write.format("noop").mode("overwrite")
+        .save()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val first = compiles()
+    val later = Iterator.continually(compiles()).take(5)
+      .takeWhile(_ > 0).toList
+    assert(later.size < 5,
+      s"every session recompiled: first $first, then ${later.mkString(", ")}")
+    val conf = spark.newSession().conf
+    assert(conf.get("spark.sql.artifact.isolation.enabled") === "false")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") === "2000")
+    assert(conf.get("spark.buffer.pageSize") === "4m")
+  }
 }

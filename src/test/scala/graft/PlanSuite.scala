@@ -413,15 +413,59 @@ class PlanSuite extends AnyFunSuite {
   }
 
   /** Number of scans in `p` pruned by the probed cell set — under the
-    * round-21 hybrid at-rest layout the evidence is PartitionFilters
-    * (cell-directory form, cells file-sized) OR a pushed In(cell)
-    * predicate reaching the scan (cell-sorted strip form below the
+    * round-21 hybrid at-rest layout the evidence is a partition filter
+    * on `cell` (cell-directory form, cells file-sized) OR a pushed
+    * `In(cell, ...)` reaching the scan (cell-sorted strip form below the
     * file-size threshold, pruned by row-group min/max stats). Both
     * count; a scan with NEITHER is the unpruned regression this lock
-    * exists to catch. */
-  private def cellPruneCount(p: String): Int =
-    "PartitionFilters: \\[[^\\]]*cell".r.findAllIn(p).length +
-      "PushedFilters: \\[[^\\]]*In\\(cell".r.findAllIn(p).length
+    * exists to catch. A bare `isnotnull(cell)` prunes nothing and does
+    * not count. */
+  private def cellPruneCount(p: String): Int = {
+    val cell = "(?<![\\w.])cell(?!\\w)".r
+    val partition = scanLists(p, "PartitionFilters").count(_.exists(f =>
+      cell.findFirstIn(f).isDefined &&
+        !f.toLowerCase.startsWith("isnotnull(")))
+    val pushed = scanLists(p, "PushedFilters")
+      .count(_.exists(_.matches("In\\(cell,.*")))
+    partition + pushed
+  }
+
+  /** The entries of every `<key>: [...]` list in `p`, one Seq per scan.
+    * Entries nest brackets and parentheses (`In(cell, [1,2])`), so a
+    * list ends at its own matching `]` and splits only on top-level
+    * commas. A list cut short by the plan's metadata abbreviation ends
+    * where the scan's next `, Key: ` field or the line begins. */
+  private def scanLists(p: String, key: String): Seq[Seq[String]] =
+    s"$key: \\[".r.findAllMatchIn(p).map { m =>
+      val line = p.substring(m.end).takeWhile(_ != '\n')
+      val value = ", [A-Z][A-Za-z]*: ".r.findFirstMatchIn(line)
+        .fold(line)(f => line.substring(0, f.start))
+      val entries = Seq.newBuilder[String]
+      val cur = new StringBuilder
+      var depth = 0
+      var i = 0
+      while (i < value.length && depth >= 0) {
+        value(i) match {
+          case '[' | '(' => depth += 1; cur += value(i)
+          case ']' | ')' => depth -= 1; if (depth >= 0) cur += value(i)
+          case ',' if depth == 0 => entries += cur.toString.trim; cur.clear()
+          case c => cur += c
+        }
+        i += 1
+      }
+      if (cur.toString.trim.nonEmpty) entries += cur.toString.trim
+      entries.result()
+    }.toSeq
+
+  test("ExplainOne's executed plan is the AQE final plan of the write") {
+    // the noop write runs its own QueryExecution; the dump must be that
+    // one, executed, not the query's never-executed initial plan
+    val p = ExplainOne.executedPlan(spark,
+      SparkEntry.queries("q_basket_pairs")(spark, sf))
+    assert(p.contains("== Final Plan ==") &&
+      p.contains("isFinalPlan=true"), p)
+    assert(p.contains("ShuffleQueryStage"), p)
+  }
 
   test("kmeans ANN probes a pruned at-rest scan via equi join, no BNLJ") {
     // VERDICT r19 item 2: the candidate join must read ONLY the probed
