@@ -220,8 +220,10 @@ object Bench {
     // assumes the second run is memo-warm, and a nonzero second-run
     // build delta falsifies that assumption for exactly the query it
     // happens in — the attribution VERDICT r7 item 1 asks for.
+    // `rows` is the second run's count, the reference the concurrent
+    // stream drain below must reproduce.
     case class R(name: String, ok: Boolean, r1: Double, r2: Double,
-        b1: Long, b2: Long) {
+        b1: Long, b2: Long, rows: Long) {
       def sec: Double = math.min(r1, r2)
       def valStr: String = if (ok) sec.toString else "\"err\""
     }
@@ -254,20 +256,20 @@ object Bench {
         val runs = (1 to 2).map { _ =>
           val builds0 = Memo.buildCount
           val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).count(); true }
+          val rows =
+            try Some(fn(spark, sfDir).count())
             catch { case e: Throwable =>
               System.err.println(s"[bench] ERR $name: ${e.getMessage}")
               anyErr = true
-              false
+              None
             }
-          (ok, (System.nanoTime() - t0) / 1e9,
+          (rows, (System.nanoTime() - t0) / 1e9,
             Memo.buildCount - builds0)
         }
-        val ok = runs.forall(_._1)
+        val ok = runs.forall(_._1.isDefined)
         R(name, ok,
           if (ok) runs(0)._2 else 0.0, if (ok) runs(1)._2 else 0.0,
-          runs(0)._3, runs(1)._3)
+          runs(0)._3, runs(1)._3, runs(1)._1.getOrElse(-1L))
       }
     val calibEnd = calibMs()
     ioSeq += ioCalibMbs(ioDir)
@@ -286,12 +288,16 @@ object Bench {
     def r1(s: Double): String = BigDecimal(s).setScale(1,
       BigDecimal.RoundingMode.HALF_UP).toString
     // deployment-shaped stream number (VERDICT r19 item 6): the whole
-    // stream family re-drained CONCURRENTLY on session clones —
-    // StreamFleet's mechanics, recorded every round beside the
-    // sequential per-row contract (which stays the gate and the
-    // per-query map). Rows are warm (each just ran twice), matching
-    // the fleet binary's equal-temperature protocol. Full sweeps only;
-    // a fleet failure is reported but never voids the artifact.
+    // stream family re-drained CONCURRENTLY, each row on its own
+    // session clone (shared SparkContext, private SQLConf, so
+    // StreamRun's per-query shuffle-partition override cannot race),
+    // recorded beside the sequential per-row contract (which stays the
+    // gate and the per-query map; BASELINE.md "Stream family floor"
+    // has the measurement behind it). Rows are warm (each just ran
+    // twice), so both drains run at the same temperature. Every fleet
+    // count must equal the row's sequential count: a mismatch prints
+    // and fails the run, the artifact line still prints. Full sweeps
+    // only; a fleet failure is reported but never voids the artifact.
     val fleetWall: Option[Double] =
       if (only.isEmpty) {
         try {
@@ -299,14 +305,23 @@ object Bench {
           val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
           val t0 = System.nanoTime()
           val fs = names.map { n =>
-            pool.submit(new java.util.concurrent.Callable[Long] {
+            n -> pool.submit(new java.util.concurrent.Callable[Long] {
               def call(): Long =
                 SparkEntry.queries(n)(spark.newSession(), sfDir).count()
             })
           }
-          fs.foreach(_.get())
+          val counts = fs.map { case (n, f) => n -> f.get() }
+          val wall = (System.nanoTime() - t0) / 1e9
           pool.shutdown()
-          Some((System.nanoTime() - t0) / 1e9)
+          val seq = results.map(r => r.name -> r).toMap
+          counts.foreach { case (n, c) =>
+            if (seq(n).ok && seq(n).rows != c) {
+              System.err.println(s"[bench] FLEET COUNT MISMATCH $n: " +
+                s"seq=${seq(n).rows} fleet=$c")
+              anyErr = true
+            }
+          }
+          Some(wall)
         } catch { case t: Throwable =>
           System.err.println(s"[bench] fleet drain failed: $t")
           None

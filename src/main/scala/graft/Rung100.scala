@@ -31,9 +31,7 @@ package graft
   *  - results stream one line per query as they finish, so a
   *    wall-clock cutoff still leaves a partial record.
   * Usage: `SPARK_GRAFT_SF_DIR=/tmp/sf100gk SPARK_DRIVER_MEM=64g sbt
-  * "runMain graft.Rung100"` (optionally SPARK_GRAFT_ONLY to subset;
-  * SPARK_GRAFT_RUNG_INPROC=1 restores the r18 single-JVM sweep for
-  * A/B). */
+  * "runMain graft.Rung100"` (optionally SPARK_GRAFT_ONLY to subset). */
 object Rung100 {
 
   private val defaultTargets = Seq(
@@ -49,9 +47,8 @@ object Rung100 {
     val targets = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(defaultTargets)
-    val inChild = sys.env.contains("SPARK_GRAFT_RUNG_CHILD")
-    val inProc = sys.env.get("SPARK_GRAFT_RUNG_INPROC").contains("1")
-    if (inChild || inProc) runInProc(sfDir, targets)
+    if (sys.env.contains("SPARK_GRAFT_RUNG_CHILD"))
+      runInProc(sfDir, targets)
     else runForked(sfDir, targets)
   }
 
@@ -134,10 +131,9 @@ object Rung100 {
     if (anyErr) sys.exit(4)
   }
 
-  /** Child / legacy in-process sweep: one SparkSession per query in
-    * THIS JVM (the round-17/18 protocol; a failed stage's shuffle
-    * files outlive the failure inside a long-lived session, so each
-    * query still gets a fresh session and clean spill budget). */
+  /** Child: runs its target (the parent passes one through
+    * SPARK_GRAFT_ONLY) on a fresh SparkSession in THIS JVM and prints
+    * the line the parent parses. */
   private def runInProc(sfDir: String, targets: Seq[String]): Unit = {
     var calibStart = -1L
     var anyErr = false

@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Three fixed values make generated code compile once per JVM instead
   * of once per session. Callers open a `newSession()` per query or per
-  * pass (Bench, StreamFleet, the suites, perfbench), and the 4CE site
+  * pass (Bench, the suites, perfbench), and the 4CE site
   * job recompiled 137 generated classes in every `perfbench/run.py`
   * pass. With the three values it compiles 4, and its median pass
   * falls from 5.6 to 4.0 s (local[4], 4 cores):

@@ -267,7 +267,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
     // sub-grain NDVs for the pre-aggregate's COLLAPSE signal (round
     // 19, VERDICT r18 item 5): cells-per-used-grain decides whether
     // merging below the join is worth its exchange (measured 0.74× at
-    // collapse 2.2, 1.71× at collapse 10³ — CollapseBench). Footers
+    // collapse 2.2, 1.71× at collapse 10³ — BASELINE.md round 17,
+    // "Collapse-factor-honest pre-aggregate measurement"). Footers
     // cannot carry NDVs, so this is ONE approximate-distinct job over
     // the SUMMARY (cells are small by the summary's own contract —
     // the r17 footer-count advice stands for the ROW count, which
@@ -1174,11 +1175,12 @@ object RollupRewrite extends Rule[LogicalPlan] {
     // FACTOR — summary cells per used-grain row, from the NDVs
     // registered alongside the footer count. The pre-aggregate's
     // value is the join-input reduction, which IS this ratio; both
-    // ends are now measured (CollapseBench: 0.74× at collapse 2.2
-    // under broadcast / ~neutral hinted, 1.71× isolated at collapse
-    // 10³), so the guard refuses below COLLAPSE_MIN = 8 — above the
-    // measured-harmful single-digit band, below the (day × key)
-    // dashboard family (collapse ≥ 10) the pre-aggregate exists for.
+    // ends are measured (BASELINE.md "Collapse-factor guard": 0.74×
+    // at collapse 2.2 under broadcast / ~neutral hinted, 1.71×
+    // isolated at collapse 10³), so the guard refuses below
+    // COLLAPSE_MIN = 8 — above the measured-harmful single-digit
+    // band, below the (day × key) dashboard family (collapse ≥ 10)
+    // the pre-aggregate exists for.
     // Unknown NDV (no registration job, > 4 dims) falls back to the
     // shuffle-regime signal alone — the pre-r19 behavior.
     val collapseOk = d.grainNdv.get(preDims.toSet) match {

@@ -2653,9 +2653,16 @@ object Extras {
     * remainder-to-front ntile, so with a total order the cut is
     * identical); recency anchors on max(o_orderdate) over the table
     * (a window over the customer frame), never wall-clock. Monetary
-    * sums are DECIMAL. Shape: one fact shuffle to customer grain,
-    * three windows over the customer frame, one dimension-sized
-    * segment rollup. */
+    * sums are DECIMAL, and the segment average is rounded half-up to
+    * the cent in integer arithmetic: with u = Σm·10⁶ (exact, m is
+    * DECIMAL(18,6)), cents = ⌊(2u + n·10⁴) / (2n·10⁴)⌋. A segment of
+    * two customers with odd-cent totals averages to exactly half a
+    * cent, where rounding the double quotient splits the engines
+    * (Spark rounds the double's shortest decimal form, DuckDB
+    * round(x·100)); so both evaluate the same exact integer division
+    * and convert only the cents to double. Shape: one fact shuffle to
+    * customer grain, three windows over the customer frame, one
+    * dimension-sized segment rollup. */
   val qRfm = Q("q_rfm",
     (spark, sfDir) => {
       import spark.implicits._
@@ -2675,9 +2682,11 @@ object Extras {
         .withColumn("mq", ntile(4).over(
           Window.orderBy($"m".desc, $"o_custkey")))
       seg.groupBy(concat($"rq", $"fq", $"mq").as("rfm"))
-        .agg(count(lit(1)).as("n_customers"),
-          round(sum($"m").cast("double") /
-            count(lit(1)), 2).as("avg_monetary"))
+        .agg(count(lit(1)).as("n_customers"), sum($"m").as("sum_m"))
+        .select($"rfm", $"n_customers",
+          expr("""CAST((2 * CAST(sum_m * 1000000 AS DECIMAL(38,0))
+                 |  + n_customers * 10000) div (n_customers * 20000)
+                 |  AS DOUBLE) / 100""".stripMargin).as("avg_monetary"))
         .orderBy($"rfm")
     },
     Some("""WITH cust AS (
@@ -2699,8 +2708,9 @@ object Extras {
            |SELECT CAST(rq AS VARCHAR) || CAST(fq AS VARCHAR) ||
            |         CAST(mq AS VARCHAR) AS rfm,
            |       count(*) AS n_customers,
-           |       round(CAST(sum(m) AS DOUBLE) / count(*), 2)
-           |         AS avg_monetary
+           |       CAST((2 * CAST(sum(m) * 1000000 AS HUGEINT)
+           |             + count(*) * 10000) // (count(*) * 20000)
+           |         AS DOUBLE) / 100 AS avg_monetary
            |FROM seg GROUP BY 1 ORDER BY rfm""".stripMargin))
 
   /** E147: **two-proportion z-test (A/B arms)** — the experiment

@@ -506,11 +506,8 @@ object Graphs {
       // un-hinted 7.96/7.83 (inside the noise band). The un-hinted
       // form is therefore BOTH the local winner and the production
       // path — AQE chooses broadcast while labels fit and degrades to
-      // a shuffle join past the threshold instead of failing. The
-      // conf restores the old hint for A/B reruns.
-      val hintBroadcast = spark.conf
-        .getOption("spark.graft.labelprop.broadcast")
-        .exists(_.trim.toBoolean)
+      // a shuffle join past the threshold instead of failing (both
+      // arms' numbers: BASELINE.md, round-14 records).
       // Round 21 experiments on this row's 8-core-faster anomaly
       // (VERDICT r20 item 2), ALL measured and rejected on
       // interleaved matched windows with an untouched control:
@@ -542,8 +539,7 @@ object Graphs {
         // hub-vertex neighbor lists costs more than the second hash
         // exchange saves) and rejected; the two-agg form stands.
         lab = und
-          .join(if (hintBroadcast) broadcast(lab) else lab,
-            $"v" === $"node")
+          .join(lab, $"v" === $"node")
           .groupBy($"u", $"lab").agg(count(lit(1)).as("c"))
           .groupBy($"u")
           .agg(max_by($"lab", struct($"c", -$"lab")).as("lab"))

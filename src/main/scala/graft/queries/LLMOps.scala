@@ -175,20 +175,10 @@ object LLMOps {
     // outgrows a broadcast (e.g. a bloom_agg probe, the
     // qDedupIncremental tier-1 pattern) is implemented; guarding it is
     // tracked by ROADMAP direction 3 (the verifyJaccard bloom_agg arm).
-    // The conf forces either path for matched-window A/B reruns (the
-    // labelprop.broadcast convention — io drift between builds makes
-    // stash-rebuild A/B windows incomparable).
+    // PlanSuite locks both shapes: the semi join below the collect_set
+    // on the array form, none on the join form.
     val useArray = forceArrayForm || docCount(spark, sfDir) > 20000
-    val prefilter = spark.conf
-      .getOption("spark.graft.verify.prefilter")
-      .map(_.trim.toBoolean).getOrElse(useArray)
-    val cand = if (prefilter) cand0.localCheckpoint() else cand0
-    val candDocs = cand.select($"d1".as("doc_id"))
-      .union(cand.select($"d2".as("doc_id"))).distinct()
-    def preFiltered(leg: DataFrame): DataFrame =
-      if (prefilter)
-        leg.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      else leg
+    val cand = if (useArray) cand0.localCheckpoint() else cand0
     // shingles ride the verify as the full-width 64-BIT IDENTITY HASH,
     // not the string (round 17 introduced the hash ride — 16-byte
     // (doc, hash) rows cut the shuffled volume ~2.5× vs strings;
@@ -229,13 +219,11 @@ object LLMOps {
         shingles(spark, sfDir)
           .select($"doc_id", charFold64($"s").as("h")).distinct()
       }
-      // prefilter OFF here by default (round 21 measurement above);
-      // preFiltered is identity unless the conf forces it
-      val shc = preFiltered(shd)
-      val sizes = shc.groupBy($"doc_id").agg(count(lit(1)).as("n"))
+      // no prefilter here (round 21 measurement above)
+      val sizes = shd.groupBy($"doc_id").agg(count(lit(1)).as("n"))
       val common = cand
-        .join(shc.as("x"), $"d1" === $"x.doc_id")
-        .join(shc.as("y"), $"d2" === $"y.doc_id" && $"x.h" === $"y.h")
+        .join(shd.as("x"), $"d1" === $"x.doc_id")
+        .join(shd.as("y"), $"d2" === $"y.doc_id" && $"x.h" === $"y.h")
         .groupBy($"d1", $"d2").agg(count(lit(1)).as("c"))
       common
         .join(sizes.select($"doc_id".as("d1"), $"n".as("n1")),
@@ -250,7 +238,9 @@ object LLMOps {
       // candidate-endpoint prefilter (round 21): the Θ(corpus)
       // collect_set exchange — the array form's one corpus-sized
       // shuffle — shrinks to the candidate docs' shingles
-      val sets = preFiltered(sh)
+      val candDocs = cand.select($"d1".as("doc_id"))
+        .union(cand.select($"d2".as("doc_id"))).distinct()
+      val sets = sh.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
         .groupBy($"doc_id")
         .agg(sort_array(collect_set($"h")).as("hs"))
         .select($"doc_id", $"hs", size($"hs").as("n"))
@@ -3810,7 +3800,7 @@ object LLMOps {
       // the IDENTICAL polynomial (charFold64Sql), so both engines
       // agree by construction even on a collision. Per-doc sizes
       // count rows, so they are hash-invariant. The conf restores the
-      // string keys for A/B (labelprop.broadcast convention).
+      // string keys for A/B reruns (ROADMAP direction 3 retires it).
       val hashRide = spark.conf
         .getOption("spark.graft.audit.hashride")
         .forall(_.trim.toBoolean)

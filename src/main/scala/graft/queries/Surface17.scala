@@ -79,8 +79,9 @@ object Surface17 {
     * the measured-neutral single-digit band, so at driver scales the
     * rewrite rides the cells but REFUSES the below-join merge
     * (plan-locked); the ≥8-collapse fired path is plan-locked by the
-    * (day × custkey) dayfilter row (collapse ≈ 10) and measured by
-    * CollapseBench (collapse 10³ → 1.71× isolated). */
+    * (day × custkey) dayfilter row (collapse ≈ 10); its payoff at
+    * collapse 10³ (1.71× isolated) is recorded in BASELINE.md,
+    * "Collapse-factor guard". */
   val qAggRollupJoinbackPreagg = Q("q_agg_rollup_joinback_preagg",
     (spark, sfDir) => {
       import spark.implicits._

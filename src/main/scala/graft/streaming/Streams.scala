@@ -170,10 +170,6 @@ object StreamRun {
         .option("checkpointLocation", ck)
         .outputMode(mode).start()
       q.processAllAvailable()
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DBG"))
-        q.recentProgress.foreach(p =>
-          System.err.println(s"[stream-dbg] $name batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs}"))
     } finally {
       if (q != null)
         try q.stop()

@@ -1935,6 +1935,32 @@ class OperatorSuite extends AnyFunSuite {
     }
   }
 
+  test("rfm: a segment average on exactly half a cent rounds half-up") {
+    // 24 customers, one order each on one day, prices falling with the
+    // key: every axis orders by custkey, so the segments are 111, 222,
+    // 333, 444 with six customers each. Segment 111 totals 10000.65,
+    // so its average is exactly 1666.775 and must round to 1666.78;
+    // the double quotient 10000.65 / 6 prints as 1666.7749999999999.
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-rfm-halfcent").toString
+    val prices = Seq("1700.65", "1690.00", "1680.00", "1660.00",
+      "1650.00", "1620.00") ++ (7 to 24).map(k => s"${1000 - k}.00")
+    val day = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
+    prices.zipWithIndex.map { case (p, i) =>
+      (i + 1L, i + 1L, "F", p.toDouble, day, "1-URGENT")
+    }.toDF(Tables.orders.fieldNames.toIndexedSeq: _*)
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val got = graft.queries.Extras.qRfm.fn(spark, dir).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val want = prices.grouped(6).zip(Seq("111", "222", "333", "444"))
+      .map { case (ps, seg) =>
+        seg -> (ps.size.toLong, (ps.map(BigDecimal(_)).sum / ps.size)
+          .setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }.toMap
+    assert(want("111")._2 === 1666.78)
+    assert(got === want)
+  }
+
   test("two-proportion z-test matches the driver-side formula") {
     val r = graft.queries.Extras.qAbTest.fn(spark, sf).head()
     val (n1, x1, n2, x2) =
@@ -2448,6 +2474,30 @@ class OperatorSuite extends AnyFunSuite {
       "dirty candidate must be rejected with both violations counted")
     assert(clean._4 === Tables.read(spark, sf, "orders").count(),
       "published state must be exactly the clean batch")
+  }
+
+  test("WAP: a repeated customer key does not refuse a clean batch") {
+    // The audit left-joins the staged orders to the customer keys; a
+    // key listed twice in `customer` must not double that customer's
+    // orders into "duplicate PKs".
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-wap-dupcust").toString
+    Seq((1L, "a"), (1L, "a"), (2L, "b"), (3L, "c"))
+      .map { case (k, n) => (k, n, 1, 0.0, "BUILDING") }
+      .toDF(Tables.customer.fieldNames.toIndexedSeq: _*)
+      .write.mode("overwrite").parquet(s"$dir/customer.parquet")
+    val day = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
+    Seq((10L, 1L, 5.0), (11L, 1L, 7.5), (12L, 2L, 1.25), (13L, 3L, 2.0))
+      .map { case (o, c, p) => (o, c, "F", p, day, "1-URGENT") }
+      .toDF(Tables.orders.fieldNames.toIndexedSeq: _*)
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val res = graft.sources.Formats.qWriteAuditPublish.fn(spark, dir)
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getBoolean(2), r.getLong(3))).toMap
+    assert(res("A_clean") === ((0L, true, 4L)),
+      "the clean batch must publish")
+    assert(res("B_dirty") === ((2L, false, 4L)),
+      "the dirty batch must still be refused for its two violations")
   }
 
   test("idempotent ingest: sharp retry and conflict counts") {
@@ -5226,7 +5276,8 @@ class OperatorSuite extends AnyFunSuite {
     // ~nothing — 0.74× at the r16 first cut, neutral hinted), so the
     // rewrite must REFUSE the below-join merge here even under the
     // merge hint; the ≥8-collapse fired lock lives in the dayfilter
-    // test below (collapse ≈ 10) and in CollapseBench (10³)
+    // test below (collapse ≈ 10); the collapse-10³ payoff is recorded
+    // in BASELINE.md, "Collapse-factor guard"
     def q() = graft.queries.Surface17
       .qAggRollupJoinbackPreagg.fn(spark, sf)
     val df = q()
