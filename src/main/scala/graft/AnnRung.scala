@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN scale-rung instrument (VERDICT r16 item 1): the similarity
@@ -7,16 +8,16 @@ import org.apache.spark.sql.functions._
   *  - the BUCKETING claim: IVF cell sizes and LSH bucket sizes bound
   *    each probe's candidate count (avg and max per probe, measured,
   *    not argued from construction);
-  *  - the RECALL claim: recall@3 of the cell-restricted path vs the
+  *  - the RECALL claim: recall@3 of each approximate tier vs the
   *    exact brute-force top-3, mean and min over the 50 probes, from
-  *    the gated q_sim_ann_recall query's own output.
-  * Wall-clock for the four queries comes from `graft.Bench` with
+  *    the tier's own gated recall row.
+  * Wall-clock for the queries comes from `graft.Bench` with
   * `SPARK_GRAFT_ONLY=q_sim_cosine_topk,q_sim_ann_ivf,q_sim_ann_lsh,
   * q_sim_ann_recall` at the same fixture; this main reports the
   * numbers a timing line cannot.
   *
   * Usage: `SPARK_GRAFT_SF_DIR=/tmp/sf10gk sbt "runMain graft.AnnRung"`
-  * → ONE JSON line. */
+  * → ONE JSON line; exits nonzero on a violated bound. */
 object AnnRung {
 
   def main(args: Array[String]): Unit = {
@@ -24,116 +25,78 @@ object AnnRung {
       "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-annrung")
     import spark.implicits._
+    val S18 = queries.Surface18
     val e = Tables.read(spark, sfDir, "embeddings")
     val n = e.count()
     val probes = e.filter($"vec_id" < 50)
       .select($"vec_id", $"label",
         queries.LLMOps.hyperBits($"embedding").as("bkt"))
-    val cellSizes = e.groupBy($"label").agg(count(lit(1)).as("c"))
-    val ivf = probes.join(cellSizes, "label")
-      .agg(avg($"c" - 1).as("a"), max($"c" - 1).as("m")).head()
-    val bktSizes = e
-      .withColumn("bkt", queries.LLMOps.hyperBits($"embedding"))
-      .groupBy($"bkt").agg(count(lit(1)).as("c"))
-    val lsh = probes.join(bktSizes, "bkt")
-      .agg(avg($"c" - 1).as("a"), max($"c" - 1).as("m")).head()
-    val rec = SparkEntry.queries("q_sim_ann_recall")(spark, sfDir)
-      .agg(avg($"recall_at_3").as("a"), min($"recall_at_3").as("m"))
-      .head()
-    // round 18: the learned-cell (k-means, nprobe) path — candidates
-    // per probe and its recall, alongside the label-cell numbers so
-    // the r17 "fixture-limited recall" caveat has its measured answer
-    val km = queries.Surface18.kmeansCandCounts(spark, sfDir)
-      .agg(avg($"n_cand").as("a"), max($"n_cand").as("m")).head()
-    val kmRec = SparkEntry.queries("q_sim_ann_kmeans_recall")(spark,
-        sfDir)
-      .agg(avg($"recall_at_3").as("a"), min($"recall_at_3").as("m"))
-      .head()
-    // round 20: the at-rest index's SCAN volume — rows the pruned
-    // candidate scan actually reads per probe batch (VERDICT r19
-    // item 2's "flat bytes" claim, measured: must grow ≲×2 across the
-    // ×100 fixture hop while n grows ×100), plus the composed IVF∘PQ
-    // tier's recall (VERDICT r19 item 3)
-    val scanRows = queries.Surface18.kmeansScanRows(spark, sfDir)
-    val ivfpqRec = SparkEntry.queries("q_sim_ann_ivf_pq_recall")(spark,
-        sfDir)
-      .agg(avg($"recall_at_3").as("a"), min($"recall_at_3").as("m"))
-      .head()
-    require(ivfpqRec.getDouble(0) >= 0.0 && ivfpqRec.getDouble(0) <= 1.0
-      && ivfpqRec.getDouble(1) >= 0.0,
-      s"ivfpq recall out of [0,1]: $ivfpqRec")
+    // label cells and LSH buckets: a probe's candidates are the other
+    // members of its cell/bucket
+    def othersIn(corpus: DataFrame, key: String): DataFrame =
+      probes.join(corpus.groupBy(key).agg(count(lit(1)).as("c")), key)
+        .select(($"c" - 1).as("n_cand"))
+    // the scan VOLUME of the at-rest index (round 20): rows the pruned
+    // kmeans candidate scan reads per probe batch, which must stay
+    // ≲×2 across the ×100 fixture hop while n grows ×100
+    val scanRows = S18.kmeansScanRows(spark, sfDir)
     require(scanRows <= n,
       "pruned scan cannot read more rows than the corpus")
-    // round 20: the scout-union tier (E378, VERDICT r19 item 5 — the
-    // recall FLOOR): candidates |IVF census ∪ ADC top-T| and
-    // recall@3 mean/min; the tier's candidate set is a strict
-    // superset of the pure-IVF row's, so its recall must dominate —
-    // asserted here at every fixture, not just claimed
-    val sc = queries.Surface18.scoutCandCounts(spark, sfDir)
-      .agg(avg($"n_cand").as("a"), max($"n_cand").as("m")).head()
-    val scRec = SparkEntry.queries("q_sim_ann_scout_recall")(spark,
-        sfDir)
-      .agg(avg($"recall_at_3").as("a"), min($"recall_at_3").as("m"))
-      .head()
-    require(scRec.getDouble(0) >= 0.0 && scRec.getDouble(0) <= 1.0 &&
-      scRec.getDouble(1) >= 0.0, s"scout recall out of [0,1]: $scRec")
-    require(sc.getLong(1) >= sc.getDouble(0).toLong,
-      "scout candidate max below avg — measurement inconsistent")
-    require(scRec.getDouble(0) >= kmRec.getDouble(0) - 1e-9 &&
-      scRec.getDouble(1) >= kmRec.getDouble(1) - 1e-9,
-      s"scout union must dominate pure IVF recall: $scRec vs $kmRec")
-    // round 19: the two-level (coarse/fine) path — candidates and
-    // recall under the group-pruned probe, quantifying what the
-    // coarse level costs in recall for its ~16× ranking-work cut
-    val tl = queries.Surface18.twoLevelCandCounts(spark, sfDir)
-      .agg(avg($"n_cand").as("a"), max($"n_cand").as("m")).head()
-    val tlRec = SparkEntry.queries("q_sim_ann_twolevel_recall")(spark,
-        sfDir)
-      .agg(avg($"recall_at_3").as("a"), min($"recall_at_3").as("m"))
-      .head()
-    require(tlRec.getDouble(0) >= 0.0 && tlRec.getDouble(0) <= 1.0 &&
-      tlRec.getDouble(1) >= 0.0,
-      s"twolevel recall out of [0,1]: $tlRec")
-    require(tl.getLong(1) >= tl.getDouble(0).toLong,
-      "twolevel candidate max below avg — measurement inconsistent")
-    // structural bounds, asserted at every scale (exit nonzero on
-    // violation): recall is a fraction of the exact top-3, and a
-    // probe's candidate set can never exceed its cell/bucket
-    require(rec.getDouble(0) >= 0.0 && rec.getDouble(0) <= 1.0 &&
-      rec.getDouble(1) >= 0.0, s"recall out of [0,1]: $rec")
-    require(kmRec.getDouble(0) >= 0.0 && kmRec.getDouble(0) <= 1.0 &&
-      kmRec.getDouble(1) >= 0.0, s"kmeans recall out of [0,1]: $kmRec")
-    require(km.getLong(1) >= km.getDouble(0).toLong,
-      "kmeans candidate max below avg — measurement inconsistent")
-    require(ivf.getLong(1) >= ivf.getDouble(0).toLong &&
-      lsh.getLong(1) >= lsh.getDouble(0).toLong,
-      "candidate max below avg — measurement inconsistent")
     def r(x: Double): String =
       BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP)
         .toString
-    println(s"""{"metric":"ann_rung","n_vecs":$n,""" +
-      s""""cand_ivf_avg":${r(ivf.getDouble(0))},""" +
-      s""""cand_ivf_max":${ivf.getLong(1)},""" +
-      s""""cand_lsh_avg":${r(lsh.getDouble(0))},""" +
-      s""""cand_lsh_max":${lsh.getLong(1)},""" +
-      s""""recall_mean":${r(rec.getDouble(0))},""" +
-      s""""recall_min":${r(rec.getDouble(1))},""" +
-      s""""cand_kmeans_avg":${r(km.getDouble(0))},""" +
-      s""""cand_kmeans_max":${km.getLong(1)},""" +
-      s""""recall_kmeans_mean":${r(kmRec.getDouble(0))},""" +
-      s""""recall_kmeans_min":${r(kmRec.getDouble(1))},""" +
-      s""""cand_twolevel_avg":${r(tl.getDouble(0))},""" +
-      s""""cand_twolevel_max":${tl.getLong(1)},""" +
-      s""""recall_twolevel_mean":${r(tlRec.getDouble(0))},""" +
-      s""""recall_twolevel_min":${r(tlRec.getDouble(1))},""" +
-      s""""scan_rows_kmeans":$scanRows,""" +
-      s""""recall_ivfpq_mean":${r(ivfpqRec.getDouble(0))},""" +
-      s""""recall_ivfpq_min":${r(ivfpqRec.getDouble(1))},""" +
-      s""""cand_scout_avg":${r(sc.getDouble(0))},""" +
-      s""""cand_scout_max":${sc.getLong(1)},""" +
-      s""""recall_scout_mean":${r(scRec.getDouble(0))},""" +
-      s""""recall_scout_min":${r(scRec.getDouble(1))},""" +
-      s""""sf":"$sfDir"}""")
+    // (key, per-probe candidate counts as n_cand, recall@3 row), in
+    // output order: label cells, LSH buckets, the label-cell recall,
+    // learned cells (r18), the two-level quantizer (r19), IVF∘PQ and
+    // the scout union (r20)
+    val tiers: Seq[(String, Option[DataFrame], Option[String])] = Seq(
+      ("ivf", Some(othersIn(e, "label")), None),
+      ("lsh", Some(othersIn(e.withColumn("bkt",
+        queries.LLMOps.hyperBits($"embedding")), "bkt")), None),
+      ("", None, Some("q_sim_ann_recall")),
+      ("kmeans", Some(S18.kmeansCandCounts(spark, sfDir)),
+        Some("q_sim_ann_kmeans_recall")),
+      ("twolevel", Some(S18.twoLevelCandCounts(spark, sfDir)),
+        Some("q_sim_ann_twolevel_recall")),
+      ("ivfpq", None, Some("q_sim_ann_ivf_pq_recall")),
+      ("scout", Some(S18.scoutCandCounts(spark, sfDir)),
+        Some("q_sim_ann_scout_recall")))
+    val recall = scala.collection.mutable.Map.empty[String, (Double, Double)]
+    val fields = tiers.map { case (key, cand, row) =>
+      val c = cand.toSeq.flatMap { df =>
+        val a = df.agg(avg($"n_cand"), max($"n_cand")).head()
+        require(a.getLong(1) >= a.getDouble(0).toLong,
+          s"$key candidate max below avg — measurement inconsistent")
+        Seq(s"cand_${key}_avg" -> r(a.getDouble(0)),
+          s"cand_${key}_max" -> a.getLong(1).toString)
+      }
+      val rc = row.toSeq.flatMap { name =>
+        val a = SparkEntry.queries(name)(spark, sfDir)
+          .agg(avg($"recall_at_3"), min($"recall_at_3")).head()
+        val (mean, lo) = (a.getDouble(0), a.getDouble(1))
+        // structural: recall is a fraction of the exact top-3
+        require(mean >= 0.0 && mean <= 1.0 && lo >= 0.0,
+          s"$name recall out of [0,1]: $a")
+        recall(key) = (mean, lo)
+        val p = if (key.isEmpty) "recall" else s"recall_$key"
+        Seq(s"${p}_mean" -> r(mean), s"${p}_min" -> r(lo))
+      }
+      c ++ rc
+    }
+    // the scout tier's candidates are a strict superset of the pure
+    // IVF row's, so its recall must dominate — asserted at every
+    // fixture, not just claimed
+    val ((scMean, scMin), (kmMean, kmMin)) =
+      (recall("scout"), recall("kmeans"))
+    require(scMean >= kmMean - 1e-9 && scMin >= kmMin - 1e-9,
+      s"scout union must dominate pure IVF recall: " +
+        s"($scMean, $scMin) vs ($kmMean, $kmMin)")
+    val (head, tail) = fields.splitAt(5)
+    val all = (("n_vecs" -> n.toString) +: head.flatten) ++
+      (("scan_rows_kmeans" -> scanRows.toString) +: tail.flatten) :+
+      ("sf" -> s""""$sfDir"""")
+    println(all.map { case (k, v) => s""""$k":$v""" }
+      .mkString("""{"metric":"ann_rung",""", ",", "}"))
     spark.stop()
   }
 }

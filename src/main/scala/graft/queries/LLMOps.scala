@@ -1286,6 +1286,26 @@ object LLMOps {
            |FROM s ORDER BY vec_id""".stripMargin))
 
   // ---------------------------------------------------------------- X3
+  /** The X3 rows' scored frame over the corpus `e0`: the first `n`
+    * vectors are the probes, each scored by the family's rounded cosine
+    * against every other vector of its `cell` (the whole corpus when
+    * `cell` is None), the cell column carried along. */
+  private def probeScored(e0: DataFrame, n: Int,
+      cell: Option[String]): DataFrame = {
+    val e = Surface18.withNrm(e0)
+    val q = Surface18.probeFrame(e, n,
+      cell.map(c => col(c).as(s"q_$c")).toSeq: _*)
+    val notSelf = col("vec_id") =!= col("q_id")
+    e.join(broadcast(q),
+      cell.fold(notSelf)(c => col(c) === col(s"q_$c") && notSelf))
+      .select(Seq(col("q_id"), col("vec_id").as("neighbor_id")) ++
+        cell.map(col) :+ Surface18.cosSim(col("nrm")): _*)
+  }
+
+  /** The label-cell IVF top-3 (q_sim_ann_ivf's rows, unordered). */
+  private def labelCellTop3(spark: SparkSession, sfDir: String) =
+    Surface18.rankTopK(probeScored(emb(spark, sfDir), 50, Some("label")), 3)
+
   /** Brute-force cosine top-k: 10 query vectors broadcast against the
     * full table (the exact baseline every ANN variant is measured
     * against). Ranking uses the ROUNDED similarity + vec_id tiebreak so
@@ -1293,19 +1313,7 @@ object LLMOps {
   val qSimCosineTopk = Q("q_sim_cosine_topk",
     (spark, sfDir) => {
       import spark.implicits._
-      val e = emb(spark, sfDir)
-        .withColumn("nrm", sqrt(Vectors.normSq($"embedding")))
-      val q = e.filter($"vec_id" < 10)
-        .select($"vec_id".as("q_id"), $"embedding".as("qv"),
-          $"nrm".as("qnrm"))
-      val scored = e.join(broadcast(q), $"vec_id" =!= $"q_id")
-        .select($"q_id", $"vec_id".as("neighbor_id"),
-          round(Vectors.dot($"qv", $"embedding") /
-            ($"qnrm" * $"nrm"), 6).as("cos_sim"))
-      val w = Window.partitionBy($"q_id")
-        .orderBy($"cos_sim".desc, $"neighbor_id")
-      scored.withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 5)
+      Surface18.rankTopK(probeScored(emb(spark, sfDir), 10, None), 5)
         .orderBy($"q_id", $"rank")
     },
     Some("""WITH q AS (
@@ -1332,21 +1340,7 @@ object LLMOps {
   val qSimAnnIvf = Q("q_sim_ann_ivf",
     (spark, sfDir) => {
       import spark.implicits._
-      val e = emb(spark, sfDir)
-        .withColumn("nrm", sqrt(Vectors.normSq($"embedding")))
-      val q = e.filter($"vec_id" < 50)
-        .select($"vec_id".as("q_id"), $"embedding".as("qv"),
-          $"label".as("q_label"), $"nrm".as("qnrm"))
-      val scored = e.join(broadcast(q), $"label" === $"q_label" &&
-          $"vec_id" =!= $"q_id")
-        .select($"q_id", $"vec_id".as("neighbor_id"), $"label",
-          round(Vectors.dot($"qv", $"embedding") /
-            ($"qnrm" * $"nrm"), 6).as("cos_sim"))
-      val w = Window.partitionBy($"q_id")
-        .orderBy($"cos_sim".desc, $"neighbor_id")
-      scored.withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 3)
-        .orderBy($"q_id", $"rank")
+      labelCellTop3(spark, sfDir).orderBy($"q_id", $"rank")
     },
     Some("""WITH q AS (
            |  SELECT vec_id AS q_id, embedding AS qv, label AS q_label
@@ -1380,79 +1374,16 @@ object LLMOps {
     * audit costs one extra 50×500 scored frame, which is the point:
     * auditing on a sample is cheap insurance. */
   val qSimAnnRecall = Q("q_sim_ann_recall",
-    (spark, sfDir) => {
-      import spark.implicits._
-      val e = emb(spark, sfDir)
-        .withColumn("nrm", sqrt(Vectors.normSq($"embedding")))
-      val q = e.filter($"vec_id" < 50)
-        .select($"vec_id".as("q_id"), $"embedding".as("qv"),
-          $"label".as("q_label"), $"nrm".as("qnrm"))
-      def top3(restrictToCell: Boolean) = {
-        val joined =
-          if (restrictToCell)
-            e.join(broadcast(q), $"label" === $"q_label" &&
-              $"vec_id" =!= $"q_id")
-          else
-            e.join(broadcast(q), $"vec_id" =!= $"q_id")
-        val w = Window.partitionBy($"q_id")
-          .orderBy($"cos_sim".desc, $"neighbor_id")
-        joined
-          .select($"q_id", $"vec_id".as("neighbor_id"),
-            round(Vectors.dot($"qv", $"embedding") /
-              ($"qnrm" * $"nrm"), 6).as("cos_sim"))
-          .withColumn("rank", row_number().over(w))
-          .filter($"rank" <= 3)
-          .select($"q_id", $"neighbor_id")
-      }
-      val hits = top3(restrictToCell = true).as("a")
-        .join(top3(restrictToCell = false).as("b"),
-          $"a.q_id" === $"b.q_id" &&
-            $"a.neighbor_id" === $"b.neighbor_id")
-        .groupBy($"a.q_id").agg(count(lit(1)).as("n_hits"))
-      q.select($"q_id")
-        .join(hits, Seq("q_id"), "left")
-        .select($"q_id",
-          coalesce($"n_hits", lit(0L)).as("n_hits"),
-          round(coalesce($"n_hits", lit(0L)).cast("double") / 3.0, 6)
-            .as("recall_at_3"))
-        .orderBy($"q_id")
-    },
-    Some("""WITH e AS (
-           |  SELECT vec_id, label, embedding,
-           |    sqrt(list_sum(list_transform(list_zip(embedding, embedding), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))) AS nrm
-           |  FROM embeddings
-           |), q AS (
-           |  SELECT vec_id AS q_id, embedding AS qv, label AS q_label,
-           |    nrm AS qnrm
-           |  FROM e WHERE vec_id < 50
-           |), ann AS (
-           |  SELECT q_id, neighbor_id FROM (
-           |    SELECT q.q_id, e.vec_id AS neighbor_id,
-           |      row_number() OVER (PARTITION BY q.q_id ORDER BY
-           |        round(list_sum(list_transform(list_zip(qv, e.embedding), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) / (qnrm * e.nrm), 6) DESC,
-           |        e.vec_id) AS rank
-           |    FROM e JOIN q ON e.label = q.q_label
-           |      AND e.vec_id <> q.q_id
-           |  ) WHERE rank <= 3
-           |), brute AS (
-           |  SELECT q_id, neighbor_id FROM (
-           |    SELECT q.q_id, e.vec_id AS neighbor_id,
-           |      row_number() OVER (PARTITION BY q.q_id ORDER BY
-           |        round(list_sum(list_transform(list_zip(qv, e.embedding), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) / (qnrm * e.nrm), 6) DESC,
-           |        e.vec_id) AS rank
-           |    FROM e JOIN q ON e.vec_id <> q.q_id
-           |  ) WHERE rank <= 3
-           |), hits AS (
-           |  SELECT a.q_id, count(*) AS n_hits
-           |  FROM ann a JOIN brute b
-           |    ON a.q_id = b.q_id AND a.neighbor_id = b.neighbor_id
-           |  GROUP BY a.q_id
-           |)
-           |SELECT q.q_id, coalesce(h.n_hits, 0) AS n_hits,
-           |  round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 3.0, 6)
-           |    AS recall_at_3
-           |FROM q LEFT JOIN hits h ON q.q_id = h.q_id
-           |ORDER BY q.q_id""".stripMargin))
+    (spark, sfDir) =>
+      Surface18.recallAt3(spark, sfDir, labelCellTop3(spark, sfDir)),
+    Some(Surface18.recallSql(s"""${Surface18.qvCte}, ann AS (
+           |  SELECT p.vec_id AS q_id, e.vec_id AS neighbor_id,
+           |    row_number() OVER (PARTITION BY p.vec_id ORDER BY
+           |      ${Surface18.cosSql("p.embedding", "e.embedding")} DESC,
+           |      e.vec_id) AS rank
+           |  FROM embeddings e JOIN embeddings p ON p.vec_id < 50
+           |    AND e.label = p.label AND e.vec_id <> p.vec_id
+           |)""".stripMargin, "ann")))
 
   // ---------------------------------------------------------------- X4
   /** Multimodal join: text table ⋈ vector table on the shared id, with
@@ -1617,21 +1548,8 @@ object LLMOps {
       val bucket = (0 until 8).map(p =>
         when(Vectors.dotHof($"embedding", plane(p)) >= 0, lit(1L << p))
           .otherwise(0L)).reduce(_ + _)
-      val e = emb(spark, sfDir)
-        .withColumn("bkt", bucket)
-        .withColumn("nrm", sqrt(Vectors.normSq($"embedding")))
-      val q = e.filter($"vec_id" < 50)
-        .select($"vec_id".as("q_id"), $"embedding".as("qv"),
-          $"bkt".as("q_bkt"), $"nrm".as("qnrm"))
-      val scored = e.join(broadcast(q), $"bkt" === $"q_bkt" &&
-          $"vec_id" =!= $"q_id")
-        .select($"q_id", $"vec_id".as("neighbor_id"), $"bkt",
-          round(Vectors.dot($"qv", $"embedding") /
-            ($"qnrm" * $"nrm"), 6).as("cos_sim"))
-      val w = Window.partitionBy($"q_id")
-        .orderBy($"cos_sim".desc, $"neighbor_id")
-      scored.withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 3)
+      Surface18.rankTopK(probeScored(
+          emb(spark, sfDir).withColumn("bkt", bucket), 50, Some("bkt")), 3)
         .orderBy($"q_id", $"rank")
     },
     Some("""WITH planes AS (
@@ -3796,18 +3714,12 @@ object LLMOps {
       // The exact-Jaccard leg rides the 64-BIT IDENTITY HASH, not the
       // shingle string (round 21 — the verify family's r17 hash-ride
       // applied to the audit): the common-shingle join keys 8-byte
-      // longs instead of bigram strings, and the DuckDB oracle folds
-      // the IDENTICAL polynomial (charFold64Sql), so both engines
-      // agree by construction even on a collision. Per-doc sizes
-      // count rows, so they are hash-invariant. The conf restores the
-      // string keys for A/B reruns (ROADMAP direction 3 retires it).
-      val hashRide = spark.conf
-        .getOption("spark.graft.audit.hashride")
-        .forall(_.trim.toBoolean)
-      val sh0 =
-        if (hashRide) shingles(spark, sfDir)
-          .select($"doc_id", charFold64($"s").as("s"))
-        else shingles(spark, sfDir)
+      // longs instead of bigram strings. The DuckDB oracle joins the
+      // shingle STRINGS, so strict parity proves the fold collided on
+      // no audited pair. Per-doc sizes count rows, so they are
+      // hash-invariant.
+      val sh0 = shingles(spark, sfDir)
+        .select($"doc_id", charFold64($"s").as("s"))
       val (bandsJ, sh) =
         if (rate == 1L) (bands, sh0)
         else {
@@ -3880,13 +3792,11 @@ object LLMOps {
             |  GROUP BY 1, 2
             |), sizes AS (
             |  SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
-            |), v64 AS (
-            |  SELECT doc_id, ${charFold64Sql("s")} AS h FROM sh
             |), common AS (
             |  SELECT d1, d2, count(*) AS c
             |  FROM cand
-            |  JOIN v64 p ON p.doc_id = d1
-            |  JOIN v64 q ON q.doc_id = d2 AND q.h = p.h
+            |  JOIN sh p ON p.doc_id = d1
+            |  JOIN sh q ON q.doc_id = d2 AND q.s = p.s
             |  GROUP BY 1, 2
             |), scored AS (
             |  SELECT m.n_match * 125000 AS je_mic,

@@ -106,14 +106,6 @@ object Surface16 {
            |GROUP BY 1
            |ORDER BY cohort""".stripMargin))
 
-  /** Per-(session, sfDir) dirs of the incrementally-maintained
-    * lattice: (rawZoneDir, fineCellsDir, coarseCellsDir). Built once
-    * (Memo.once) — the OperatorSuite equivalence self-test reads the
-    * same stores the gated query registered. */
-  private val incrDirs = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (String, String, String)]()
-
   /** Build side of E355: drain the 50k-row MicroBatchStream in five
     * admission-controlled batches; per batch, fold partial cells into
     * the FINE summary (grain: i%20 × shard), then refresh ONLY the
@@ -126,11 +118,14 @@ object Surface16 {
     * .BitmapMapMergeAgg]] re-merges it idempotently at every level —
     * a replayed batch id overwrites its own versioned output AND
     * cannot double-count the distinct cell, by algebra). Registers
-    * BOTH grains with [[graft.plans.RollupRewrite]]. */
+    * BOTH grains with [[graft.plans.RollupRewrite]]. Returns
+    * (rawZoneDir, fineCellsDir, coarseCellsDir), built once per
+    * (session, sfDir) — the OperatorSuite equivalence self-test reads
+    * the same stores the gated query registered. */
   private[graft] def incrLattice(
       spark: org.apache.spark.sql.SparkSession,
       sfDir: String): (String, String, String) = {
-    graft.Memo.once(spark, s"lat_incr:$sfDir") {
+    graft.Memo.value(spark, s"lat_incr:$sfDir") {
       import spark.implicits._
       import org.apache.spark.sql.DataFrame
       val root = java.nio.file.Files
@@ -210,9 +205,8 @@ object Surface16 {
         "shard" -> expr("cast((i div 15000) as int)")), fineDir)
       reg(Seq("shard" -> expr("cast((i div 15000) as int)")),
         coarseDir)
-      incrDirs.put((spark, sfDir), (baseDir, fineDir, coarseDir))
+      (baseDir, fineDir, coarseDir)
     }
-    incrDirs.get((spark, sfDir))
   }
 
   /** E355: **incrementally-consistent summary LATTICE** — E342

@@ -117,12 +117,6 @@ object Surface17 {
            |GROUP BY c_mktsegment
            |ORDER BY c_mktsegment""".stripMargin))
 
-  /** Per-(session, sfDir) dirs of the late-data lattice:
-    * (acceptedZoneDir, cellsDir, dropsDir). */
-  private val lateDirs = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (String, String, String)]()
-
   /** Build side of E362: the E355 incremental-lattice maintenance
     * composed with WATERMARK semantics for late/out-of-order rows.
     * The 50k-row deterministic stream carries an event-time proxy
@@ -145,11 +139,12 @@ object Surface17 {
     * exactly as Spark's EventTimeWatermark does. Every step is a pure
     * function of `i` given the pinned 10k-row batch boundaries, so
     * the DuckDB oracle reproduces admission, drops and cells from
-    * range() alone. */
+    * range() alone. Returns (acceptedZoneDir, cellsDir, dropsDir),
+    * built once per (session, sfDir). */
   private[graft] def lateLattice(
       spark: org.apache.spark.sql.SparkSession,
       sfDir: String): (String, String, String) = {
-    graft.Memo.once(spark, s"lat_late:$sfDir") {
+    graft.Memo.value(spark, s"lat_late:$sfDir") {
       import spark.implicits._
       import org.apache.spark.sql.DataFrame
       val root = java.nio.file.Files
@@ -261,9 +256,8 @@ object Surface17 {
         summary = spark.read.parquet(cellsDir),
         stats = Seq(("v_sum", "v_sq", "v_cnt", acc("value"))),
         distincts = Seq("k_bm" -> (acc("i") % 700)))
-      lateDirs.put((spark, sfDir), (accDir, cellsDir, dropsDir))
+      (accDir, cellsDir, dropsDir)
     }
-    lateDirs.get((spark, sfDir))
   }
 
   /** E362: **late and out-of-order data through the incremental

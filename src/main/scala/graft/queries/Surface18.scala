@@ -401,10 +401,7 @@ object Surface18 {
       pairs: Seq[(Long, Long)]): DataFrame = {
     import spark.implicits._
     val probedCellIds = pairs.map(_._2).distinct.sorted
-    val qv = qvFrame(spark, sfDir)
-    val probes = qv.filter($"vec_id" < 50)
-      .select($"vec_id".as("q_id"), $"embedding".as("pv"))
-      .withColumn("pnrm", sqrt(Vectors.normSq($"pv")))
+    val probes = probeFrame(qvFrame(spark, sfDir), 50)
     val pairsDf = pairs.toDF("q_id", "cell")
     atRest(spark, sfDir)
       .filter($"cell".isin(probedCellIds: _*))
@@ -412,21 +409,60 @@ object Surface18 {
       .filter($"vec_id" =!= $"q_id")
       .join(broadcast(probes), Seq("q_id"))
       .select($"q_id", $"vec_id".as("neighbor_id"),
-        round(Vectors.dot($"pv", $"embedding") /
-          ($"pnrm" * sqrt(Vectors.normSq($"embedding"))), 6)
-          .as("cos_sim"))
+        cosSim(sqrt(Vectors.normSq($"embedding"))))
   }
 
-  /** Exact-cosine top-3 within the probed candidate set (id
-    * tiebreak) — the ranking tail of [[scoredFrom]]. */
-  private def top3From(spark: SparkSession, sfDir: String,
-      pairs: Seq[(Long, Long)]): DataFrame = {
-    import spark.implicits._
-    val w = Window.partitionBy($"q_id")
-      .orderBy($"cos_sim".desc, $"neighbor_id")
-    scoredFrom(spark, sfDir, pairs)
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
+  // ------------------------------ the family's exact baseline and audit
+  /** The probe frame: corpus vectors `vec_id < n` as (q_id, pv,
+    * `extra`…, pnrm). */
+  private[queries] def probeFrame(corpus: DataFrame, n: Int,
+      extra: Column*): DataFrame =
+    corpus.filter(col("vec_id") < n)
+      .select(Seq(col("vec_id").as("q_id"), col("embedding").as("pv")) ++
+        extra: _*)
+      .withColumn("pnrm", sqrt(Vectors.normSq(col("pv"))))
+
+  /** `e` with its vectors' L2 norm as `nrm`. */
+  private[queries] def withNrm(e: DataFrame): DataFrame =
+    e.withColumn("nrm", sqrt(Vectors.normSq(col("embedding"))))
+
+  /** The family's rounded cosine of probe `pv` against corpus
+    * `embedding` of norm `nrm`. */
+  private[queries] def cosSim(nrm: Column): Column =
+    round(Vectors.dot(col("pv"), col("embedding")) / (col("pnrm") * nrm), 6)
+      .as("cos_sim")
+
+  /** The family's ranking: row_number per probe by (cos_sim desc,
+    * neighbor_id), cut at rank ≤ k. */
+  private[queries] def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("cos_sim").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  /** recall@3 of an approximate tier's top-3 (q_id, neighbor_id, …)
+    * against the exact brute-force top-3, one row for each of the 50
+    * probes: n_hits = |ann ∩ exact| and n_hits / 3 — every ANN tier's
+    * audit (the family's measurement discipline: each approximate path
+    * ships with its recall row). */
+  private[queries] def recallAt3(spark: SparkSession, sfDir: String,
+      annTop3: DataFrame): DataFrame = {
+    val e = withNrm(Tables.read(spark, sfDir, "embeddings"))
+    val q = probeFrame(e, 50)
+    val brute = rankTopK(e.join(broadcast(q), col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
+        cosSim(col("nrm"))), 3)
+    val hits = annTop3.select(col("q_id"), col("neighbor_id")).as("a")
+      .join(brute.select(col("q_id"), col("neighbor_id")).as("b"),
+        col("a.q_id") === col("b.q_id") &&
+          col("a.neighbor_id") === col("b.neighbor_id"))
+      .groupBy(col("a.q_id")).agg(count(lit(1)).as("n_hits"))
+    val nHits = coalesce(col("n_hits"), lit(0L))
+    q.select(col("q_id"))
+      .join(hits, Seq("q_id"), "left")
+      .select(col("q_id"), nHits.as("n_hits"),
+        round(nHits.cast("double") / 3.0, 6).as("recall_at_3"))
+      .orderBy(col("q_id"))
   }
 
   /** AnnRung instrument: rows the PRUNED at-rest scan reads for the
@@ -443,8 +479,8 @@ object Surface18 {
 
   private[graft] def kmeansTop3(spark: SparkSession,
       sfDir: String): DataFrame =
-    top3From(spark, sfDir,
-      kmeansProbeTriples(spark, sfDir).map(t => (t._1, t._2)))
+    rankTopK(scoredFrom(spark, sfDir,
+      kmeansProbeTriples(spark, sfDir).map(t => (t._1, t._2))), 3)
 
   /** Per-probe candidate counts (instrument surface for AnnRung): how
     * many corpus vectors the adaptive probe set actually contains —
@@ -587,8 +623,8 @@ object Surface18 {
 
   private[graft] def twoLevelTop3(spark: SparkSession,
       sfDir: String): DataFrame =
-    top3From(spark, sfDir,
-      twoLevelProbeTriples(spark, sfDir).map(t => (t._1, t._2)))
+    rankTopK(scoredFrom(spark, sfDir,
+      twoLevelProbeTriples(spark, sfDir).map(t => (t._1, t._2))), 3)
 
   /** AnnRung instrument: two-level candidates per probe. */
   private[graft] def twoLevelCandCounts(spark: SparkSession,
@@ -820,21 +856,11 @@ object Surface18 {
       .withColumn("arnk", row_number().over(wAdc))
       .filter($"arnk" <= ADC_RERANK)
       .select($"q_id", $"neighbor_id")
-    val e = Tables.read(spark, sfDir, "embeddings")
-      .withColumn("nrm", sqrt(Vectors.normSq($"embedding")))
-    val probes = e.filter($"vec_id" < 50)
-      .select($"vec_id".as("q_id"), $"embedding".as("pv"),
-        $"nrm".as("pnrm"))
-    val w = Window.partitionBy($"q_id")
-      .orderBy($"cos_sim".desc, $"neighbor_id")
-    e.select($"vec_id".as("neighbor_id"), $"embedding", $"nrm")
+    val e = withNrm(Tables.read(spark, sfDir, "embeddings"))
+    rankTopK(e.select($"vec_id".as("neighbor_id"), $"embedding", $"nrm")
       .join(broadcast(winners), Seq("neighbor_id"))
-      .join(broadcast(probes), Seq("q_id"))
-      .select($"q_id", $"neighbor_id",
-        round(Vectors.dot($"pv", $"embedding") / ($"pnrm" * $"nrm"), 6)
-          .as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
+      .join(broadcast(probeFrame(e, 50)), Seq("q_id"))
+      .select($"q_id", $"neighbor_id", cosSim($"nrm")), 3)
   }
 
   /** The PQ code table AT REST, cell-partitioned like [[atRestDir]] —
@@ -952,10 +978,7 @@ object Surface18 {
     // (adc_gather — round 20; the recon + zip_with fold was a
     // CodegenFallback lambda chain per candidate pair), the rerank
     // leg the raw probe vectors — same integers, same cut
-    val probes = Tables.read(spark, sfDir, "embeddings")
-      .filter($"vec_id" < 50)
-      .select($"vec_id".as("q_id"), $"embedding".as("pv"))
-      .withColumn("pnrm", sqrt(Vectors.normSq($"pv")))
+    val probes = probeFrame(Tables.read(spark, sfDir, "embeddings"), 50)
     val dt = probeDtabs(spark, sfDir, books)
     val adc = call_function("adc_gather", booksIdsLit(books),
       $"dtab", $"codes")
@@ -970,19 +993,12 @@ object Surface18 {
       .withColumn("arnk", row_number().over(wAdc))
       .filter($"arnk" <= IVF_ADC_RERANK)
       .select($"q_id", $"neighbor_id")
-    val emb = atRest(spark, sfDir)
+    val emb = withNrm(atRest(spark, sfDir)
       .filter($"cell".isin(cellIds: _*))
-      .select($"vec_id".as("neighbor_id"), $"embedding")
-      .withColumn("nrm", sqrt(Vectors.normSq($"embedding")))
-    val w = Window.partitionBy($"q_id")
-      .orderBy($"cos_sim".desc, $"neighbor_id")
-    emb.join(broadcast(winners), Seq("neighbor_id"))
+      .select($"vec_id".as("neighbor_id"), $"embedding"))
+    rankTopK(emb.join(broadcast(winners), Seq("neighbor_id"))
       .join(broadcast(probes), Seq("q_id"))
-      .select($"q_id", $"neighbor_id",
-        round(Vectors.dot($"pv", $"embedding") / ($"pnrm" * $"nrm"), 6)
-          .as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
+      .select($"q_id", $"neighbor_id", cosSim($"nrm")), 3)
   }
 
   /** E378's scout leg: the best SCOUT_T rows per probe by global ADC
@@ -1053,9 +1069,7 @@ object Surface18 {
     val selDf = (pairs.map(t => (t._1, t._2, -1L)) ++
         hits.map(h => (h._1, h._3, h._2)))
       .toDF("q_id", "cell", "sel")
-    val probes = qvFrame(spark, sfDir).filter($"vec_id" < 50)
-      .select($"vec_id".as("q_id"), $"embedding".as("pv"))
-      .withColumn("pnrm", sqrt(Vectors.normSq($"pv")))
+    val probes = probeFrame(qvFrame(spark, sfDir), 50)
     // One exchange serves dedup AND ranking (guide §2.4): hash by
     // q_id once — HashPartitioning(q_id) clusters (q_id, neighbor_id)
     // for the dedup aggregate AND q_id for the downstream rank
@@ -1067,23 +1081,15 @@ object Surface18 {
         $"vec_id" =!= $"q_id")
       .join(broadcast(probes), Seq("q_id"))
       .select($"q_id", $"vec_id".as("neighbor_id"),
-        round(Vectors.dot($"pv", $"embedding") /
-          ($"pnrm" * sqrt(Vectors.normSq($"embedding"))), 6)
-          .as("cos_sim"))
+        cosSim(sqrt(Vectors.normSq($"embedding"))))
       .repartition($"q_id")
       .groupBy($"q_id", $"neighbor_id")
       .agg(max($"cos_sim").as("cos_sim"))
   }
 
   private[graft] def scoutTop3(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    import spark.implicits._
-    val w = Window.partitionBy($"q_id")
-      .orderBy($"cos_sim".desc, $"neighbor_id")
-    scoutUnionScored(spark, sfDir)
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
-  }
+      sfDir: String): DataFrame =
+    rankTopK(scoutUnionScored(spark, sfDir), 3)
 
   /** Per-probe candidate counts of the scout-union tier (AnnRung
     * instrument): |IVF probe census ∪ ADC scout hits| — bounded by
@@ -1118,55 +1124,8 @@ object Surface18 {
     * (the family's measurement discipline: every approximate path
     * ships with its recall row). */
   val qSimAnnPqRecall = Q("q_sim_ann_pq_recall",
-    (spark, sfDir) => {
-      import spark.implicits._
-      val e = Tables.read(spark, sfDir, "embeddings")
-        .withColumn("nrm", sqrt(Vectors.normSq($"embedding")))
-      val q = e.filter($"vec_id" < 50)
-        .select($"vec_id".as("q_id"), $"embedding".as("pv"),
-          $"nrm".as("pnrm"))
-      val w = Window.partitionBy($"q_id")
-        .orderBy($"cos_sim".desc, $"neighbor_id")
-      val brute = e.join(broadcast(q), $"vec_id" =!= $"q_id")
-        .select($"q_id", $"vec_id".as("neighbor_id"),
-          round(Vectors.dot($"pv", $"embedding") / ($"pnrm" * $"nrm"), 6)
-            .as("cos_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 3)
-        .select($"q_id", $"neighbor_id")
-      val hits = pqTop3(spark, sfDir)
-        .select($"q_id", $"neighbor_id").as("a")
-        .join(brute.as("b"), $"a.q_id" === $"b.q_id" &&
-          $"a.neighbor_id" === $"b.neighbor_id")
-        .groupBy($"a.q_id").agg(count(lit(1)).as("n_hits"))
-      q.select($"q_id")
-        .join(hits, Seq("q_id"), "left")
-        .select($"q_id", coalesce($"n_hits", lit(0L)).as("n_hits"),
-          round(coalesce($"n_hits", lit(0L)).cast("double") / 3.0, 6)
-            .as("recall_at_3"))
-        .orderBy($"q_id")
-    },
-    Some(s"""WITH $qvCte, $pqCte, $adcCte, qbrute AS (
-            |  SELECT q_id, neighbor_id FROM (
-            |    SELECT p.vec_id AS q_id, e.vec_id AS neighbor_id,
-            |      row_number() OVER (PARTITION BY p.vec_id ORDER BY
-            |        ${cosSql("p.embedding", "e.embedding")} DESC,
-            |        e.vec_id) AS rank
-            |    FROM qv e JOIN qv p ON p.vec_id < 50
-            |      AND e.vec_id <> p.vec_id
-            |  ) t WHERE rank <= 3
-            |), qhits AS (
-            |  SELECT a.q_id, count(*) AS n_hits
-            |  FROM (SELECT q_id, neighbor_id FROM pqranked
-            |        WHERE rank <= 3) a
-            |  JOIN qbrute b ON a.q_id = b.q_id
-            |    AND a.neighbor_id = b.neighbor_id
-            |  GROUP BY a.q_id
-            |)
-            |SELECT p.vec_id AS q_id, coalesce(h.n_hits, 0) AS n_hits,
-            |  round(coalesce(h.n_hits, 0) / 3.0, 6) AS recall_at_3
-            |FROM qv p LEFT JOIN qhits h ON h.q_id = p.vec_id
-            |WHERE p.vec_id < 50 ORDER BY q_id""".stripMargin))
+    (spark, sfDir) => recallAt3(spark, sfDir, pqTop3(spark, sfDir)),
+    Some(recallSql(s"$qvCte, $pqCte, $adcCte", "pqranked")))
 
   /** E376: **IVF ∘ PQ/ADC retrieval** — the composed production tier
     * (see [[ivfPqTop3]]): kmeans cells probe, ADC over the probed
@@ -1192,55 +1151,8 @@ object Surface18 {
     * discipline); OperatorSuite locks the sf0.1 mean ≥ 0.8, AnnRung
     * reads it at the grown fixtures. */
   val qSimAnnIvfPqRecall = Q("q_sim_ann_ivf_pq_recall",
-    (spark, sfDir) => {
-      import spark.implicits._
-      val e = Tables.read(spark, sfDir, "embeddings")
-        .withColumn("nrm", sqrt(Vectors.normSq($"embedding")))
-      val q = e.filter($"vec_id" < 50)
-        .select($"vec_id".as("q_id"), $"embedding".as("pv"),
-          $"nrm".as("pnrm"))
-      val w = Window.partitionBy($"q_id")
-        .orderBy($"cos_sim".desc, $"neighbor_id")
-      val brute = e.join(broadcast(q), $"vec_id" =!= $"q_id")
-        .select($"q_id", $"vec_id".as("neighbor_id"),
-          round(Vectors.dot($"pv", $"embedding") / ($"pnrm" * $"nrm"), 6)
-            .as("cos_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 3)
-        .select($"q_id", $"neighbor_id")
-      val hits = ivfPqTop3(spark, sfDir)
-        .select($"q_id", $"neighbor_id").as("a")
-        .join(brute.as("b"), $"a.q_id" === $"b.q_id" &&
-          $"a.neighbor_id" === $"b.neighbor_id")
-        .groupBy($"a.q_id").agg(count(lit(1)).as("n_hits"))
-      q.select($"q_id")
-        .join(hits, Seq("q_id"), "left")
-        .select($"q_id", coalesce($"n_hits", lit(0L)).as("n_hits"),
-          round(coalesce($"n_hits", lit(0L)).cast("double") / 3.0, 6)
-            .as("recall_at_3"))
-        .orderBy($"q_id")
-    },
-    Some(s"""WITH $kmeansCte, $pqCte, $ivfPqCte, ibrute AS (
-            |  SELECT q_id, neighbor_id FROM (
-            |    SELECT p.vec_id AS q_id, e.vec_id AS neighbor_id,
-            |      row_number() OVER (PARTITION BY p.vec_id ORDER BY
-            |        ${cosSql("p.embedding", "e.embedding")} DESC,
-            |        e.vec_id) AS rank
-            |    FROM qv e JOIN qv p ON p.vec_id < 50
-            |      AND e.vec_id <> p.vec_id
-            |  ) t WHERE rank <= 3
-            |), ihits AS (
-            |  SELECT a.q_id, count(*) AS n_hits
-            |  FROM (SELECT q_id, neighbor_id FROM ivfpqranked
-            |        WHERE rank <= 3) a
-            |  JOIN ibrute b ON a.q_id = b.q_id
-            |    AND a.neighbor_id = b.neighbor_id
-            |  GROUP BY a.q_id
-            |)
-            |SELECT p.vec_id AS q_id, coalesce(h.n_hits, 0) AS n_hits,
-            |  round(coalesce(h.n_hits, 0) / 3.0, 6) AS recall_at_3
-            |FROM qv p LEFT JOIN ihits h ON h.q_id = p.vec_id
-            |WHERE p.vec_id < 50 ORDER BY q_id""".stripMargin))
+    (spark, sfDir) => recallAt3(spark, sfDir, ivfPqTop3(spark, sfDir)),
+    Some(recallSql(s"$kmeansCte, $pqCte, $ivfPqCte", "ivfpqranked")))
 
   /** E378: **IVF ∪ ADC-scout retrieval** — the family's recall-floor
     * tier (VERDICT r19 item 5). The adaptive IVF probe budget misses
@@ -1280,55 +1192,8 @@ object Surface18 {
     * discipline); AnnRung reads mean AND min at the scale fixtures —
     * the floor (min) is this row's reason to exist. */
   val qSimAnnScoutRecall = Q("q_sim_ann_scout_recall",
-    (spark, sfDir) => {
-      import spark.implicits._
-      val e = Tables.read(spark, sfDir, "embeddings")
-        .withColumn("nrm", sqrt(Vectors.normSq($"embedding")))
-      val q = e.filter($"vec_id" < 50)
-        .select($"vec_id".as("q_id"), $"embedding".as("pv"),
-          $"nrm".as("pnrm"))
-      val w = Window.partitionBy($"q_id")
-        .orderBy($"cos_sim".desc, $"neighbor_id")
-      val brute = e.join(broadcast(q), $"vec_id" =!= $"q_id")
-        .select($"q_id", $"vec_id".as("neighbor_id"),
-          round(Vectors.dot($"pv", $"embedding") / ($"pnrm" * $"nrm"), 6)
-            .as("cos_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 3)
-        .select($"q_id", $"neighbor_id")
-      val hits = scoutTop3(spark, sfDir)
-        .select($"q_id", $"neighbor_id").as("a")
-        .join(brute.as("b"), $"a.q_id" === $"b.q_id" &&
-          $"a.neighbor_id" === $"b.neighbor_id")
-        .groupBy($"a.q_id").agg(count(lit(1)).as("n_hits"))
-      q.select($"q_id")
-        .join(hits, Seq("q_id"), "left")
-        .select($"q_id", coalesce($"n_hits", lit(0L)).as("n_hits"),
-          round(coalesce($"n_hits", lit(0L)).cast("double") / 3.0, 6)
-            .as("recall_at_3"))
-        .orderBy($"q_id")
-    },
-    Some(s"""WITH $kmeansCte, $pqCte, $adcCte, $scoutCte, sbrute AS (
-            |  SELECT q_id, neighbor_id FROM (
-            |    SELECT p.vec_id AS q_id, e.vec_id AS neighbor_id,
-            |      row_number() OVER (PARTITION BY p.vec_id ORDER BY
-            |        ${cosSql("p.embedding", "e.embedding")} DESC,
-            |        e.vec_id) AS rank
-            |    FROM qv e JOIN qv p ON p.vec_id < 50
-            |      AND e.vec_id <> p.vec_id
-            |  ) t WHERE rank <= 3
-            |), shits AS (
-            |  SELECT a.q_id, count(*) AS n_hits
-            |  FROM (SELECT q_id, neighbor_id FROM scoutranked
-            |        WHERE rank <= 3) a
-            |  JOIN sbrute b ON a.q_id = b.q_id
-            |    AND a.neighbor_id = b.neighbor_id
-            |  GROUP BY a.q_id
-            |)
-            |SELECT p.vec_id AS q_id, coalesce(h.n_hits, 0) AS n_hits,
-            |  round(coalesce(h.n_hits, 0) / 3.0, 6) AS recall_at_3
-            |FROM qv p LEFT JOIN shits h ON h.q_id = p.vec_id
-            |WHERE p.vec_id < 50 ORDER BY q_id""".stripMargin))
+    (spark, sfDir) => recallAt3(spark, sfDir, scoutTop3(spark, sfDir)),
+    Some(recallSql(s"$kmeansCte, $pqCte, $adcCte, $scoutCte", "scoutranked")))
 
   /** The composed IVF∘ADC oracle chain (expects the kmeans chain —
     * pcells, cells — and the PQ chain — pqfinal, pq$PQ_ITERS — in
@@ -1489,7 +1354,7 @@ object Surface18 {
     s"list_sum(list_transform(list_zip($a, $b), " +
       s"p -> (p[1]-p[2])*(p[1]-p[2])))"
 
-  private def cosSql(a: String, b: String): String =
+  private[queries] def cosSql(a: String, b: String): String =
     s"round(list_sum(list_transform(list_zip($a, $b), " +
       "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) / " +
       s"(sqrt(list_sum(list_transform(list_zip($a, $a), " +
@@ -1497,12 +1362,36 @@ object Surface18 {
       s"sqrt(list_sum(list_transform(list_zip($b, $b), " +
       "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))))), 6)"
 
-  /** CTE chain qv, c0, (a1,c1)…(aITERS,cITERS), cells — the unrolled
-    * Lloyd mirror (the q_pagerank fixed-iteration precedent: both
-    * engines execute literally the same integer DAG). */
+  /** The recall@3 oracle: `chain` (CTEs with qv and a `ranked` table
+    * of (q_id, neighbor_id, rank) in scope), then the exact brute-force
+    * top-3 over qv, the hits and one row per probe — the SQL twin of
+    * [[recallAt3]]. */
+  private[queries] def recallSql(chain: String, ranked: String): String =
+    s"""WITH $chain, brute AS (
+       |  SELECT q_id, neighbor_id FROM (
+       |    SELECT p.vec_id AS q_id, e.vec_id AS neighbor_id,
+       |      row_number() OVER (PARTITION BY p.vec_id ORDER BY
+       |        ${cosSql("p.embedding", "e.embedding")} DESC,
+       |        e.vec_id) AS rank
+       |    FROM qv e JOIN qv p ON p.vec_id < 50
+       |      AND e.vec_id <> p.vec_id
+       |  ) t WHERE rank <= 3
+       |), hits AS (
+       |  SELECT a.q_id, count(*) AS n_hits
+       |  FROM (SELECT q_id, neighbor_id FROM $ranked
+       |        WHERE rank <= 3) a
+       |  JOIN brute b ON a.q_id = b.q_id
+       |    AND a.neighbor_id = b.neighbor_id
+       |  GROUP BY a.q_id
+       |)
+       |SELECT p.vec_id AS q_id, coalesce(h.n_hits, 0) AS n_hits,
+       |  round(coalesce(h.n_hits, 0) / 3.0, 6) AS recall_at_3
+       |FROM qv p LEFT JOIN hits h ON h.q_id = p.vec_id
+       |WHERE p.vec_id < 50 ORDER BY q_id""".stripMargin
+
   /** qn + qv alone — the shared micro-unit corpus prefix, usable by
     * oracles that need quantized vectors but not the kmeans chain. */
-  private def qvCte: String =
+  private[queries] def qvCte: String =
     s"""qn AS (
        |  SELECT vec_id, embedding,
        |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
@@ -1519,6 +1408,9 @@ object Surface18 {
        |  FROM qn
        |)""".stripMargin
 
+  /** CTE chain qv, c0, (a1,c1)…(aITERS,cITERS), cells — the unrolled
+    * Lloyd mirror (the q_pagerank fixed-iteration precedent: both
+    * engines execute literally the same integer DAG). */
   private def kmeansCte: String = {
     val head =
       s"""$qvCte, c0 AS MATERIALIZED (
@@ -1728,56 +1620,8 @@ object Surface18 {
     * at the scale fixtures; the correctness gate checks it per-probe
     * at sf0.01. */
   val qSimAnnKmeansRecall = Q("q_sim_ann_kmeans_recall",
-    (spark, sfDir) => {
-      import spark.implicits._
-      val e = Tables.read(spark, sfDir, "embeddings")
-        .withColumn("nrm", sqrt(Vectors.normSq($"embedding")))
-      val q = e.filter($"vec_id" < 50)
-        .select($"vec_id".as("q_id"), $"embedding".as("pv"),
-          $"nrm".as("pnrm"))
-      val w = Window.partitionBy($"q_id")
-        .orderBy($"cos_sim".desc, $"neighbor_id")
-      val brute = e.join(broadcast(q), $"vec_id" =!= $"q_id")
-        .select($"q_id", $"vec_id".as("neighbor_id"),
-          round(Vectors.dot($"pv", $"embedding") / ($"pnrm" * $"nrm"), 6)
-            .as("cos_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 3)
-        .select($"q_id", $"neighbor_id")
-      val ann = kmeansTop3(spark, sfDir)
-        .select($"q_id", $"neighbor_id")
-      val hits = ann.as("a")
-        .join(brute.as("b"), $"a.q_id" === $"b.q_id" &&
-          $"a.neighbor_id" === $"b.neighbor_id")
-        .groupBy($"a.q_id").agg(count(lit(1)).as("n_hits"))
-      q.select($"q_id")
-        .join(hits, Seq("q_id"), "left")
-        .select($"q_id", coalesce($"n_hits", lit(0L)).as("n_hits"),
-          round(coalesce($"n_hits", lit(0L)).cast("double") / 3.0, 6)
-            .as("recall_at_3"))
-        .orderBy($"q_id")
-    },
-    Some(s"""WITH $kmeansCte, brute AS (
-            |  SELECT q_id, neighbor_id FROM (
-            |    SELECT p.vec_id AS q_id, e.vec_id AS neighbor_id,
-            |      row_number() OVER (PARTITION BY p.vec_id ORDER BY
-            |        ${cosSql("p.embedding", "e.embedding")} DESC,
-            |        e.vec_id) AS rank
-            |    FROM qv e JOIN qv p ON p.vec_id < 50
-            |      AND e.vec_id <> p.vec_id
-            |  ) t WHERE rank <= 3
-            |), hits AS (
-            |  SELECT a.q_id, count(*) AS n_hits
-            |  FROM (SELECT q_id, neighbor_id FROM annranked
-            |        WHERE rank <= 3) a
-            |  JOIN brute b ON a.q_id = b.q_id
-            |    AND a.neighbor_id = b.neighbor_id
-            |  GROUP BY a.q_id
-            |)
-            |SELECT p.vec_id AS q_id, coalesce(h.n_hits, 0) AS n_hits,
-            |  round(coalesce(h.n_hits, 0) / 3.0, 6) AS recall_at_3
-            |FROM qv p LEFT JOIN hits h ON h.q_id = p.vec_id
-            |WHERE p.vec_id < 50 ORDER BY q_id""".stripMargin))
+    (spark, sfDir) => recallAt3(spark, sfDir, kmeansTop3(spark, sfDir)),
+    Some(recallSql(kmeansCte, "annranked")))
 
   /** E371: **two-level (coarse/fine) IVF ANN** — the documented next
     * rung past the single-literal band: per probe, rank C2 ≈ C/64
@@ -1809,56 +1653,8 @@ object Surface18 {
     * scale fixtures, quantifying what the coarse pruning costs in
     * recall against what it saves in ranking work. */
   val qSimAnnTwoLevelRecall = Q("q_sim_ann_twolevel_recall",
-    (spark, sfDir) => {
-      import spark.implicits._
-      val e = Tables.read(spark, sfDir, "embeddings")
-        .withColumn("nrm", sqrt(Vectors.normSq($"embedding")))
-      val q = e.filter($"vec_id" < 50)
-        .select($"vec_id".as("q_id"), $"embedding".as("pv"),
-          $"nrm".as("pnrm"))
-      val w = Window.partitionBy($"q_id")
-        .orderBy($"cos_sim".desc, $"neighbor_id")
-      val brute = e.join(broadcast(q), $"vec_id" =!= $"q_id")
-        .select($"q_id", $"vec_id".as("neighbor_id"),
-          round(Vectors.dot($"pv", $"embedding") / ($"pnrm" * $"nrm"), 6)
-            .as("cos_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 3)
-        .select($"q_id", $"neighbor_id")
-      val ann = twoLevelTop3(spark, sfDir)
-        .select($"q_id", $"neighbor_id")
-      val hits = ann.as("a")
-        .join(brute.as("b"), $"a.q_id" === $"b.q_id" &&
-          $"a.neighbor_id" === $"b.neighbor_id")
-        .groupBy($"a.q_id").agg(count(lit(1)).as("n_hits"))
-      q.select($"q_id")
-        .join(hits, Seq("q_id"), "left")
-        .select($"q_id", coalesce($"n_hits", lit(0L)).as("n_hits"),
-          round(coalesce($"n_hits", lit(0L)).cast("double") / 3.0, 6)
-            .as("recall_at_3"))
-        .orderBy($"q_id")
-    },
-    Some(s"""WITH $kmeansCte, $twoLevelCte, tbrute AS (
-            |  SELECT q_id, neighbor_id FROM (
-            |    SELECT p.vec_id AS q_id, e.vec_id AS neighbor_id,
-            |      row_number() OVER (PARTITION BY p.vec_id ORDER BY
-            |        ${cosSql("p.embedding", "e.embedding")} DESC,
-            |        e.vec_id) AS rank
-            |    FROM qv e JOIN qv p ON p.vec_id < 50
-            |      AND e.vec_id <> p.vec_id
-            |  ) t WHERE rank <= 3
-            |), thits AS (
-            |  SELECT a.q_id, count(*) AS n_hits
-            |  FROM (SELECT q_id, neighbor_id FROM tlranked
-            |        WHERE rank <= 3) a
-            |  JOIN tbrute b ON a.q_id = b.q_id
-            |    AND a.neighbor_id = b.neighbor_id
-            |  GROUP BY a.q_id
-            |)
-            |SELECT p.vec_id AS q_id, coalesce(h.n_hits, 0) AS n_hits,
-            |  round(coalesce(h.n_hits, 0) / 3.0, 6) AS recall_at_3
-            |FROM qv p LEFT JOIN thits h ON h.q_id = p.vec_id
-            |WHERE p.vec_id < 50 ORDER BY q_id""".stripMargin))
+    (spark, sfDir) => recallAt3(spark, sfDir, twoLevelTop3(spark, sfDir)),
+    Some(recallSql(s"$kmeansCte, $twoLevelCte", "tlranked")))
 
   /** E366: **incremental cell assignment** — the daily-ingest verb of
     * an IVF deployment: NEW vectors are assigned to the EXISTING

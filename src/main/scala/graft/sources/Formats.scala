@@ -1811,6 +1811,9 @@ object Formats {
       import spark.implicits._
       val staging = fmtDir(sfDir, "wap_staging")
       val published = fmtDir(sfDir, "wap_published")
+      // each run publishes into an empty location: an earlier run's
+      // published batch must not stand in for this run's outcome
+      rmTree(new java.io.File(published))
       val base = Tables.read(spark, sfDir, "orders")
         .select($"o_orderkey", $"o_custkey", $"o_totalprice")
       // distinct: a customer key listed twice would double `n` for its
@@ -1860,14 +1863,19 @@ object Formats {
             staged.write.mode("overwrite").parquet(published)
           (name, violations, publish)
       }
-      val state = spark.read.parquet(published)
-        .agg(count(lit(1)).as("published_rows"),
-          round(sum($"o_totalprice".cast("decimal(18,6)")), 6)
-            .cast("double").as("published_value"))
-        .head()
-      results.map { case (n, v, p) =>
-        (n, v, p, state.getLong(0), state.getDouble(1))
-      }.toDF("candidate", "n_violations", "published",
+      // nothing published: the published table is empty (0 rows, 0.0)
+      val (rows, value) =
+        if (!results.exists(_._3)) (0L, 0.0)
+        else {
+          val st = spark.read.parquet(published)
+            .agg(count(lit(1)),
+              round(sum($"o_totalprice".cast("decimal(18,6)")), 6)
+                .cast("double"))
+            .head()
+          (st.getLong(0), st.getDouble(1))
+        }
+      results.map { case (n, v, p) => (n, v, p, rows, value) }
+        .toDF("candidate", "n_violations", "published",
         "published_rows", "published_value")
         .orderBy($"candidate")
     },
