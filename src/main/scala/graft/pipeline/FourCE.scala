@@ -49,10 +49,15 @@ case class FourCEConfig(
   * stay local to the site, per the 4CE spec).
   *
   * Plan shapes (SURVEY.md §3.1 traces A–C, §4.2): the code map always
-  * broadcasts; fact⋈cohort joins carry patient_num (sort-merge, AQE
-  * skew-split eligible); the cohort is the only materialization barrier
-  * (caller may persist); the date spine stays tiny so spine joins
-  * broadcast; every output ends in a total-order sort.
+  * broadcasts, and the cohort joins it to the facts once for both of
+  * its categories; fact⋈cohort joins carry patient_num (sort-merge, AQE
+  * skew-split eligible); distinct-patient counts are two plain
+  * aggregates ([[distinctPatients]]), never Spark's multi-distinct
+  * `Expand` — except Demographics, whose cube margins need distinct
+  * counts across cells, and Labs' stats aggregate; the cohort is the
+  * only materialization barrier (caller may persist); the date spine
+  * stays tiny so its one join broadcasts; every output ends in a
+  * total-order sort.
   */
 object FourCE {
 
@@ -87,36 +92,43 @@ object FourCE {
     * [pos − windowBefore, pos + windowAfter]; keep the earliest such
     * admission; severe iff a severe-category fact lands on/after it.
     * Output: patient_num, admission_date, severe(0/1), severe_date,
-    * death_date. */
+    * death_date.
+    *
+    * One pass over the facts: a single obs⋈code-map join carries both
+    * categories (a code listed under both yields one row per category)
+    * into one per-patient aggregate of `pos_date` and `sev_days`, the
+    * set of the patient's severe-fact dates. `sev_days` is bounded by a
+    * patient's distinct severe days, not by fact count; it rides
+    * through the admission window so `severe_date` is picked from it
+    * without a second fact join. */
   def cohort(obs: DataFrame, visits: DataFrame, patients: DataFrame,
       codeMap: DataFrame, cfg: FourCEConfig): DataFrame = {
-    val pos = obs
-      .join(codes(codeMap, cfg.positiveCategory),
+    val isPos = col("code_category") === cfg.positiveCategory
+    val isSev = col("code_category") === cfg.severeCategory
+    val facts = obs
+      .join(broadcast(codeMap.filter(isPos || isSev)
+          .select(col("code_category"), col("local_code"))),
         obs("concept_cd") === col("local_code"))
       .groupBy(col("patient_num"))
-      .agg(to_date(min(col("start_date"))).as("pos_date"))
+      .agg(to_date(min(when(isPos, col("start_date")))).as("pos_date"),
+        collect_set(when(isSev, to_date(col("start_date"))))
+          .as("sev_days"))
 
     val admissions = visits.filter(col("inout_cd") === "I")
       .select(col("patient_num"), to_date(col("start_date")).as("adm"))
 
-    // J6 range join with the equi key carried → SMJ + post-filter
-    val entry = admissions.join(pos, Seq("patient_num"))
+    // J6 range join with the equi key carried → SMJ + post-filter;
+    // sev_days is one value per patient, so it rides in the group key
+    val entry = admissions.join(facts, Seq("patient_num"))
       .filter(col("adm") >= date_sub(col("pos_date"), cfg.windowBeforeDays)
         && col("adm") <= date_add(col("pos_date"), cfg.windowAfterDays))
-      .groupBy(col("patient_num"))
+      .groupBy(col("patient_num"), col("sev_days"))
       .agg(min(col("adm")).as("admission_date"))
 
-    val severeFacts = obs
-      .join(codes(codeMap, cfg.severeCategory),
-        obs("concept_cd") === col("local_code"))
-      .select(col("patient_num"), to_date(col("start_date")).as("sev_d"))
-
     entry
-      .join(severeFacts.join(entry, Seq("patient_num"))
-          .filter(col("sev_d") >= col("admission_date"))
-          .groupBy(col("patient_num"))
-          .agg(min(col("sev_d")).as("severe_date")),
-        Seq("patient_num"), "left")
+      .select(col("patient_num"), col("admission_date"),
+        array_min(filter(col("sev_days"),
+          d => d >= col("admission_date"))).as("severe_date"))
       .join(patients.select(col("patient_num"),
         to_date(col("death_date")).as("death_date")),
         Seq("patient_num"), "left")
@@ -125,8 +137,31 @@ object FourCE {
         col("severe_date"), col("death_date"))
   }
 
+  /** Distinct patients per `keys` under each named boolean flag —
+    * `countDistinct(when(flag, patient_num))` without Spark's
+    * multi-distinct rewrite (an `Expand` that copies every row once per
+    * distinct aggregate): one aggregate to (keys, patient_num) taking
+    * `max(flag)`, then one to `keys` counting the set flags. Exact: a
+    * patient counts once per key however many rows it has there
+    * (duplicate facts, a repeated patient_dimension key), and a null
+    * flag counts as unset. Output: keys, then one bigint per flag. */
+  private def distinctPatients(df: DataFrame, keys: Seq[String],
+      flags: (String, Column)*): DataFrame = {
+    val keyCols = keys.map(col)
+    val perPatient = flags.map { case (n, c) => max(c).as(n) }
+    val counts = flags.map { case (n, _) => count_if(col(n)).as(n) }
+    df.filter(col("patient_num").isNotNull)
+      .groupBy(keyCols :+ col("patient_num"): _*)
+      .agg(perPatient.head, perPatient.tail: _*)
+      .groupBy(keyCols: _*)
+      .agg(counts.head, counts.tail: _*)
+  }
+
   /** Trace B — DailyCounts.csv: per calendar date, cumulative
-    * all/severe/dead cohort patients + in-hospital census. */
+    * all/severe/dead cohort patients + in-hospital census. One stream
+    * of (d, kind, patient) rows — the cohort's admission, severe and
+    * death dates plus every inpatient day of a cohort patient — feeds
+    * one [[distinctPatients]] aggregate and one spine join. */
   def dailyCounts(cohortDf: DataFrame, visits: DataFrame,
       cfg: FourCEConfig): DataFrame = {
     val bounds = cohortDf.agg(min(col("admission_date")).as("d0"))
@@ -134,37 +169,37 @@ object FourCE {
     val spine = bounds
       .select(explode(sequence(col("d0"), col("d1"))).as("calendar_date"))
 
-    // one small frame per date-valued column: new patients on that day
-    def perDay(dateCol: String, out: String) =
-      cohortDf.filter(col(dateCol).isNotNull)
-        .groupBy(col(dateCol).as("d"))
-        .agg(countDistinct(col("patient_num")).as(out))
-
+    def mark(kind: String, d: String) =
+      struct(lit(kind).as("kind"), col(d).as("d"))
+    val marks = cohortDf
+      .select(col("patient_num"), col("severe"),
+        explode(array(mark("new", "admission_date"),
+          mark("sev", "severe_date"), mark("dead", "death_date")))
+          .as("m"))
+      .select(col("patient_num"), col("severe"), col("m.kind").as("kind"),
+        col("m.d").as("d"))
+      .filter(col("d").isNotNull)
     // census: inpatient visits of cohort patients covering the date
-    val census = visits.filter(col("inout_cd") === "I")
+    val stays = visits.filter(col("inout_cd") === "I")
       .join(cohortDf.select(col("patient_num"), col("severe")),
         Seq("patient_num"))
-      .select(col("patient_num"), col("severe"),
+      .select(col("patient_num"), col("severe"), lit("hosp").as("kind"),
         explode(sequence(to_date(col("start_date")),
           to_date(col("end_date")))).as("d"))
-      .groupBy(col("d"))
-      .agg(countDistinct(col("patient_num")).as("in_hosp"),
-        countDistinct(when(col("severe") === 1, col("patient_num")))
-          .as("in_hosp_severe"))
+    val kind = col("kind")
+    val perDay = distinctPatients(marks.unionByName(stays), Seq("d"),
+      "n_new" -> (kind === "new"), "n_sev" -> (kind === "sev"),
+      "n_dead" -> (kind === "dead"), "in_hosp" -> (kind === "hosp"),
+      "in_hosp_severe" -> (kind === "hosp" && col("severe") === 1))
 
-    // spine is tiny → all four joins broadcast; the cumulative window
+    // spine is tiny → the join broadcasts; the cumulative window
     // runs over the spine only (single partition is fine there)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("calendar_date"))
       .rowsBetween(Long.MinValue, 0)
-    def left(df: DataFrame, acc: DataFrame) =
-      acc.join(df, acc("calendar_date") === df("d"), "left")
-        .drop("d")
 
-    left(census,
-      left(perDay("death_date", "n_dead"),
-        left(perDay("severe_date", "n_sev"),
-          left(perDay("admission_date", "n_new"), spine))))
+    spine.join(perDay, spine("calendar_date") === perDay("d"), "left")
+      .drop("d")
       .select(col("calendar_date"),
         sum(coalesce(col("n_new"), lit(0L))).over(w)
           .as("cumulative_patients_all"),
@@ -306,7 +341,7 @@ object FourCE {
     * exploded to days, offset against the cohort admission. */
   def clinicalCourse(cohortDf: DataFrame, visits: DataFrame,
       cfg: FourCEConfig): DataFrame = {
-    visits.filter(col("inout_cd") === "I")
+    val stays = visits.filter(col("inout_cd") === "I")
       .join(cohortDf.select(col("patient_num"), col("admission_date"),
         col("severe")), Seq("patient_num"))
       .select(col("patient_num"), col("severe"), col("admission_date"),
@@ -316,11 +351,8 @@ object FourCE {
         datediff(col("hosp_day"), col("admission_date"))
           .as("days_since_admission"))
       .filter(col("days_since_admission") >= 0)
-      .groupBy(col("days_since_admission"))
-      .agg(
-        countDistinct(col("patient_num")).as("n_all"),
-        countDistinct(when(col("severe") === 1, col("patient_num")))
-          .as("n_severe"))
+    distinctPatients(stays, Seq("days_since_admission"),
+        "n_all" -> lit(true), "n_severe" -> (col("severe") === 1))
       .select(lit(cfg.siteId).as("siteid"), col("days_since_admission"),
         obfuscate(col("n_all"), col("days_since_admission").cast("string"),
           cfg).as("num_patients_all_still_in_hospital"),
@@ -330,12 +362,32 @@ object FourCE {
       .orderBy(col("days_since_admission"))
   }
 
+  /** The Diagnoses/Medications counts per `keys`: distinct patients
+    * before/since admission, all and ever-severe, from rows carrying
+    * `before`, `severe` and `patient_num`. */
+  private def admissionSplit(df: DataFrame, keys: Seq[String],
+      cfg: FourCEConfig): DataFrame = {
+    val before = col("before")
+    val sev = col("severe") === 1
+    val outs = Seq(
+      "num_patients_all_before_admission" -> before,
+      "num_patients_all_since_admission" -> !before,
+      "num_patients_ever_severe_before_admission" -> (before && sev),
+      "num_patients_ever_severe_since_admission" -> (!before && sev))
+    distinctPatients(df, keys, outs: _*)
+      .select(Seq(lit(cfg.siteId).as("siteid")) ++ keys.map(col) ++
+        outs.map { case (out, _) => obfuscate(col(out),
+          concat_ws("|", keys.map(col) :+ lit(out): _*), cfg).as(out)
+        }: _*)
+      .orderBy(keys.map(col): _*)
+  }
+
   /** Medications.csv: same four-count shape as Diagnoses but per
     * code-map class (the med-class rollup). */
   def medications(obs: DataFrame, cohortDf: DataFrame,
       codeMap: DataFrame, cfg: FourCEConfig,
       medCategory: String = "med"): DataFrame = {
-    obs
+    val rows = obs
       .join(codes(codeMap, medCategory),
         obs("concept_cd") === col("local_code"))
       .join(cohortDf.select(col("patient_num"), col("admission_date"),
@@ -343,25 +395,7 @@ object FourCE {
       .select(col("local_code").as("med_class"),
         (to_date(col("start_date")) < col("admission_date"))
           .as("before"), col("patient_num"), col("severe"))
-      .groupBy(col("med_class"))
-      .agg(
-        countDistinct(when(col("before"), col("patient_num")))
-          .as("n_ab"),
-        countDistinct(when(!col("before"), col("patient_num")))
-          .as("n_as"),
-        countDistinct(when(col("before") && col("severe") === 1,
-          col("patient_num"))).as("n_sb"),
-        countDistinct(when(!col("before") && col("severe") === 1,
-          col("patient_num"))).as("n_ss"))
-      .select(Seq(lit(cfg.siteId).as("siteid"), col("med_class")) ++
-        Seq("n_ab" -> "num_patients_all_before_admission",
-          "n_as" -> "num_patients_all_since_admission",
-          "n_sb" -> "num_patients_ever_severe_before_admission",
-          "n_ss" -> "num_patients_ever_severe_since_admission").map {
-          case (in, out) => obfuscate(col(in),
-            concat_ws("|", col("med_class"), lit(out)), cfg).as(out)
-        }: _*)
-      .orderBy(col("med_class"))
+    admissionSplit(rows, Seq("med_class"), cfg)
   }
 
   /** Diagnoses.csv: per (3-char code, icd_version) rollup, distinct
@@ -375,7 +409,7 @@ object FourCE {
         lit(10))
       .when(col("concept_cd").rlike("^(DIAG-)?ICD9"), lit(9))
       .otherwise(lit(-999))
-    obs
+    val rows = obs
       .join(cohortDf.select(col("patient_num"), col("admission_date"),
         col("severe")), Seq("patient_num"))
       .select(
@@ -384,27 +418,7 @@ object FourCE {
         icdVersion.as("icd_version"),
         (to_date(col("start_date")) < col("admission_date"))
           .as("before"), col("patient_num"), col("severe"))
-      .groupBy(col("icd_code_3chars"), col("icd_version"))
-      .agg(
-        countDistinct(when(col("before"), col("patient_num")))
-          .as("n_ab"),
-        countDistinct(when(!col("before"), col("patient_num")))
-          .as("n_as"),
-        countDistinct(when(col("before") && col("severe") === 1,
-          col("patient_num"))).as("n_sb"),
-        countDistinct(when(!col("before") && col("severe") === 1,
-          col("patient_num"))).as("n_ss"))
-      .select(Seq(lit(cfg.siteId).as("siteid"), col("icd_code_3chars"),
-        col("icd_version")) ++
-        Seq("n_ab" -> "num_patients_all_before_admission",
-          "n_as" -> "num_patients_all_since_admission",
-          "n_sb" -> "num_patients_ever_severe_before_admission",
-          "n_ss" -> "num_patients_ever_severe_since_admission").map {
-          case (in, out) => obfuscate(col(in),
-            concat_ws("|", col("icd_code_3chars"), col("icd_version"),
-              lit(out)), cfg).as(out)
-        }: _*)
-      .orderBy(col("icd_code_3chars"), col("icd_version"))
+    admissionSplit(rows, Seq("icd_code_3chars", "icd_version"), cfg)
   }
 
   /** Phase 2 — LocalPatientClinicalCourse.csv (SURVEY.md §1.3): one row

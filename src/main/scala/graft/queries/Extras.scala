@@ -2651,8 +2651,8 @@ object Extras {
     * metric ordering would let tied customers swap quartiles at a
     * boundary between runs (both engines use the ANSI equal-buckets/
     * remainder-to-front ntile, so with a total order the cut is
-    * identical); recency anchors on max(o_orderdate) over the table
-    * (a window over the customer frame), never wall-clock. Monetary
+    * identical); recency is days since the table's latest order, never
+    * wall-clock, so it ranks by last order day descending. Monetary
     * sums are DECIMAL, and the segment average is rounded half-up to
     * the cent in integer arithmetic: with u = Σm·10⁶ (exact, m is
     * DECIMAL(18,6)), cents = ⌊(2u + n·10⁴) / (2n·10⁴)⌋. A segment of
@@ -2661,8 +2661,14 @@ object Extras {
     * (Spark rounds the double's shortest decimal form, DuckDB
     * round(x·100)); so both evaluate the same exact integer division
     * and convert only the cents to double. Shape: one fact shuffle to
-    * customer grain, three windows over the customer frame, one
-    * dimension-sized segment rollup. */
+    * customer grain; the three quartiles are DISTRIBUTED ranks (the
+    * q_curriculum_phases bucket-offset shape, per metric at once): each
+    * customer contributes one (metric, sort key) row per metric, rows
+    * bucket into ≤4096 value ranges per metric, per-bucket counts get
+    * cumulative offsets in a window partitioned by metric (≤4096 rows
+    * each), and rank = offset + row_number within the bucket; the
+    * quartile is the ANSI ntile of that rank, the first n mod 4
+    * quartiles one row larger; one dimension-sized segment rollup. */
   val qRfm = Q("q_rfm",
     (spark, sfDir) => {
       import spark.implicits._
@@ -2671,16 +2677,37 @@ object Extras {
         .agg(max(to_date($"o_orderdate")).as("last_day"),
           count(lit(1)).as("f"),
           sum($"o_totalprice".cast("decimal(18,6)")).as("m"))
-        .withColumn("anchor",
-          max($"last_day").over(Window.partitionBy()))
-        .withColumn("r_days", datediff($"anchor", $"last_day"))
-      val seg = cust
-        .withColumn("rq", ntile(4).over(
-          Window.orderBy($"r_days", $"o_custkey")))
-        .withColumn("fq", ntile(4).over(
-          Window.orderBy($"f".desc, $"o_custkey")))
-        .withColumn("mq", ntile(4).over(
-          Window.orderBy($"m".desc, $"o_custkey")))
+      // ascending v is each metric's order: latest day, most orders,
+      // largest spend first; ties break on o_custkey
+      def key(k: String, v: Column) =
+        struct(lit(k).as("k"), v.cast("decimal(28,6)").as("v"))
+      val keyed = cust
+        .select($"o_custkey", $"m", explode(array(
+          key("r", -unix_date($"last_day")), key("f", -$"f"),
+          key("m", -$"m"))).as("e"))
+        .select($"o_custkey", $"m", $"e.k".as("k"), $"e.v".as("v"))
+      val bounds = keyed.groupBy($"k")
+        .agg(min($"v").as("lo"), max($"v").as("hi"),
+          count(lit(1)).as("n"))
+      val bucketed = keyed.join(broadcast(bounds), Seq("k"))
+        .withColumn("bkt",
+          expr("(v - lo) div greatest(1L, ((hi - lo) div 4096) + 1)"))
+      val offsets = bucketed.groupBy($"k", $"bkt")
+        .agg(count(lit(1)).as("cnt"))
+        .withColumn("off", coalesce(sum($"cnt").over(
+          Window.partitionBy($"k").orderBy($"bkt")
+            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .select($"k", $"bkt", $"off")
+      val tiles = bucketed.join(broadcast(offsets), Seq("k", "bkt"))
+        .withColumn("rn", $"off" + row_number().over(
+          Window.partitionBy($"k", $"bkt").orderBy($"v", $"o_custkey")))
+        .withColumn("tile", expr("""CASE WHEN rn <= (n % 4) * (n div 4 + 1)
+          |  THEN (rn - 1) div (n div 4 + 1) + 1
+          |  ELSE n % 4 + (rn - 1 - (n % 4) * (n div 4 + 1))
+          |    div greatest(n div 4, 1) + 1 END""".stripMargin))
+      def tile(k: String) = max(when($"k" === k, $"tile"))
+      val seg = tiles.groupBy($"o_custkey", $"m")
+        .agg(tile("r").as("rq"), tile("f").as("fq"), tile("m").as("mq"))
       seg.groupBy(concat($"rq", $"fq", $"mq").as("rfm"))
         .agg(count(lit(1)).as("n_customers"), sum($"m").as("sum_m"))
         .select($"rfm", $"n_customers",

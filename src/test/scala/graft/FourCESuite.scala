@@ -456,4 +456,234 @@ class FourCESuite extends AnyFunSuite {
     assert(m1.map(r => r.getAs[Long]("patient_num") ->
       r.getAs[Int]("study_num")).toMap === Map(1L -> 1, 2L -> 2))
   }
+
+  test("cohort golden: severe on/after admission, severe-only, shared code, null dates") {
+    val obs = Seq(
+      // p1: positive 02-02, severe before (02-01) and after (02-06)
+      // admission, plus severe and positive facts with no date
+      (1L, "COVID:pos", Some(ts("2020-02-02"))),
+      (1L, "SEV:icu", Some(ts("2020-02-01"))),
+      (1L, "SEV:icu", Some(ts("2020-02-06"))),
+      (1L, "SEV:icu", None),
+      (1L, "COVID:pos", None),
+      // p2: severe-only, admitted -> not in the cohort
+      (2L, "SEV:icu", Some(ts("2020-02-03"))),
+      // p3: one code listed under both categories
+      (3L, "BOTH:x", Some(ts("2020-02-10"))),
+      // p4: its only positive fact has no date -> no pos_date
+      (4L, "COVID:pos", None),
+      // p5: severe only before admission -> not severe
+      (5L, "COVID:pos", Some(ts("2020-02-04"))),
+      (5L, "SEV:icu", Some(ts("2020-02-04")))
+    ).toDF("patient_num", "concept_cd", "start_date")
+    val visits = Seq(
+      (1L, "I", ts("2020-02-03"), ts("2020-02-08")),
+      (2L, "I", ts("2020-02-03"), ts("2020-02-04")),
+      (3L, "I", ts("2020-02-10"), ts("2020-02-11")),
+      (4L, "I", ts("2020-02-03"), ts("2020-02-04")),
+      (5L, "I", ts("2020-02-05"), ts("2020-02-06"))
+    ).toDF("patient_num", "inout_cd", "start_date", "end_date")
+    val patients = (1L to 5L).map(p => (p, None: Option[java.sql.Timestamp]))
+      .toDF("patient_num", "death_date")
+    val codeMap = Seq(("positive", "COVID:pos", 1.0),
+      ("severe", "SEV:icu", 1.0), ("positive", "BOTH:x", 1.0),
+      ("severe", "BOTH:x", 1.0))
+      .toDF("code_category", "local_code", "scale_factor")
+    val rows = FourCE.cohort(obs, visits, patients, codeMap, cfg)
+      .orderBy($"patient_num").collect()
+      .map(r => (r.getAs[Long]("patient_num"),
+        String.valueOf(r.getAs[java.sql.Date]("admission_date")),
+        r.getAs[Int]("severe"),
+        String.valueOf(r.getAs[java.sql.Date]("severe_date"))))
+    assert(rows.toSeq === Seq(
+      (1L, "2020-02-03", 1, "2020-02-06"),
+      (3L, "2020-02-10", 1, "2020-02-10"),
+      (5L, "2020-02-05", 0, "null")))
+  }
+
+  // ---- the distinct-patient counts against the countDistinct forms
+
+  /** The cohort and count outputs written with one countDistinct per
+    * count, as a reference for the library's two-level aggregates. */
+  private object CountDistinctRef {
+    private def codes(codeMap: DataFrame, cat: String) =
+      codeMap.filter($"code_category" === cat)
+        .select($"local_code", $"scale_factor")
+
+    def cohort(obs: DataFrame, visits: DataFrame, patients: DataFrame,
+        codeMap: DataFrame): DataFrame = {
+      val pos = obs.join(codes(codeMap, "positive"),
+          obs("concept_cd") === $"local_code")
+        .groupBy($"patient_num")
+        .agg(to_date(min($"start_date")).as("pos_date"))
+      val entry = visits.filter($"inout_cd" === "I")
+        .select($"patient_num", to_date($"start_date").as("adm"))
+        .join(pos, Seq("patient_num"))
+        .filter($"adm" >= date_sub($"pos_date", 7) &&
+          $"adm" <= date_add($"pos_date", 14))
+        .groupBy($"patient_num").agg(min($"adm").as("admission_date"))
+      val sev = obs.join(codes(codeMap, "severe"),
+          obs("concept_cd") === $"local_code")
+        .select($"patient_num", to_date($"start_date").as("sev_d"))
+        .join(entry, Seq("patient_num"))
+        .filter($"sev_d" >= $"admission_date")
+        .groupBy($"patient_num").agg(min($"sev_d").as("severe_date"))
+      entry.join(sev, Seq("patient_num"), "left")
+        .join(patients.select($"patient_num",
+          to_date($"death_date").as("death_date")),
+          Seq("patient_num"), "left")
+        .select($"patient_num", $"admission_date",
+          when($"severe_date".isNotNull, 1).otherwise(0).as("severe"),
+          $"severe_date", $"death_date")
+    }
+
+    private def stays(c: DataFrame, visits: DataFrame) =
+      visits.filter($"inout_cd" === "I")
+        .join(c.select($"patient_num", $"admission_date", $"severe"),
+          Seq("patient_num"))
+        .select($"patient_num", $"severe", $"admission_date",
+          explode(sequence(to_date($"start_date"), to_date($"end_date")))
+            .as("d"))
+
+    def dailyCounts(c: DataFrame, visits: DataFrame): DataFrame = {
+      val spine = c.agg(min($"admission_date").as("d0"))
+        .crossJoin(visits.agg(to_date(max($"end_date")).as("d1")))
+        .select(explode(sequence($"d0", $"d1")).as("calendar_date"))
+      def perDay(dateCol: String, out: String) =
+        c.filter(col(dateCol).isNotNull).groupBy(col(dateCol).as("d"))
+          .agg(countDistinct($"patient_num").as(out))
+      val census = stays(c, visits).groupBy($"d")
+        .agg(countDistinct($"patient_num").as("in_hosp"),
+          countDistinct(when($"severe" === 1, $"patient_num"))
+            .as("in_hosp_severe"))
+      val w = org.apache.spark.sql.expressions.Window
+        .orderBy($"calendar_date").rowsBetween(Long.MinValue, 0)
+      Seq(perDay("admission_date", "n_new"),
+        perDay("severe_date", "n_sev"), perDay("death_date", "n_dead"),
+        census).foldLeft(spine) { (acc, df) =>
+          acc.join(df, acc("calendar_date") === df("d"), "left").drop("d")
+        }
+        .select(lit("site").as("siteid"), $"calendar_date",
+          sum(coalesce($"n_new", lit(0L))).over(w)
+            .as("cumulative_patients_all"),
+          sum(coalesce($"n_sev", lit(0L))).over(w)
+            .as("cumulative_patients_severe"),
+          sum(coalesce($"n_dead", lit(0L))).over(w)
+            .as("cumulative_patients_dead"),
+          coalesce($"in_hosp", lit(0L))
+            .as("num_patients_in_hospital_on_this_date"),
+          coalesce($"in_hosp_severe", lit(0L))
+            .as("num_patients_in_hospital_and_severe_on_this_date"))
+        .orderBy($"calendar_date")
+    }
+
+    def clinicalCourse(c: DataFrame, visits: DataFrame): DataFrame =
+      stays(c, visits)
+        .select($"patient_num", $"severe",
+          datediff($"d", $"admission_date").as("days_since_admission"))
+        .filter($"days_since_admission" >= 0)
+        .groupBy($"days_since_admission")
+        .agg(countDistinct($"patient_num")
+            .as("num_patients_all_still_in_hospital"),
+          countDistinct(when($"severe" === 1, $"patient_num"))
+            .as("num_patients_ever_severe_still_in_hospital"))
+        .select(lit("site").as("siteid"), $"*")
+        .orderBy($"days_since_admission")
+
+    private def split(rows: DataFrame, keys: Seq[String]): DataFrame =
+      rows.groupBy(keys.map(col): _*)
+        .agg(countDistinct(when($"before", $"patient_num"))
+            .as("num_patients_all_before_admission"),
+          countDistinct(when(!$"before", $"patient_num"))
+            .as("num_patients_all_since_admission"),
+          countDistinct(when($"before" && $"severe" === 1,
+            $"patient_num")).as("num_patients_ever_severe_before_admission"),
+          countDistinct(when(!$"before" && $"severe" === 1,
+            $"patient_num")).as("num_patients_ever_severe_since_admission"))
+        .select(lit("site").as("siteid"), $"*")
+        .orderBy(keys.map(col): _*)
+
+    private def factRows(obs: DataFrame, c: DataFrame) =
+      obs.join(c.select($"patient_num", $"admission_date", $"severe"),
+        Seq("patient_num"))
+        .withColumn("before",
+          to_date($"start_date") < $"admission_date")
+
+    def diagnoses(obs: DataFrame, c: DataFrame): DataFrame =
+      split(factRows(obs, c).select(
+        substring(regexp_replace($"concept_cd", "^[A-Z0-9-]+:", ""), 1, 3)
+          .as("icd_code_3chars"),
+        when($"concept_cd".rlike("^(DIAG-)?ICD10"), lit(10))
+          .when($"concept_cd".rlike("^(DIAG-)?ICD9"), lit(9))
+          .otherwise(lit(-999)).as("icd_version"),
+        $"before", $"patient_num", $"severe"),
+        Seq("icd_code_3chars", "icd_version"))
+
+    def medications(obs: DataFrame, c: DataFrame,
+        codeMap: DataFrame): DataFrame =
+      split(factRows(obs.join(codes(codeMap, "med"),
+          obs("concept_cd") === $"local_code"), c)
+        .select($"local_code".as("med_class"), $"before",
+          $"patient_num", $"severe"), Seq("med_class"))
+  }
+
+  test("property: distinct-patient counts equal the countDistinct forms") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    def day(d: Int, h: Int) = java.sql.Timestamp.valueOf(
+      java.time.LocalDateTime.of(2020, 3, 1, h, 0).plusDays(d.toLong))
+    val optDay = Gen.frequency(8 -> Gen.choose(0, 20).map(Some(_)),
+      1 -> Gen.const(None))
+    val fact = for {
+      p <- Gen.choose(1L, 6L)
+      c <- Gen.oneOf("POS", "SEV", "BOTH", "ICD10:J12", "ICD9:480",
+        "MED:a", "X:1")
+      d <- optDay
+      h <- Gen.choose(0, 23)
+    } yield (p, c, d.map(day(_, h)))
+    val visit = for {
+      p <- Gen.choose(1L, 6L)
+      io <- Gen.frequency(4 -> "I", 1 -> "E")
+      s <- Gen.choose(0, 20)
+      len <- Gen.choose(0, 4)
+    } yield (p, io, day(s, 9), day(s + len, 17))
+    val world = for {
+      facts <- Gen.choose(5, 40).flatMap(Gen.listOfN(_, fact))
+      dups <- Gen.choose(1, 5)
+      vs <- Gen.choose(3, 12).flatMap(Gen.listOfN(_, visit))
+      deaths <- Gen.listOfN(7, Gen.frequency(
+        3 -> Gen.const(None), 1 -> optDay.map(_.map(day(_, 12)))))
+      rep <- Gen.choose(1L, 6L)
+    } yield (facts ++ facts.take(dups), vs, deaths, rep)
+    val codeMap = Seq(("positive", "POS", 1.0), ("severe", "SEV", 1.0),
+      ("positive", "BOTH", 1.0), ("severe", "BOTH", 1.0),
+      ("med", "MED:a", 1.0), ("med", "BOTH", 1.0))
+      .toDF("code_category", "local_code", "scale_factor")
+
+    val prop = Prop.forAllNoShrink(world) { case (facts, vs, deaths, rep) =>
+      val obs = facts.toDF("patient_num", "concept_cd", "start_date")
+      val visits = vs.toDF("patient_num", "inout_cd", "start_date",
+        "end_date")
+      // patients 1..6 plus a second row for one repeated key
+      val patients = ((1L to 6L).zip(deaths) :+ (rep -> deaths(6)))
+        .toDF("patient_num", "death_date")
+      val c = FourCE.cohort(obs, visits, patients, codeMap, cfg)
+      val ref = CountDistinctRef.cohort(obs, visits, patients, codeMap)
+      def same(a: DataFrame, b: DataFrame) =
+        a.collect().toSeq == b.collect().toSeq
+      same(c.orderBy($"patient_num", $"death_date"),
+        ref.orderBy($"patient_num", $"death_date")) &&
+      same(FourCE.dailyCounts(c, visits, cfg),
+        CountDistinctRef.dailyCounts(ref, visits)) &&
+      same(FourCE.clinicalCourse(c, visits, cfg),
+        CountDistinctRef.clinicalCourse(ref, visits)) &&
+      same(FourCE.diagnoses(obs, c, cfg),
+        CountDistinctRef.diagnoses(obs, ref)) &&
+      same(FourCE.medications(obs, c, codeMap, cfg),
+        CountDistinctRef.medications(obs, ref, codeMap))
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(10).withInitialSeed(Seed(501L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
 }

@@ -227,13 +227,60 @@ class PlanSuite extends AnyFunSuite {
     }
   }
 
+  /** Every node of a query's executed plan, descending through AQE
+    * wrappers and stages and INTO cached relations (the FourCE cohort
+    * is a persisted frame, so its plan sits under the scan node). */
+  private def allNodes(name: String)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{
+      AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case other => other.children.flatMap(walk)
+    })
+    walk(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+  }
+
   test("FourCE library: code-map joins broadcast, no fact-side shuffle for them") {
-    // the cohort inside every q_fource_* query joins obs⋈code-map twice
-    // (positive, severe); both must plan as BroadcastHashJoin — the
-    // fact side shuffles only on patient_num for the admission window
-    val p = plan("q_fource_demographics")
-    assert(p.contains("BroadcastHashJoin"))
-    assert(!p.contains("CartesianProduct"))
+    // the cohort inside every q_fource_* query joins obs⋈code-map ONCE
+    // for both categories (positive, severe) as a BroadcastHashJoin —
+    // the fact side shuffles only on patient_num for the admission
+    // window; a second code-map join is a second pass over the facts
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
+    val nodes = allNodes("q_fource_demographics")
+    def onCodes(keys: Seq[Expression]) =
+      keys.exists(_.toString.contains("local_code"))
+    val codeJoins = nodes.collect {
+      case j: BroadcastHashJoinExec
+          if onCodes(j.leftKeys ++ j.rightKeys) => j
+    }
+    assert(codeJoins.size === 1,
+      s"expected one code-map broadcast join, found ${codeJoins.size}")
+    assert(!nodes.exists {
+      case j: SortMergeJoinExec => onCodes(j.leftKeys ++ j.rightKeys)
+      case j: ShuffledHashJoinExec => onCodes(j.leftKeys ++ j.rightKeys)
+      case _ => false
+    })
+    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]))
+  }
+
+  test("FourCE distinct-patient counts plan no Expand") {
+    // DailyCounts, ClinicalCourse, Diagnoses and Medications count
+    // distinct patients as two plain aggregates (keys + patient, then
+    // keys); Spark's multi-distinct rewrite would copy every row once
+    // per countDistinct through an Expand
+    import org.apache.spark.sql.execution.ExpandExec
+    Seq("q_fource_daily_counts", "q_fource_clinical_course",
+      "q_fource_diagnoses", "q_fource_medications").foreach { name =>
+      assert(!allNodes(name).exists(_.isInstanceOf[ExpandExec]),
+        s"$name plans an Expand")
+    }
   }
 
   test("nested-struct scan prunes to the referenced leaves only") {
@@ -1106,7 +1153,7 @@ class PlanSuite extends AnyFunSuite {
       "q_auc", "q_calibration", "q_length_profile", "q_zipf_fit",
       // entity-grain ranked scores (per-customer/patient compacted
       // rows; deliberately-global quantile frames, documented)
-      "q_rfm", "q_survival_km", "q_fource_patient_mapping",
+      "q_survival_km", "q_fource_patient_mapping",
       // sampling: q_sample_temperature's frame is the ~20-row
       // per-source rate table; q_sample_systematic's is its ≤4097-row
       // bucket-offset table (the round-16 distributed-rank fix — the
