@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
 object AnnRung {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+    val sfDir = SparkEntry.sfDir(
       "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-annrung")
     import spark.implicits._
@@ -42,9 +42,7 @@ object AnnRung {
     val scanRows = S18.kmeansScanRows(spark, sfDir)
     require(scanRows <= n,
       "pruned scan cannot read more rows than the corpus")
-    def r(x: Double): String =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-        .toString
+    def r(x: Double): String = SparkEntry.jsonNum(x, 4)
     // (key, per-probe candidate counts as n_cand, recall@3 row), in
     // output order: label cells, LSH buckets, the label-cell recall,
     // learned cells (r18), the two-level quantizer (r19), IVF∘PQ and
@@ -94,9 +92,9 @@ object AnnRung {
     val (head, tail) = fields.splitAt(5)
     val all = (("n_vecs" -> n.toString) +: head.flatten) ++
       (("scan_rows_kmeans" -> scanRows.toString) +: tail.flatten) :+
-      ("sf" -> s""""$sfDir"""")
-    println(all.map { case (k, v) => s""""$k":$v""" }
-      .mkString("""{"metric":"ann_rung",""", ",", "}"))
+      ("sf" -> SparkEntry.jsonStr(sfDir))
+    println(SparkEntry.jsonObj(
+      ("metric" -> SparkEntry.jsonStr("ann_rung")) +: all))
     spark.stop()
   }
 }

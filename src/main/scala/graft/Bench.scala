@@ -147,8 +147,27 @@ object Bench {
     else if (name.startsWith("q_graph_")) "graph"
     else "other"
 
+  /** The timed action every timing main shares: one `.count()` of the
+    * registered row `name` on `spark`. Returns the count (None when the
+    * name is not registered or the row threw; the error goes to stderr),
+    * the wall seconds and the memo builds and loads the run did. */
+  def timeCount(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      name: String): (Option[Long], Double, Long) = {
+    val fn = SparkEntry.queries.get(name)
+    val builds0 = Memo.buildCount
+    val t0 = System.nanoTime()
+    val rows =
+      try Some(fn.getOrElse(throw new NoSuchElementException(
+        "not a registered query"))(spark, sfDir).count())
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] ERR $name: ${e.getMessage}")
+        None
+      }
+    (rows, (System.nanoTime() - t0) / 1e9, Memo.buildCount - builds0)
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = SparkEntry.sfDir("/root/testdata/sf0.1")
     val spark = Sessions.local("graft-bench")
     // untimed warmup: pay JVM/Catalyst/codegen setup once, not inside
     // the first query's number. A bare scan is not enough — the first
@@ -179,7 +198,6 @@ object Bench {
           .dot(col("embedding"), col("embedding")).as("d"))
         .agg(sum(col("d"))).count()
     } catch { case _: Throwable => () }
-    var anyErr = false
     // min over 2 runs per query: single-shot numbers on this host swing
     // up to ±40% (one outlier measured 2.4×) from GC/scheduling noise;
     // the min is the standard steady-state estimator and is what the
@@ -187,9 +205,9 @@ object Bench {
     // BASELINE.md). Failures still surface as "err" + nonzero exit.
     // dev-loop filter: SPARK_GRAFT_ONLY=q_a,q_b times just those
     // queries (the driver never sets it, so round artifacts are always
-    // full-scope)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // full-scope); it also decides the fleet drain and the committed
+    // BENCH_FULL.json below, so all three agree on what blank means
+    val only = SparkEntry.only()
     // repo root, resolved from the compiled-class location (ADVICE
     // r14 — a bench launched elsewhere must not scatter artifacts into
     // its CWD); also anchors the io-probe scratch file
@@ -225,7 +243,6 @@ object Bench {
     case class R(name: String, ok: Boolean, r1: Double, r2: Double,
         b1: Long, b2: Long, rows: Long) {
       def sec: Double = math.min(r1, r2)
-      def valStr: String = if (ok) sec.toString else "\"err\""
     }
     // calibration probes bracket the sweep (and sample its midpoint)
     // so the artifact is self-normalizing — CPU (calibMs) AND device
@@ -246,26 +263,13 @@ object Bench {
     val ioEvery = 64
     val ioSeq = scala.collection.mutable.ArrayBuffer[Double]()
     ioSeq += ioCalibMbs(ioDir)
-    val qlist = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val qlist = only.getOrElse(SparkEntry.queries.keys.toSeq).sorted
     val midIdx = qlist.size / 2
     val results: Seq[R] =
-      qlist.zipWithIndex.map { case ((name, fn), idx) =>
+      qlist.zipWithIndex.map { case (name, idx) =>
         if (idx == midIdx) calibMid = calibMs()
         if (idx > 0 && idx % ioEvery == 0) ioSeq += ioCalibMbs(ioDir)
-        val runs = (1 to 2).map { _ =>
-          val builds0 = Memo.buildCount
-          val t0 = System.nanoTime()
-          val rows =
-            try Some(fn(spark, sfDir).count())
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] ERR $name: ${e.getMessage}")
-              anyErr = true
-              None
-            }
-          (rows, (System.nanoTime() - t0) / 1e9,
-            Memo.buildCount - builds0)
-        }
+        val runs = Seq.fill(2)(timeCount(spark, sfDir, name))
         val ok = runs.forall(_._1.isDefined)
         R(name, ok,
           if (ok) runs(0)._2 else 0.0, if (ok) runs(1)._2 else 0.0,
@@ -283,10 +287,8 @@ object Bench {
     val probeAt = ioSeq.indices.init.map(_ * ioEvery) :+ qlist.size
     val ioMid = ioSeq(probeAt.indices.minBy(k =>
       (math.abs(2 * probeAt(k) - qlist.size), -k)))
-    def r2(s: Double): String = BigDecimal(s).setScale(2,
-      BigDecimal.RoundingMode.HALF_UP).toString
-    def r1(s: Double): String = BigDecimal(s).setScale(1,
-      BigDecimal.RoundingMode.HALF_UP).toString
+    import SparkEntry.{jsonNum, jsonObj, jsonStr}
+    def r2(s: Double): String = jsonNum(s, 2)
     // deployment-shaped stream number (VERDICT r19 item 6): the whole
     // stream family re-drained CONCURRENTLY, each row on its own
     // session clone (shared SparkContext, private SQLConf, so
@@ -298,10 +300,11 @@ object Bench {
     // count must equal the row's sequential count: a mismatch prints
     // and fails the run, the artifact line still prints. Full sweeps
     // only; a fleet failure is reported but never voids the artifact.
+    var fleetMismatch = false
     val fleetWall: Option[Double] =
       if (only.isEmpty) {
         try {
-          val names = qlist.map(_._1).filter(_.startsWith("q_stream"))
+          val names = qlist.filter(_.startsWith("q_stream"))
           val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
           val t0 = System.nanoTime()
           val fs = names.map { n =>
@@ -318,7 +321,7 @@ object Bench {
             if (seq(n).ok && seq(n).rows != c) {
               System.err.println(s"[bench] FLEET COUNT MISMATCH $n: " +
                 s"seq=${seq(n).rows} fleet=$c")
-              anyErr = true
+              fleetMismatch = true
             }
           }
           Some(wall)
@@ -327,39 +330,44 @@ object Bench {
           None
         }
       } else None
-    val fleetJson = fleetWall
-      .map(s => s""","fleet_wall_sec":${r2(s)}""").getOrElse("")
     val total = results.map(r => if (r.ok) r.sec else 0.0).sum
     val coldTotal = results.map(r => if (r.ok) r.r1 else 0.0).sum
-    val calibJson = s"[$calibStart,$calibMid,$calibEnd]"
-    val ioJson = s"[${r1(ioStart)},${r1(ioMid)},${r1(ioEnd)}]"
-    val ioSeqJson = ioSeq.map(r1).mkString(
-      s""""io_calib_seq":[""", ",", s"""],"io_calib_every":$ioEvery""")
     // per-family min-of-2 subtotals, fixed key order for stable lines
-    val famJson = Seq("stream", "dedup", "fource", "source", "graph",
+    val families = Seq("stream", "dedup", "fource", "source", "graph",
         "other")
       .map { f =>
-        val s = results.collect {
-          case r if r.ok && family(r.name) == f => r.sec }.sum
-        "\"" + f + "\":" + r2(s)
-      }.mkString("{", ",", "}")
-    // full-fidelity line for target/bench_full.json (no size limit)
-    val full = {
-      def m(f: R => String): String = results.map { r =>
-        "\"" + r.name + "\":" + f(r)
-      }.mkString("{", ",", "}")
-      val qs = m(r => r.valStr)
-      val r1s = m(r => if (r.ok) r.r1.toString else "\"err\"")
-      val r2s = m(r => if (r.ok) r.r2.toString else "\"err\"")
-      val bs = m(r => s"[${r.b1},${r.b2}]")
-      s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"calib_ms":$calibJson,"io_calib_mbs":$ioJson,$ioSeqJson$fleetJson,"families":$famJson,"queries":$qs,"run1":$r1s,"run2":$r2s,"builds":$bs,"sf":"$sfDir"}"""
-    }
+        f -> r2(results.collect {
+          case r if r.ok && family(r.name) == f => r.sec }.sum)
+      }
     // second-run memo builds across the whole sweep: 0 proves min-of-2
     // really timed memo-warm steady state (the driver artifact carries
     // this scalar, so a rebuild-driven drift is falsifiable from the
     // artifact alone — VERDICT r7 item 1); per-query detail in
     // bench_full.json's "builds"
     val rebuilds = results.map(_.b2).sum
+    // the one field list behind both lines: `num` renders the totals,
+    // `counts` and `perQuery` are what each line adds
+    def line(num: Double => String, counts: Seq[(String, String)],
+        perQuery: Seq[(String, String)]): String = jsonObj(
+      Seq("metric" -> jsonStr("total"), "value" -> num(total),
+        "unit" -> jsonStr("sec"), "cold_total" -> num(coldTotal)) ++
+        counts ++ Seq(
+          "calib_ms" -> s"[$calibStart,$calibMid,$calibEnd]",
+          "io_calib_mbs" -> Seq(ioStart, ioMid, ioEnd)
+            .map(jsonNum(_, 1)).mkString("[", ",", "]"),
+          "io_calib_seq" -> ioSeq.map(jsonNum(_, 1)).mkString("[", ",", "]"),
+          "io_calib_every" -> ioEvery.toString) ++
+        fleetWall.map(s => "fleet_wall_sec" -> r2(s)) ++
+        Seq("families" -> jsonObj(families)) ++
+        perQuery :+ ("sf" -> jsonStr(sfDir)))
+    def perRow(rs: Seq[R])(f: R => String): String =
+      jsonObj(rs.map(r => r.name -> (if (r.ok) f(r) else "\"err\"")))
+    // full-fidelity line for target/bench_full.json (no size limit)
+    val full = line(_.toString, Nil, Seq(
+      "queries" -> perRow(results)(_.sec.toString),
+      "run1" -> perRow(results)(_.r1.toString),
+      "run2" -> perRow(results)(_.r2.toString),
+      "builds" -> jsonObj(results.map(r => r.name -> s"[${r.b1},${r.b2}]"))))
     // stdout line under a 1200-char budget: errs first (always), then
     // slowest-first until full; remainder reconciled via others_sec.
     // Budget history: 1800 fit the harness's 2000-char tail window in
@@ -370,8 +378,11 @@ object Bench {
     // daemon itself is now stopped before the line prints (below).
     val compact = {
       val budget = 1200
+      val counts = Seq("n_queries" -> results.size.toString,
+        "rebuilds" -> rebuilds.toString)
       val overhead = // fixed part of the line, with placeholder lengths
-        s"""{"metric":"total","value":${r2(total)},"unit":"sec","cold_total":${r2(coldTotal)},"n_queries":${results.size},"rebuilds":$rebuilds,"calib_ms":$calibJson,"io_calib_mbs":$ioJson,$ioSeqJson$fleetJson,"families":$famJson,"queries":{},"others_sec":00000.00,"sf":"$sfDir"}""".length
+        line(r2, counts, Seq("queries" -> "{}", "others_sec" -> "00000.00"))
+          .length
       val ordered = results.sortBy { r =>
         (if (r.ok) 1 else 0, -r.sec) // errs first, then slowest
       }
@@ -384,10 +395,9 @@ object Bench {
       val pickedNames = picked.map(_.name).toSet
       val othersSec = r2(results.collect {
         case r if r.ok && !pickedNames.contains(r.name) => r.sec }.sum)
-      val qs = picked.sortBy(_.name).map { r =>
-        "\"" + r.name + "\":" + (if (!r.ok) "\"err\"" else r2(r.sec))
-      }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${r2(total)},"unit":"sec","cold_total":${r2(coldTotal)},"n_queries":${results.size},"rebuilds":$rebuilds,"calib_ms":$calibJson,"io_calib_mbs":$ioJson,$ioSeqJson$fleetJson,"families":$famJson,"queries":$qs,"others_sec":$othersSec,"sf":"$sfDir"}"""
+      line(r2, counts, Seq(
+        "queries" -> perRow(picked.sortBy(_.name))(r => r2(r.sec)),
+        "others_sec" -> othersSec))
     }
     try {
       // Both artifacts anchor at the REPO ROOT resolved above (ADVICE
@@ -404,7 +414,7 @@ object Bench {
       // the round-end commit, giving every round a full per-query map.
       // FULL sweeps only (round 19): a SPARK_GRAFT_ONLY dev-loop run
       // used to clobber the committed full map with its subset.
-      if (sys.env.get("SPARK_GRAFT_ONLY").forall(_.trim.isEmpty))
+      if (only.isEmpty)
         java.nio.file.Files.write(
           root.resolve("BENCH_FULL.json"), full.getBytes("UTF-8"))
     } catch { case t: Throwable =>
@@ -429,6 +439,6 @@ object Bench {
     System.out.flush()
     // hard-exit immediately: don't give any lingering non-daemon thread
     // a window to log after the artifact line
-    sys.exit(if (anyErr) 1 else 0)
+    sys.exit(if (fleetMismatch || results.exists(!_.ok)) 1 else 0)
   }
 }

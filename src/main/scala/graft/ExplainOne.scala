@@ -18,10 +18,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * path (plans/r20/<query>_{before,after}.txt). */
 object ExplainOne {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+    val sfDir = SparkEntry.sfDir(
       "/root/testdata/sf0.1")
-    val names = sys.env.getOrElse("SPARK_GRAFT_ONLY",
-      "q_sim_ann_kmeans").split(",").map(_.trim).filter(_.nonEmpty)
+    val names = SparkEntry.only().getOrElse(Seq("q_sim_ann_kmeans"))
     val outDir = args.headOption
     val suffix = if (args.length > 1) args(1) else "plan"
     val spark = Sessions.local("graft-explain")

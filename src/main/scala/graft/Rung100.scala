@@ -31,7 +31,9 @@ package graft
   *  - results stream one line per query as they finish, so a
   *    wall-clock cutoff still leaves a partial record.
   * Usage: `SPARK_GRAFT_SF_DIR=/tmp/sf100gk SPARK_DRIVER_MEM=64g sbt
-  * "runMain graft.Rung100"` (optionally SPARK_GRAFT_ONLY to subset). */
+  * "runMain graft.Rung100"` (optionally SPARK_GRAFT_ONLY to subset).
+  * The parent starts each child as `graft.Rung100 <name>`; a child
+  * times that one row and prints its seconds as its last stdout line. */
 object Rung100 {
 
   private val defaultTargets = Seq(
@@ -43,13 +45,12 @@ object Rung100 {
     "q_join_setsim_prefix", "q_join_setsim_topk")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf100gk")
-    val targets = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(defaultTargets)
-    if (sys.env.contains("SPARK_GRAFT_RUNG_CHILD"))
-      runInProc(sfDir, targets)
-    else runForked(sfDir, targets)
+    val sfDir = SparkEntry.sfDir("/tmp/sf100gk")
+    args.headOption match {
+      case Some(name) => runChild(sfDir, name)
+      case None =>
+        runForked(sfDir, SparkEntry.only().getOrElse(defaultTargets))
+    }
   }
 
   /** (availableMb, cachedMb, dirtyMb) from /proc/meminfo; (-1,-1,-1)
@@ -72,7 +73,6 @@ object Rung100 {
     val moduleOpts = org.apache.spark.launcher.JavaModuleOptions
       .defaultModuleOptions().split("\\s+").filter(_.nonEmpty).toSeq
     val calibStart = Bench.calibMs()
-    var anyErr = false
     val rows = targets.map { name =>
       // settle: drain dirty writeback from the previous child so its
       // flush IO is not billed to this query, then a short breath
@@ -86,81 +86,49 @@ object Rung100 {
         s"cachedMB=$cachedMb dirtyMB=$dirtyMb")
       val cmd = Seq(javaBin, s"-Xmx$mem", "-XX:+UseG1GC",
         "-XX:G1HeapRegionSize=32m") ++ moduleOpts ++
-        Seq("-cp", cp, "graft.Rung100")
+        Seq("-cp", cp, "graft.Rung100", name)
       val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_RUNG_CHILD", "1")
-      pb.environment().put("SPARK_GRAFT_ONLY", name)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val t0 = System.nanoTime()
       val (ok, sec) = try {
         val p = pb.start()
-        val out = scala.io.Source.fromInputStream(p.getInputStream)
-          .getLines().toList
+        val last = scala.io.Source.fromInputStream(p.getInputStream)
+          .getLines().toList.lastOption
         val rc = p.waitFor()
-        val pat = ("\"" + java.util.regex.Pattern.quote(name) +
-          "\":([0-9.]+|\"err\")").r
-        val parsed = out.reverseIterator
-          .flatMap(l => pat.findFirstMatchIn(l)).toSeq.headOption
-          .map(_.group(1))
-        parsed match {
-          case Some(s) if rc == 0 && !s.startsWith("\"") =>
-            (true, s.toDouble)
+        last.flatMap(_.trim.toDoubleOption) match {
+          case Some(s) if rc == 0 => (true, s)
           case _ => (false, (System.nanoTime() - t0) / 1e9)
         }
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[rung100] fork ERR $name: ${e.getMessage}")
         (false, (System.nanoTime() - t0) / 1e9)
       }
-      if (!ok) anyErr = true
       System.err.println(f"[rung100] $name%-28s ${if (ok) f"$sec%.1f s"
         else "ERR"}")
       (name, ok, sec, availMb)
     }
     val calibEnd = Bench.calibMs()
-    def r(s: Double) = BigDecimal(s).setScale(1,
-      BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = rows.map { case (n, ok, s, _) =>
-      s""""$n":${if (ok) r(s) else "\"err\""}"""
-    }.mkString("{", ",", "}")
-    val mems = rows.map { case (n, _, _, m) => s""""$n":$m""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"rung100_cold_sec","protocol":"forked-per-query",""" +
-      s""""calib_ms":[$calibStart,$calibEnd],"queries":$qs,""" +
-      s""""pre_avail_mb":$mems,"sf":"$sfDir"}""")
-    if (anyErr) sys.exit(4)
+    import SparkEntry.{jsonNum, jsonObj, jsonStr}
+    println(jsonObj(Seq(
+      "metric" -> jsonStr("rung100_cold_sec"),
+      "protocol" -> jsonStr("forked-per-query"),
+      "calib_ms" -> s"[$calibStart,$calibEnd]",
+      "queries" -> jsonObj(rows.map { case (n, ok, s, _) =>
+        n -> (if (ok) jsonNum(s, 1) else jsonStr("err")) }),
+      "pre_avail_mb" -> jsonObj(rows.map { case (n, _, _, m) =>
+        n -> m.toString }),
+      "sf" -> jsonStr(sfDir))))
+    if (rows.exists(!_._2)) sys.exit(4)
   }
 
-  /** Child: runs its target (the parent passes one through
-    * SPARK_GRAFT_ONLY) on a fresh SparkSession in THIS JVM and prints
-    * the line the parent parses. */
-  private def runInProc(sfDir: String, targets: Seq[String]): Unit = {
-    var calibStart = -1L
-    var anyErr = false
-    val rows = targets.map { name =>
-      if (calibStart < 0) calibStart = Bench.calibMs()
-      val spark = Sessions.local("graft-rung100")
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[rung100] ERR $name: ${e.getMessage}")
-          anyErr = true; false
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[rung100] $name%-28s ${if (ok) f"$sec%.1f s"
-        else "ERR"}")
-      spark.stop()
-      (name, ok, sec)
-    }
-    val calibEnd = Bench.calibMs()
-    def r(s: Double) = BigDecimal(s).setScale(1,
-      BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = rows.map { case (n, ok, s) =>
-      s""""$n":${if (ok) r(s) else "\"err\""}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"rung100_cold_sec","calib_ms":[$calibStart,$calibEnd],"queries":$qs,"sf":"$sfDir"}""")
-    if (anyErr) sys.exit(4)
+  /** Child: times `name` once on a fresh SparkSession in THIS JVM and
+    * prints its seconds; exits 4 when the row fails. */
+  private def runChild(sfDir: String, name: String): Unit = {
+    val spark = Sessions.local("graft-rung100")
+    val (rows, sec, _) = Bench.timeCount(spark, sfDir, name)
+    spark.stop()
+    if (rows.isEmpty) sys.exit(4)
+    println(sec)
   }
 }

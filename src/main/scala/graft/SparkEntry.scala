@@ -47,4 +47,41 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     Q.oracleMap(modules)
+
+  /** The row selector every main shares: `SPARK_GRAFT_ONLY` as a comma
+    * list of names, trimmed, blanks dropped, first occurrence kept. None
+    * when it is unset or names nothing, so a blank value means unset.
+    * Names are not checked against the registry: a main reports an
+    * unknown name as a failed row. */
+  def only(env: Map[String, String] = sys.env): Option[Seq[String]] =
+    env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty).distinct)
+      .filter(_.nonEmpty)
+
+  /** The fixture directory the mains read: `SPARK_GRAFT_SF_DIR`, or
+    * `default` when it is unset or blank. */
+  def sfDir(default: String, env: Map[String, String] = sys.env): String =
+    env.get("SPARK_GRAFT_SF_DIR").map(_.trim).filter(_.nonEmpty)
+      .getOrElse(default)
+
+  /** A JSON string literal. Escapes backslash, quote and every control
+    * char (< 0x20): a tab or CR in hand-written oracle SQL would otherwise
+    * make a reader's `json.load` fail. */
+  def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** `x` rounded half-up to `scale` decimals, as a JSON number. */
+  def jsonNum(x: Double, scale: Int): String =
+    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** A JSON object of (key, rendered value) fields, in the given order. */
+  def jsonObj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => s"${jsonStr(k)}:$v" }.mkString("{", ",", "}")
 }

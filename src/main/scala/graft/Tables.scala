@@ -302,4 +302,16 @@ object Tables {
             "streaming; compact the directory or version by path")
     }
   }
+
+  /** Deletes `path` and everything under it, best effort: what cannot
+    * be deleted stays, so a `finally` that clears a scratch directory
+    * never masks the error it is unwinding. */
+  def deleteTree(path: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete()
+      ()
+    }
+    rm(new java.io.File(path))
+  }
 }

@@ -8,29 +8,20 @@ import java.nio.file.{Files, Paths}
   * no longer produce a plausible-looking CORRECTNESS artifact. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir, argOnly) = args.toSeq match {
-      case Seq(sf, out)          => (sf, out, Set.empty[String])
-      case Seq(sf, out, rest @ _*) => (sf, out, rest.toSet)
-    }
-    // dev-loop filter parity with Bench: SPARK_GRAFT_ONLY names
-    // queries when no extra args do (the driver passes neither, so
-    // round artifacts are always full-sweep)
+    val Seq(sfDir, outDir, argOnly @ _*) = args.toSeq
+    // extra args name queries for dev iteration and take precedence
+    // over SPARK_GRAFT_ONLY; the correctness gate passes exactly
+    // (sfDir, outDir) and gets the full sweep
     val only =
-      if (argOnly.nonEmpty) argOnly
-      else sys.env.get("SPARK_GRAFT_ONLY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-        .getOrElse(Set.empty[String])
+      if (argOnly.nonEmpty) Some(argOnly) else SparkEntry.only()
     val spark = Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     var failed = List.empty[String]
-    // Optional extra args name specific queries (dev iteration only —
-    // the driver always passes exactly (sfDir, outDir) and gets the
-    // full sweep).
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
-    selected.foreach { case (name, fn) =>
+    val registry = SparkEntry.queries
+    only.getOrElse(registry.keys.toSeq).foreach { name =>
       try {
+        val fn = registry.getOrElse(name,
+          throw new NoSuchElementException("not a registered query"))
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         if (!Files.exists(Paths.get(s"$outDir/$name/_SUCCESS")))
@@ -40,20 +31,8 @@ object Verify {
         System.err.println(s"[verify] FAIL $name: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.jsonObj(SparkEntry.oracleSql.toSeq
+      .map { case (k, v) => k -> SparkEntry.jsonStr(v) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // no cached relation outlives the sweep (VERDICT r10 item 5)
     graft.queries.Extras.releaseCacheReuse(spark)

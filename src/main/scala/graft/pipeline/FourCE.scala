@@ -18,14 +18,7 @@ case class FourCEConfig(
     severeCategory: String = "severe",
     windowBeforeDays: Int = 7,
     windowAfterDays: Int = 14,
-    includeRace: Boolean = false,
-    /** Blur-noise hash selector: false (default) keys the blur with
-      * xxhash64 — the strongest in-engine choice; true keys it with the
-      * portable char-fold polynomial ([[graft.functions.PortableHash]])
-      * whose values any engine can replicate (the harness's DuckDB
-      * oracle does), trading hash quality for cross-engine
-      * auditability of the obfuscated deliverables. */
-    portableBlur: Boolean = false)
+    includeRace: Boolean = false)
 
 /** The capability claim (SURVEY.md §5.2.5): the reference's Phase-1.1
   * pipeline — cohort construction and the aggregate output files — as a
@@ -71,15 +64,16 @@ object FourCE {
     * reference's RAND()/NEWID() this is retry-safe under task
     * re-execution and identical across re-runs. Applied to EVERY count
     * column of every aggregate output below — the 4CE spec obfuscates
-    * all Phase-1.1 files, not just Demographics. */
+    * all Phase-1.1 files, not just Demographics. The blur is keyed with
+    * the portable char-fold polynomial ([[graft.functions.PortableHash]])
+    * of `key|siteId`, whose values any engine can replicate (the
+    * harness's DuckDB oracle does), so the obfuscated deliverables stay
+    * auditable across engines. */
   def obfuscate(count: Column, key: Column, cfg: FourCEConfig): Column = {
-    val noiseHash =
-      if (cfg.portableBlur)
-        // HOF form on purpose: runs on any session (no extension
-        // registration) and only ever touches post-aggregation rows
-        graft.functions.PortableHash.charFoldHof(
-          concat_ws("|", key, lit(cfg.siteId)))
-      else xxhash64(key, lit(cfg.siteId))
+    // HOF form on purpose: runs on any session (no extension
+    // registration) and only ever touches post-aggregation rows
+    val noiseHash = graft.functions.PortableHash.charFoldHof(
+      concat_ws("|", key, lit(cfg.siteId)))
     val blurred =
       if (cfg.blur <= 0) count
       else count + pmod(noiseHash, lit(2 * cfg.blur + 1)) - cfg.blur

@@ -331,14 +331,12 @@ object FourCEQueries {
          |FROM med GROUP BY med_class ORDER BY med_class""".stripMargin))
 
   /** The demographics deliverable in its REAL shipped form — nonzero
-    * blur + small-count mask — under the hash gate. Uses
-    * `portableBlur=true` so DuckDB can replicate the noise exactly
-    * (charFold of the same `sex|age|race[|s]` key the library builds,
-    * salted with siteId); mask-wins-over-blur is thereby
-    * oracle-checked end-to-end, not just unit-tested. The xxhash64
-    * default path stays covered by FourCESuite's blur properties. */
-  private val obfCfg = cfg.copy(blur = 2, maskThreshold = 10,
-    portableBlur = true)
+    * blur + small-count mask — under the hash gate. The library keys
+    * its blur with the portable char-fold, so DuckDB replicates the
+    * noise exactly (charFold of the same `sex|age|race[|s]` key the
+    * library builds, salted with siteId); mask-wins-over-blur is
+    * thereby oracle-checked end-to-end, not just unit-tested. */
+  private val obfCfg = cfg.copy(blur = 2, maskThreshold = 10)
 
   private def obfSql(count: String, key: String): String =
     s"""CASE WHEN $count < 10 THEN -99 ELSE $count +

@@ -200,16 +200,6 @@ object Scale {
   private val sinkAggDir =
     new java.util.concurrent.atomic.AtomicReference[String](null)
 
-  /** Recursive scratch-dir delete (shared by the sink queries). */
-  private def rmTree(path: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root))
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-  }
-
   val qSinkForeach = Q("q_sink_foreach",
     (spark, sfDir) => {
       import spark.implicits._
@@ -247,9 +237,9 @@ object Scale {
               .cast("double").as("sum_value"))
           .coalesce(1)
           .write.mode("overwrite").parquet(aggDir)
-      } finally rmTree(dir)
+      } finally Tables.deleteTree(dir)
       val prev = sinkAggDir.getAndSet(aggDir)
-      if (prev != null) rmTree(prev)
+      if (prev != null) Tables.deleteTree(prev)
       spark.read.parquet(aggDir).orderBy($"event_type")
     },
     Some("""SELECT event_type, count(*) AS n,
@@ -368,7 +358,7 @@ object Scale {
           .start()
         q.processAllAvailable()
         q.stop()
-      } finally rmTree(feedDir)
+      } finally Tables.deleteTree(feedDir)
       spark.table(tbl).orderBy($"key")
     },
     Some(s"""WITH ${Cohort.evCte}, pur AS (

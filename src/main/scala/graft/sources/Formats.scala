@@ -134,12 +134,6 @@ object Formats {
       (load: => Unit): Unit =
     graft.Memo.onceJvm(spark, s"load:$what:$sfDir")(load)
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete()
-    ()
-  }
-
   /** S5 under the oracle gate: JDBC round-trip through the embedded
     * Derby on the Spark classpath — the production i2b2 connector path
     * (a site's star tables live in an RDBMS; SURVEY.md §2.1 S5). Loads
@@ -201,8 +195,7 @@ object Formats {
             // the in-memory catalog forgets tables across JVMs but
             // their files survive in the warehouse dir — clear them or
             // the CTAS refuses (same dance as BucketingSuite)
-            val dir = new java.io.File(s"target/spark-warehouse/$tbl")
-            if (dir.exists()) rmTree(dir)
+            Tables.deleteTree(s"target/spark-warehouse/$tbl")
             Tables.read(spark, sfDir, src).write.mode("overwrite")
               .bucketBy(8, key).sortBy(key).saveAsTable(tbl)
         }
@@ -247,8 +240,7 @@ object Formats {
       loadOnceJvm(spark, sfDir, "cbo") {
         names.foreach { case (src, tbl) =>
           spark.sql(s"DROP TABLE IF EXISTS $tbl")
-          val dir = new java.io.File(s"target/spark-warehouse/$tbl")
-          if (dir.exists()) rmTree(dir)
+          Tables.deleteTree(s"target/spark-warehouse/$tbl")
           Tables.read(spark, sfDir, src).write.mode("overwrite")
             .saveAsTable(tbl)
           spark.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS")
@@ -398,8 +390,7 @@ object Formats {
         // clear survivors from earlier JVMs, or a narrowed doc bound
         // would leave stale .bin files matching the glob (a parity
         // failure only a manual target/ wipe could clear)
-        val old = new java.io.File(dir)
-        if (old.exists()) rmTree(old)
+        Tables.deleteTree(dir)
         val p = java.nio.file.Paths.get(dir)
         java.nio.file.Files.createDirectories(p)
         docs.foreach { r =>
@@ -1813,7 +1804,7 @@ object Formats {
       val published = fmtDir(sfDir, "wap_published")
       // each run publishes into an empty location: an earlier run's
       // published batch must not stand in for this run's outcome
-      rmTree(new java.io.File(published))
+      Tables.deleteTree(published)
       val base = Tables.read(spark, sfDir, "orders")
         .select($"o_orderkey", $"o_custkey", $"o_totalprice")
       // distinct: a customer key listed twice would double `n` for its

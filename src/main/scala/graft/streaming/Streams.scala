@@ -110,14 +110,12 @@ object StreamRun {
     * was measured WORSE (q_stream_join 3.1→4.6 s, q_stream_dedup_wm
     * 1.3→3.9 s: `processAllAvailable` then stalls on watermark-commit
     * polling) and rejected. This is the standard sizing rule, not a
-    * bench trick: state partitions should match
-    * state volume/parallelism, and a production deployment sets
-    * `graft.stream.statePartitions` (or leaves its global
-    * `spark.sql.shuffle.partitions`) to its own load — the partition
-    * count is baked into the checkpoint at first start either way. */
-  private def stateParts(spark: SparkSession): Int =
-    spark.conf.getOption("graft.stream.statePartitions")
-      .map(_.toInt).getOrElse(4)
+    * bench trick: state partitions should match state
+    * volume/parallelism. Every harness stream carries the same small
+    * fixture state, so one constant serves them all; a production
+    * stream sizes `spark.sql.shuffle.partitions` to its own load before
+    * its first start, which bakes the count into its checkpoint. */
+  private val stateParts = 4
 
   /** Checkpoint root for the harness's TRANSIENT memory-sink streams:
     * tmpfs (/dev/shm) when present, else the JVM temp dir. These
@@ -137,13 +135,6 @@ object StreamRun {
       else System.getProperty("java.io.tmpdir")
     }
 
-  private def deleteRec(f: java.io.File): Unit = {
-    val fs = f.listFiles()
-    if (fs != null) fs.foreach(deleteRec)
-    f.delete()
-    ()
-  }
-
   /** Runs `df` to a memory-sink table and returns it. NOTE: the
     * shuffle-partition override below mutates the session-global conf
     * for the duration of the stream (restored in `finally`) — the
@@ -151,65 +142,41 @@ object StreamRun {
     * `newSession` could not govern it. This assumes no concurrent
     * query planning on the same session (true for the sequential
     * Verify/Bench harness); a multi-tenant caller should pass a
-    * dedicated session per stream. */
-  def toTable(spark: SparkSession, df: DataFrame,
-      base: String, mode: String): DataFrame = {
-    val name = s"${base}_${runId.incrementAndGet()}"
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val ck = s"${ckRoot(spark)}/graft-ck-$name"
-    spark.conf.set(key, stateParts(spark).toString)
-    // the query is stopped in FINALLY (ADVICE r19): if
-    // processAllAvailable throws, the old code deleted the checkpoint
-    // while the query thread was still live and writing to it —
-    // confusing secondary failures plus a leaked running query (and,
-    // under /dev/shm roots, leaked tmpfs RAM)
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      q = df.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ck)
-        .outputMode(mode).start()
-      q.processAllAvailable()
-    } finally {
-      if (q != null)
-        try q.stop()
-        catch { case scala.util.control.NonFatal(_) => () }
-      spark.conf.set(key, prev)
-      deleteRec(new java.io.File(ck))
-    }
-    spark.table(name)
-  }
-
-  /** Like [[toTable]] but under `Trigger.AvailableNow`: the query
-    * drains exactly the backlog present at start in bounded
+    * dedicated session per stream.
+    *
+    * With `availableNow` the query runs under `Trigger.AvailableNow`:
+    * it drains exactly the backlog present at start in bounded
     * micro-batches (the source's admission options cap each batch) and
     * TERMINATES ITSELF — `awaitTermination`, not
-    * `processAllAvailable`, is the completion contract. */
-  def toTableAvailableNow(spark: SparkSession, df: DataFrame,
-      base: String, mode: String): DataFrame = {
+    * `processAllAvailable`, is then the completion contract. */
+  def toTable(spark: SparkSession, df: DataFrame, base: String,
+      mode: String, availableNow: Boolean = false): DataFrame = {
     val name = s"${base}_${runId.incrementAndGet()}"
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     val ck = s"${ckRoot(spark)}/graft-ck-$name"
-    spark.conf.set(key, stateParts(spark).toString)
-    // stop-in-finally, same rationale as [[toTable]] (ADVICE r19):
-    // AvailableNow self-terminates on success, but a failed
-    // awaitTermination must not leave a live query writing into the
-    // checkpoint the finally block is deleting
+    spark.conf.set(key, stateParts.toString)
+    // the query is stopped in FINALLY (ADVICE r19): if the completion
+    // wait throws, the old code deleted the checkpoint while the query
+    // thread was still live and writing to it — confusing secondary
+    // failures plus a leaked running query (and, under /dev/shm roots,
+    // leaked tmpfs RAM). AvailableNow self-terminates on success, but
+    // a failed awaitTermination must not leave a live query either.
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
-      q = df.writeStream.format("memory").queryName(name)
+      val w = df.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ck)
         .outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      q = (if (availableNow)
+        w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      else w).start()
+      if (availableNow) q.awaitTermination() else q.processAllAvailable()
     } finally {
       if (q != null)
         try q.stop()
         catch { case scala.util.control.NonFatal(_) => () }
       spark.conf.set(key, prev)
-      deleteRec(new java.io.File(ck))
+      Tables.deleteTree(ck)
     }
     spark.table(name)
   }
@@ -778,7 +745,8 @@ object Streams {
         .agg(count(lit(1)).as("n"),
           round(sum($"value".cast("decimal(18,6)")), 6)
             .cast("double").as("sum_value"))
-      StreamRun.toTableAvailableNow(spark, agg, "t_avnow", "complete")
+      StreamRun.toTable(spark, agg, "t_avnow", "complete",
+        availableNow = true)
         .orderBy($"event_type")
     },
     Some("""SELECT event_type, count(*) AS n,
@@ -811,11 +779,7 @@ object Streams {
         sfDir.replaceAll("[^A-Za-z0-9]", "_") + "/filesink"
       val outDir = s"$base/out"
       graft.Memo.onceJvm(spark, s"load:filesink:$sfDir") {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles.foreach(rm)
-          f.delete(); ()
-        }
-        rm(new java.io.File(base))
+        Tables.deleteTree(base)
         val s = Tables.readStream(spark, sfDir, "events")
           .select($"event_id", $"user_id", $"event_type", $"value")
         val q = s.writeStream.format("parquet")
@@ -1081,7 +1045,8 @@ object Streams {
           round(sum($"value".cast("decimal(18,6)")), 6)
             .cast("double").as("sum_value"))
       val streamSide = StreamRun
-        .toTableAvailableNow(spark, streamAgg, "t_backfill", "complete")
+        .toTable(spark, streamAgg, "t_backfill", "complete",
+          availableNow = true)
         .withColumn("side", lit("stream"))
       batchSide.unionByName(streamSide)
         .orderBy($"event_type", $"side")
@@ -1128,11 +1093,7 @@ object Streams {
       val srcDir = s"$base/src"
       val outDir = s"$base/out"
       graft.Memo.onceJvm(spark, s"load:resume:$sfDir") {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles.foreach(rm)
-          f.delete(); ()
-        }
-        rm(new java.io.File(base))
+        Tables.deleteTree(base)
         val ev = Tables.read(spark, sfDir, "events")
           .select($"event_id", $"user_id", $"event_type", $"value")
         def drain(): Unit = {

@@ -98,8 +98,7 @@ object HashProps extends Properties("graft") {
     forAll(Gen.nonEmptyListOf(
       Gen.zip(Gen.choose(0L, 40L), asciiWord))) { rows =>
       import graft.pipeline.{FourCE, FourCEConfig}
-      val cfg = FourCEConfig(blur = 2, maskThreshold = 10,
-        portableBlur = true)
+      val cfg = FourCEConfig(blur = 2, maskThreshold = 10)
       val out = rows.toDF("n", "key")
         .select(col("n"),
           FourCE.obfuscate(col("n"), col("key"), cfg).as("o"))

@@ -30,6 +30,29 @@ class OperatorSuite extends AnyFunSuite {
     assert(SparkEntry.queries.size === names.size)
   }
 
+  test("row selector: blank means unset, an unknown name fails its row") {
+    def only(v: String) = SparkEntry.only(Map("SPARK_GRAFT_ONLY" -> v))
+    assert(SparkEntry.only(Map.empty) === None)
+    Seq("", " ", " , ").foreach(v => assert(only(v) === None, s"'$v'"))
+    assert(only(" a , b ,a") === Some(Seq("a", "b")))
+    assert(only("q_no_such_row") === Some(Seq("q_no_such_row")))
+    def sfDir(v: String) =
+      SparkEntry.sfDir("/d", Map("SPARK_GRAFT_SF_DIR" -> v))
+    assert(sfDir(" ") === "/d" && sfDir(" /x ") === "/x")
+    // the name reaches the timed action, which reports the row failed
+    val (rows, _, builds) = Bench.timeCount(spark, sf, "q_no_such_row")
+    assert(rows === None && builds === 0L)
+    assert(Bench.timeCount(spark, sf, "q_scan_filter_in")._1.exists(_ > 0))
+  }
+
+  test("JSON writer: escapes control chars, rounds half-up, keeps order") {
+    import SparkEntry.{jsonNum, jsonObj, jsonStr}
+    assert(jsonStr("a\"b\\c\td\u0001") === "\"a\\\"b\\\\c\\td\\u0001\"")
+    assert(jsonNum(0.25, 1) === "0.3" && jsonNum(2.0, 2) === "2.00")
+    assert(jsonObj(Seq("z" -> "1", "a" -> jsonStr("x"))) ===
+      """{"z":1,"a":"x"}""")
+  }
+
   test("events.ts reads as microsecond timestamps (µs fixture, native)") {
     val row = Tables.read(spark, sf, "events")
       .select(min($"ts"), max($"ts")).head()
