@@ -25,7 +25,7 @@ object AnnRung {
       "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-annrung")
     import spark.implicits._
-    val S18 = queries.Surface18
+    val ann = queries.Ann
     val e = Tables.read(spark, sfDir, "embeddings")
     val n = e.count()
     val probes = e.filter($"vec_id" < 50)
@@ -39,7 +39,7 @@ object AnnRung {
     // the scan VOLUME of the at-rest index (round 20): rows the pruned
     // kmeans candidate scan reads per probe batch, which must stay
     // ≲×2 across the ×100 fixture hop while n grows ×100
-    val scanRows = S18.kmeansScanRows(spark, sfDir)
+    val scanRows = ann.kmeansScanRows(spark, sfDir)
     require(scanRows <= n,
       "pruned scan cannot read more rows than the corpus")
     def r(x: Double): String = SparkEntry.jsonNum(x, 4)
@@ -52,12 +52,12 @@ object AnnRung {
       ("lsh", Some(othersIn(e.withColumn("bkt",
         queries.LLMOps.hyperBits($"embedding")), "bkt")), None),
       ("", None, Some("q_sim_ann_recall")),
-      ("kmeans", Some(S18.kmeansCandCounts(spark, sfDir)),
+      ("kmeans", Some(ann.kmeansCandCounts(spark, sfDir)),
         Some("q_sim_ann_kmeans_recall")),
-      ("twolevel", Some(S18.twoLevelCandCounts(spark, sfDir)),
+      ("twolevel", Some(ann.twoLevelCandCounts(spark, sfDir)),
         Some("q_sim_ann_twolevel_recall")),
       ("ivfpq", None, Some("q_sim_ann_ivf_pq_recall")),
-      ("scout", Some(S18.scoutCandCounts(spark, sfDir)),
+      ("scout", Some(ann.scoutCandCounts(spark, sfDir)),
         Some("q_sim_ann_scout_recall")))
     val recall = scala.collection.mutable.Map.empty[String, (Double, Double)]
     val fields = tiers.map { case (key, cand, row) =>

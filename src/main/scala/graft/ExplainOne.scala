@@ -30,7 +30,7 @@ object ExplainOne {
       // executed plan) — round 20: the scout tier's global ADC leg
       val df = name match {
         case "leg:scout_global" =>
-          graft.queries.Surface18.scoutHits(spark, sfDir)
+          graft.queries.Ann.scoutHits(spark, sfDir)
         case _ => SparkEntry.queries(name)(spark, sfDir)
       }
       // SPARK_GRAFT_EXEC=1: execute the query through the noop sink

@@ -29,10 +29,8 @@ object SparkEntry {
       _root_.graft.queries.Corpus.all ++
       _root_.graft.queries.Privacy.all ++
       _root_.graft.queries.Surface.all ++
-      _root_.graft.queries.Surface15.all ++
-      _root_.graft.queries.Surface16.all ++
-      _root_.graft.queries.Surface17.all ++
-      _root_.graft.queries.Surface18.all
+      _root_.graft.queries.Rollups.all ++
+      _root_.graft.queries.Ann.all
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

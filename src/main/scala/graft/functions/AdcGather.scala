@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** `adc_gather(books_ids, dtab, codes)` — the ADC (asymmetric distance
   * computation) inner loop of the PQ retrieval tiers
-  * (queries/Surface18.scala) as a table lookup: the probe side
+  * (queries/Ann.scala) as a table lookup: the probe side
   * precomputes, ONCE per probe on the driver, the squared-L2 distance
   * from its subvector to EVERY codebook centroid (the classical ADC
   * distance table — M·K longs per probe, ≤ 8·64·8 B = 4 KB), and the

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
 /** `kmeans_nearest_cells(cents, q, k)` — the k nearest coarse-quantizer
   * cells for one micro-unit vector, ordered by exact integer
   * (squared-L2, cell-id) — the IVF assignment/probe kernel of the
-  * learned-cell ANN family (queries/Surface18.scala).
+  * learned-cell ANN family (queries/Ann.scala).
   *
   * Why native: the same argmin is expressible with
   * transform + aggregate + array_sort HOFs, but every higher-order

@@ -87,7 +87,7 @@ object Vectors {
     udaf(CentroidAgg, ExpressionEncoder[Seq[Float]]())
 
   /** Element-wise EXACT long-vector sum + member count — the Lloyd
-    * mean's aggregation kernel (Surface18). Integer adds are
+    * mean's aggregation kernel (queries/Ann.scala). Integer adds are
     * order-free, so partial aggregation/merge order can never change
     * the result (the engine-exact k-means discipline); the shuffle
     * carries ONE (dim-long buffer, count) per (cell × partition)

@@ -4,13 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One-call MATERIALIZE-AND-REGISTER for the aggregate navigator —
-  * the user-facing half of [[RollupRewrite]]. Every registration site
-  * so far hand-wrote the same build: per measure, the sum/min/max
-  * cells, the non-null count (AVG's denominator), the Σx² cell
-  * (stddev/var), and per distinct measure the adaptive container cell
-  * — all in one aggregation at the declared grain, plus count(*).
-  * This helper IS that build, so adopting the navigator for a new
-  * fact table is one call:
+  * the user-facing half of [[RollupRewrite]]. It builds every cell
+  * kind the rule merges: per measure, the sum/min/max cells, the
+  * non-null count (AVG's denominator), the Σx² cell (stddev/var), and
+  * per distinct measure the adaptive container cell — all in one
+  * aggregation at the declared grain, plus count(*). The registered
+  * rows in queries/Rollups.scala hand-write narrower builds (only the
+  * cells their queries read, some over expression measures or
+  * stream-maintained stores), which this helper would widen with
+  * unused cells; `q_agg_rollup_build_api` is the row that adopts it.
+  * Adopting the navigator for a new fact table is one call:
   *
   * {{{
   * RollupBuild.materialize(spark, base, dir,

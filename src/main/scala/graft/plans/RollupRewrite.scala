@@ -571,7 +571,68 @@ object RollupRewrite extends Rule[LogicalPlan] {
       case other => other
     }
 
-  private val dbg = sys.env.contains("GRAFT_ROLLUP_DEBUG")
+  /** One registration re-anchored onto a candidate base relation: a
+    * fresh summary instance (see freshSummary) and every dim and cell
+    * template of `d` re-pointed at `rel`'s output attributes. A measure
+    * template that does not anchor is dropped (queries over it refuse);
+    * a dim that does not anchor refuses the whole registration
+    * (anchorDef returns None). All three rewrite paths start here. */
+  private final case class Anchored(d: RollupDef, sumPlan: LogicalPlan,
+      dims: Seq[(String, Expression)],
+      sums: Seq[(String, Expression)],
+      mins: Seq[(String, Expression)],
+      maxs: Seq[(String, Expression)],
+      avgs: Seq[(String, String, Expression)],
+      stats: Seq[(String, String, String, Expression)],
+      bistats: Seq[(BiStatCells, Expression, Expression)],
+      distincts: Seq[(String, Expression)]) {
+    def summaryAttr(name: String): Option[Attribute] =
+      sumPlan.output.find(_.name == name)
+  }
+
+  private def anchorDef(d: RollupDef,
+      rel: LogicalRelation): Option[Anchored] = {
+    val sumPlan = freshSummary(d)
+    def one(t: Expression) = anchor(t, rel.output)
+    def named(ms: Seq[(String, Expression)]) = ms.flatMap {
+      case (n, t) => one(t).map(n -> _)
+    }
+    val dims = named(d.dims)
+    if (dims.size != d.dims.size) None
+    else Some(Anchored(d, sumPlan, dims, named(d.sums), named(d.mins),
+      named(d.maxs),
+      d.avgs.flatMap { case (s, c, t) => one(t).map((s, c, _)) },
+      d.stats.flatMap { case (s, q, c, t) => one(t).map((s, q, c, _)) },
+      d.bistats.flatMap { case (cells, tx, ty) =>
+        for { ax <- one(tx); ay <- one(ty) } yield (cells, ax, ay)
+      },
+      named(d.distincts)))
+  }
+
+  /** Rebuild an aggregate's select list with `rw`, preserving every
+    * output's name and ExprId so the parent plan is untouched; None
+    * when any entry is not re-aggregable. A bare attribute that `rw`
+    * returns unchanged (a join-back dim-side column, a kept Expand
+    * slot) stays as is. The flat path never takes that short-cut: it
+    * maps every attribute to a column of the fresh summary instance,
+    * whose ExprIds are new. */
+  private def rebuildSelect(ae: Seq[NamedExpression],
+      rw: Expression => Option[Expression])
+      : Option[Seq[NamedExpression]] =
+    Some(ae.map { ne =>
+      val rewritten = ne match {
+        case al: Alias => rw(al.child).map(c =>
+          Alias(c, al.name)(exprId = al.exprId,
+            qualifier = al.qualifier))
+        case attr: Attribute => rw(attr).map {
+          case same: Attribute if same.exprId == attr.exprId => attr
+          case c => Alias(c, attr.name)(exprId = attr.exprId)
+        }
+        case other => rw(other).map(c =>
+          Alias(c, other.name)(exprId = other.exprId))
+      }
+      rewritten.getOrElse(return None)
+    })
 
   /** The shared re-aggregation algebra — ONE definition of how each
     * aggregate call maps to summary cells, used by all three rewrite
@@ -590,15 +651,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
   private def reAggShared(a: AggregateExpression,
       srcOf: Expression => Option[Expression],
       cell: String => Option[Expression],
-      d: RollupDef,
-      aSums: Seq[(String, Expression)],
-      aMins: Seq[(String, Expression)],
-      aMaxs: Seq[(String, Expression)],
-      aAvgs: Seq[(String, String, Expression)],
-      aStats: Seq[(String, String, String, Expression)],
-      aDims: Seq[(String, Expression)] = Nil,
-      aBi: Seq[(BiStatCells, Expression, Expression)] = Nil,
-      aDistincts: Seq[(String, Expression)] = Nil,
+      an: Anchored,
       cntOuter: Boolean = false)
       : Option[Expression] = {
     if (a.filter.isDefined) return None
@@ -617,11 +670,11 @@ object RollupRewrite extends Rule[LogicalPlan] {
       return a.aggregateFunction match {
         case Count(Seq(e)) =>
           srcOf(e).flatMap { s =>
-            aDims.find(_._2.semanticEquals(s)).flatMap {
+            an.dims.find(_._2.semanticEquals(s)).flatMap {
               case (n, _) => cell(n).map(c =>
                 Cast(Count(Seq(c)).toAggregateExpression(
                   isDistinct = true), a.dataType))
-            }.orElse(aDistincts.find(_._2.semanticEquals(s)).flatMap {
+            }.orElse(an.distincts.find(_._2.semanticEquals(s)).flatMap {
               case (n, _) => cell(n).map(c =>
                 Cast(graft.functions.BitmapMapCountAgg(c)
                   .toAggregateExpression(), a.dataType))
@@ -642,7 +695,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
         // bare EvalMode, so only Sum needed this).
         case Sum(e, ctx) if ctx.evalMode != EvalMode.TRY =>
           srcOf(e).flatMap(s =>
-            aDistincts.find(_._2.semanticEquals(s))).flatMap {
+            an.distincts.find(_._2.semanticEquals(s))).flatMap {
             case (n, _) => cell(n).map(c =>
               Cast(graft.functions.BitmapMapSumAgg(c,
                 ansi = ctx.evalMode == EvalMode.ANSI)
@@ -655,7 +708,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
         case Average(e, em) if em != EvalMode.TRY &&
             a.dataType == types.DoubleType =>
           srcOf(e).flatMap(s =>
-            aDistincts.find(_._2.semanticEquals(s))).flatMap {
+            an.distincts.find(_._2.semanticEquals(s))).flatMap {
             case (n, _) => cell(n).map { c =>
               val s1 = Cast(graft.functions.BitmapMapSumAgg(c,
                 ansi = em == EvalMode.ANSI).toAggregateExpression(),
@@ -673,7 +726,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
     }
     def statOver(srcE: Expression, samp: Boolean,
         sqrtIt: Boolean): Option[Expression] =
-      aStats.find(_._4.semanticEquals(srcE)).flatMap {
+      an.stats.find(_._4.semanticEquals(srcE)).flatMap {
         case (sCol, qCol, cCol, _) =>
           for { sa <- cell(sCol); qa <- cell(qCol); ca <- cell(cCol) }
             yield {
@@ -704,7 +757,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
     // matched); the Greatest clamps keep FP noise out of the √.
     def biOver(xE: Expression, yE: Expression,
         form: String): Option[Expression] =
-      aBi.find(b => b._2.semanticEquals(xE) && b._3.semanticEquals(yE))
+      an.bistats.find(b =>
+        b._2.semanticEquals(xE) && b._3.semanticEquals(yE))
         .flatMap { case (cells, _, _) =>
           for { na <- cell(cells.nCol); sxa <- cell(cells.sxCol)
                 sya <- cell(cells.syCol); sxya <- cell(cells.sxyCol)
@@ -748,7 +802,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
       // coalesce(cnt, 1): matched pairs contribute their cell count,
       // null-extended rows contribute the 1 the base join would.
       case Count(Seq(Literal(v, _))) if v != null =>
-        cell(d.cntCol).map { c =>
+        cell(an.d.cntCol).map { c =>
           val perRow =
             if (cntOuter) Coalesce(Seq(c, Literal(1L))) else c
           Coalesce(Seq(
@@ -762,8 +816,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
       // rows (Count skips) — no cntOuter analog needed.
       case Count(Seq(e)) =>
         srcOf(e).flatMap { s =>
-          aAvgs.find(_._3.semanticEquals(s)).map(_._2)
-            .orElse(aStats.find(_._4.semanticEquals(s)).map(_._3))
+          an.avgs.find(_._3.semanticEquals(s)).map(_._2)
+            .orElse(an.stats.find(_._4.semanticEquals(s)).map(_._3))
         }.flatMap(cell).map(c => Coalesce(Seq(
           Sum(c).toAggregateExpression(), Literal(0L))))
       case Corr(x, y, true) =>
@@ -777,26 +831,26 @@ object RollupRewrite extends Rule[LogicalPlan] {
           biOver(xs, ys, "cov_pop") }
       case Sum(e, em) =>
         srcOf(e).flatMap(s =>
-          aSums.find(_._2.semanticEquals(s))).flatMap { case (n, _) =>
+          an.sums.find(_._2.semanticEquals(s))).flatMap { case (n, _) =>
           cell(n).map(c =>
             Cast(Sum(c, em).toAggregateExpression(), a.dataType))
         }
       case Min(e) =>
         srcOf(e).flatMap(s =>
-          aMins.find(_._2.semanticEquals(s))).flatMap { case (n, _) =>
+          an.mins.find(_._2.semanticEquals(s))).flatMap { case (n, _) =>
           cell(n).map(c =>
             Cast(Min(c).toAggregateExpression(), a.dataType))
         }
       case Max(e) =>
         srcOf(e).flatMap(s =>
-          aMaxs.find(_._2.semanticEquals(s))).flatMap { case (n, _) =>
+          an.maxs.find(_._2.semanticEquals(s))).flatMap { case (n, _) =>
           cell(n).map(c =>
             Cast(Max(c).toAggregateExpression(), a.dataType))
         }
       case Average(e, em) if a.dataType == types.DoubleType &&
           em != EvalMode.TRY =>
         srcOf(e).flatMap(s =>
-          aAvgs.find(_._3.semanticEquals(s))).flatMap {
+          an.avgs.find(_._3.semanticEquals(s))).flatMap {
           case (sCol, cCol, _) =>
             for { sa <- cell(sCol); ca <- cell(cCol) }
               yield Divide(
@@ -847,10 +901,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
   private def rewriteGroupingSets(agg: Aggregate,
       ex: Expand): Option[LogicalPlan] = {
     val (rel, path, subst, conds) =
-      stripToRelation(ex.child, Map.empty).getOrElse {
-        if (dbg) println(s"[rollup-dbg] gs: no relation under ${ex.child}")
-        return None
-      }
+      stripToRelation(ex.child, Map.empty).getOrElse(return None)
     // predicate-aware grouping sets are out of scope: a Filter under
     // the Expand stays on the base plan (no rewrite)
     if (conds.nonEmpty) return None
@@ -932,31 +983,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
       d: RollupDef): Option[LogicalPlan] = {
     val other = if (baseOnLeft) j.right else j.left
     if (other.exists(_.fastEquals(d.summaryPlan))) return None
-    val sumPlan = freshSummary(d)
-    def summaryAttr(name: String): Option[Attribute] =
-      sumPlan.output.find(_.name == name)
-    val anchoredDims = d.dims.flatMap { case (n, t) =>
-      anchor(t, rel.output).map(n -> _)
-    }
-    if (anchoredDims.size != d.dims.size) return None
-    def anchored(ms: Seq[(String, Expression)]) = ms.flatMap {
-      case (n, t) => anchor(t, rel.output).map(n -> _)
-    }
-    val (aSums, aMins, aMaxs) =
-      (anchored(d.sums), anchored(d.mins), anchored(d.maxs))
-    val aAvgs = d.avgs.flatMap { case (sCol, cCol, t) =>
-      anchor(t, rel.output).map(re => (sCol, cCol, re))
-    }
-    val aStats = d.stats.flatMap { case (sCol, qCol, cCol, t) =>
-      anchor(t, rel.output).map(re => (sCol, qCol, cCol, re))
-    }
-    val aBi = d.bistats.flatMap { case (cells, tx, ty) =>
-      for { ax <- anchor(tx, rel.output)
-            ay <- anchor(ty, rel.output) } yield (cells, ax, ay)
-    }
-    val aDist = d.distincts.flatMap { case (n, t) =>
-      anchor(t, rel.output).map(n -> _)
-    }
+    val an = anchorDef(d, rel).getOrElse(return None)
+    import an.{summaryAttr, sumPlan, dims => anchoredDims}
     val otherIds = other.outputSet
     def overOther(e: Expression): Boolean =
       e.references.subsetOf(otherIds) && e.deterministic
@@ -993,11 +1021,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
       case cs =>
         val rw = cs.map(c => condToSummary(c,
           resolveThrough(_, subst), anchoredDims, summaryAttr)
-          .getOrElse {
-            if (dbg) println(s"[rollup-dbg] jb: base-side filter not " +
-              s"cell-expressible: $c")
-            return None
-          })
+          .getOrElse(return None))
         Some(rw.reduce(And(_, _)))
     }
 
@@ -1011,10 +1035,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
         EqualTo(dimAttrOf(a).get, b)
       case EqualTo(a, b) if overOther(a) && dimAttrOf(b).isDefined =>
         EqualTo(a, dimAttrOf(b).get)
-      case c =>
-        if (dbg) println(s"[rollup-dbg] jb: conjunct not " +
-          s"re-expressible: $c")
-        return None
+      case _ => return None
     }
 
     // grouping: dim-side exprs pass (including COMPUTED dim-side
@@ -1031,10 +1052,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
           if (overOther(rg)) Some(g.canonicalized -> rg)
           else dimAttrOf(g) match {
             case Some(a) => Some(g.canonicalized -> (a: Expression))
-            case None =>
-              if (dbg) println(s"[rollup-dbg] jb: grouping $g → $rg " +
-                "matches no dim and is not dim-side")
-              return None
+            case None => return None
           }
         }
       }.toMap
@@ -1060,8 +1078,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
     }
     def reAggJ(a: AggregateExpression): Option[Expression] =
       reAggShared(a, srcOfJ,
-        n => { usedCellNames += n; summaryAttr(n) }, d,
-        aSums, aMins, aMaxs, aAvgs, aStats, anchoredDims, aBi, aDist,
+        n => { usedCellNames += n; summaryAttr(n) }, an,
         cntOuter = otherPreserved)
     def rewriteExpr(e: Expression): Option[Expression] = e match {
       case a: AggregateExpression => reAggJ(a)
@@ -1078,24 +1095,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
         if (kids.exists(_.isEmpty)) None
         else Some(other2.withNewChildren(kids.map(_.get)))
     }
-    val newAe: Seq[NamedExpression] = agg.aggregateExpressions.map {
-      ne =>
-        val rewritten = ne match {
-          case al: Alias => rewriteExpr(al.child).map(c =>
-            Alias(c, al.name)(exprId = al.exprId,
-              qualifier = al.qualifier))
-          case attr: Attribute => rewriteExpr(attr).map {
-            case same: Attribute if same.exprId == attr.exprId => attr
-            case c => Alias(c, attr.name)(exprId = attr.exprId)
-          }
-          case other2 => rewriteExpr(other2).map(c =>
-            Alias(c, other2.name)(exprId = other2.exprId))
-        }
-        rewritten.getOrElse {
-          if (dbg) println(s"[rollup-dbg] jb: not re-aggregable: $ne")
-          return None
-        }
-    }
+    val newAe = rebuildSelect(agg.aggregateExpressions, rewriteExpr)
+      .getOrElse(return None)
 
     val cond2 = newConjs.reduce(And(_, _))
     val filtered =
@@ -1227,31 +1228,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
       rel: LogicalRelation, subst: Map[ExprId, Expression],
       d: RollupDef): Option[LogicalPlan] = {
     if (ex.child.fastEquals(d.summaryPlan)) return None
-    val sumPlan = freshSummary(d)
-    def summaryAttr(name: String): Option[Attribute] =
-      sumPlan.output.find(_.name == name)
-    val anchoredDims = d.dims.flatMap { case (n, t) =>
-      anchor(t, rel.output).map(n -> _)
-    }
-    if (anchoredDims.size != d.dims.size) return None
-    def anchored(ms: Seq[(String, Expression)]) = ms.flatMap {
-      case (n, t) => anchor(t, rel.output).map(n -> _)
-    }
-    val (aSums, aMins, aMaxs) =
-      (anchored(d.sums), anchored(d.mins), anchored(d.maxs))
-    val aAvgs = d.avgs.flatMap { case (sCol, cCol, t) =>
-      anchor(t, rel.output).map(re => (sCol, cCol, re))
-    }
-    val aStats = d.stats.flatMap { case (sCol, qCol, cCol, t) =>
-      anchor(t, rel.output).map(re => (sCol, qCol, cCol, re))
-    }
-    val aBi = d.bistats.flatMap { case (cells, tx, ty) =>
-      for { ax <- anchor(tx, rel.output)
-            ay <- anchor(ty, rel.output) } yield (cells, ax, ay)
-    }
-    val aDist = d.distincts.flatMap { case (n, t) =>
-      anchor(t, rel.output).map(n -> _)
-    }
+    val an = anchorDef(d, rel).getOrElse(return None)
+    import an.{summaryAttr, sumPlan, dims => anchoredDims}
     def isNullLit(e: Expression) = e match {
       case Literal(null, _) => true
       case _ => false
@@ -1264,10 +1242,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
         val rs = es.filterNot(isNullLit)
           .map(e => stripNoopCasts(resolveThrough(e, subst)))
         val h = rs.head
-        if (!rs.forall(_.semanticEquals(h))) {
-          if (dbg) println(s"[rollup-dbg] gs: mixed slot $i: $rs")
-          return None
-        }
+        if (!rs.forall(_.semanticEquals(h))) return None
         anchoredDims.find(_._2.semanticEquals(h)) match {
           case Some((n, _)) => DimSlot(n)
           // a MEASURE slot must be identical across EVERY projection,
@@ -1279,10 +1254,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
           // projection, over-counting the nulled sets. Spark's
           // grouping-sets planner never nulls measure slots, but the
           // rewrite must not ASSUME that: refuse instead.
-          case None if es.exists(isNullLit) =>
-            if (dbg) println(s"[rollup-dbg] gs: measure slot $i " +
-              "nulled in some projections")
-            return None
+          case None if es.exists(isNullLit) => return None
           case None => MeasureSlot(h)
         }
       }
@@ -1342,10 +1314,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
     }
 
     def reAggX(a: AggregateExpression): Option[Expression] =
-      reAggShared(a, srcOfArg, n => cellAttr(n), d,
-        aSums, aMins, aMaxs, aAvgs, aStats, aBi = aBi,
-        aDistincts = aDist)
-
+      // COUNT(DISTINCT dim) stays with the flat and join-back paths
+      reAggShared(a, srcOfArg, n => cellAttr(n), an.copy(dims = Nil))
 
     def rewriteExprX(e: Expression): Option[Expression] = e match {
       case a: AggregateExpression => reAggX(a)
@@ -1359,24 +1329,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
         if (kids.exists(_.isEmpty)) None
         else Some(other.withNewChildren(kids.map(_.get)))
     }
-    val newAe: Seq[NamedExpression] = agg.aggregateExpressions.map {
-      ne =>
-        val rewritten = ne match {
-          case al: Alias => rewriteExprX(al.child).map(c =>
-            Alias(c, al.name)(exprId = al.exprId,
-              qualifier = al.qualifier))
-          case attr: Attribute => rewriteExprX(attr).map {
-            case same: Attribute if same.exprId == attr.exprId => attr
-            case c => Alias(c, attr.name)(exprId = attr.exprId)
-          }
-          case other => rewriteExprX(other).map(c =>
-            Alias(c, other.name)(exprId = other.exprId))
-        }
-        rewritten.getOrElse {
-          if (dbg) println(s"[rollup-dbg] gs: not re-aggregable: $ne")
-          return None
-        }
-    }
+    val newAe = rebuildSelect(agg.aggregateExpressions, rewriteExprX)
+      .getOrElse(return None)
 
     val newOutput: Seq[Attribute] =
       keepIdx.map(ex.output) ++ extra.values.map(_._1)
@@ -1396,14 +1350,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
 
   private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
     val (rel, path, subst, conds) =
-      stripToRelation(agg.child, Map.empty).getOrElse {
-        if (dbg) println(s"[rollup-dbg] no relation under ${agg.child}")
-        return None
-      }
-    val defs = Option(registry.get(path)).getOrElse {
-      if (dbg) println(s"[rollup-dbg] no registration for $path")
-      return None
-    }
+      stripToRelation(agg.child, Map.empty).getOrElse(return None)
+    val defs = Option(registry.get(path)).getOrElse(return None)
     // lattice descent: defs are kept coarsest-first, so the first
     // qualifying summary is the cheapest one that can answer the query
     defs.view.flatMap(d => rewriteWith(agg, rel, subst, conds, d))
@@ -1420,35 +1368,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
     // after the build; this guard keeps a re-run of the build honest
     if (child.fastEquals(d.summaryPlan)) return None
 
-    val sumPlan = freshSummary(d)
-    def summaryAttr(name: String): Option[Attribute] =
-      sumPlan.output.find(_.name == name)
-
-    val anchoredDims = d.dims.flatMap { case (n, t) =>
-      anchor(t, rel.output).map(n -> _)
-    }
-    if (anchoredDims.size != d.dims.size) {
-      if (dbg) println(s"[rollup-dbg] dim anchoring failed: ${d.dims}")
-      return None
-    }
-    def anchored(ms: Seq[(String, Expression)]) = ms.flatMap {
-      case (n, t) => anchor(t, rel.output).map(n -> _)
-    }
-    val (aSums, aMins, aMaxs) =
-      (anchored(d.sums), anchored(d.mins), anchored(d.maxs))
-    val aAvgs = d.avgs.flatMap { case (sCol, cCol, t) =>
-      anchor(t, rel.output).map(re => (sCol, cCol, re))
-    }
-    val aStats = d.stats.flatMap { case (sCol, qCol, cCol, t) =>
-      anchor(t, rel.output).map(re => (sCol, qCol, cCol, re))
-    }
-    val aBi = d.bistats.flatMap { case (cells, tx, ty) =>
-      for { ax <- anchor(tx, rel.output)
-            ay <- anchor(ty, rel.output) } yield (cells, ax, ay)
-    }
-    val aDist = d.distincts.flatMap { case (n, t) =>
-      anchor(t, rel.output).map(n -> _)
-    }
+    val an = anchorDef(d, rel).getOrElse(return None)
+    import an.{summaryAttr, sumPlan, dims => anchoredDims}
 
     // Predicate-aware extension (round 14, the scaladoc's recorded
     // extension delivered): a Filter between the aggregate and the
@@ -1487,10 +1408,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
       val r = resolveThrough(g, subst)
       anchoredDims.find(_._2.semanticEquals(r)) match {
         case Some((n, _)) => g.canonicalized -> n
-        case None =>
-          if (dbg) println(s"[rollup-dbg] grouping $g → $r matches no " +
-            s"dim among ${anchoredDims.map(_._2)}")
-          return None
+        case None => return None
       }
     }.toMap
 
@@ -1501,8 +1419,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
     // documented at reAggShared, which all three rewrite paths share
     def reAgg(a: AggregateExpression): Option[Expression] =
       reAggShared(a, e => Some(resolveThrough(e, subst)),
-        n => summaryAttr(n), d, aSums, aMins, aMaxs, aAvgs, aStats,
-        anchoredDims, aBi, aDist)
+        n => summaryAttr(n), an)
 
     // rebuild every result expression over the summary, preserving
     // names and ExprIds so the parent plan is untouched. Explicit
@@ -1536,22 +1453,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
         if (kids.exists(_.isEmpty)) None
         else Some(other.withNewChildren(kids.map(_.get)))
     }
-    val newAe: Seq[NamedExpression] = ae.map { ne =>
-      val rewritten = ne match {
-        case al: Alias => rewriteExpr(al.child).map(c =>
-          Alias(c, al.name)(exprId = al.exprId,
-            qualifier = al.qualifier))
-        case attr: Attribute => rewriteExpr(attr).map(c =>
-          Alias(c, attr.name)(exprId = attr.exprId))
-        case other => rewriteExpr(other).map(c =>
-          Alias(c, other.name)(exprId = other.exprId))
-      }
-      rewritten.getOrElse {
-        if (dbg) println(s"[rollup-dbg] select-list expr not " +
-          s"re-aggregable: $ne")
-        return None
-      }
-    }
+    val newAe = rebuildSelect(ae, rewriteExpr).getOrElse(return None)
 
     // grouping expressions over the summary: non-attribute grouping
     // expressions (e.g. to_date(...)) map to their dim column too

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.Vectors
 
-/** Round-18/19 surface rows: LEARNED-cell ANN (k-means IVF with
+/** The LEARNED-cell ANN rows (k-means IVF with
   * adaptive multi-cell probing) — the VERDICT r17 item-5 closure,
   * re-shaped for scale in round 19 (VERDICT r18 item 1). The round-17
   * rung proved the label-cell IVF's candidates scale ∝ rows, but its
@@ -34,7 +34,7 @@ import graft.functions.Vectors
   * assignments, and the only floating point anywhere is the final
   * cosine scoring both engines already share (round 6dp + id
   * tiebreak). */
-object Surface18 {
+object Ann {
 
   /** Micro-unit offset: coordinates are L2-NORMALIZED before
     * quantization (spherical k-means — for COSINE neighbors the cells
@@ -1426,7 +1426,7 @@ object Surface18 {
       // renormalization mirror (squared deviations and their sums are
       // exact integers below 2^53 in DOUBLE, so the fold is exact on
       // both engines; multiply/divide/floor are then identical IEEE
-      // ops — see Surface18.renorm)
+      // ops — see Ann.renorm)
       s"""a$i AS MATERIALIZED (
          |  SELECT vec_id, q, c_id AS cell FROM (
          |    SELECT v.vec_id, v.q, c.c_id,

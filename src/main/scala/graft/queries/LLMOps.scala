@@ -1292,19 +1292,19 @@ object LLMOps {
     * `cell` is None), the cell column carried along. */
   private def probeScored(e0: DataFrame, n: Int,
       cell: Option[String]): DataFrame = {
-    val e = Surface18.withNrm(e0)
-    val q = Surface18.probeFrame(e, n,
+    val e = Ann.withNrm(e0)
+    val q = Ann.probeFrame(e, n,
       cell.map(c => col(c).as(s"q_$c")).toSeq: _*)
     val notSelf = col("vec_id") =!= col("q_id")
     e.join(broadcast(q),
       cell.fold(notSelf)(c => col(c) === col(s"q_$c") && notSelf))
       .select(Seq(col("q_id"), col("vec_id").as("neighbor_id")) ++
-        cell.map(col) :+ Surface18.cosSim(col("nrm")): _*)
+        cell.map(col) :+ Ann.cosSim(col("nrm")): _*)
   }
 
   /** The label-cell IVF top-3 (q_sim_ann_ivf's rows, unordered). */
   private def labelCellTop3(spark: SparkSession, sfDir: String) =
-    Surface18.rankTopK(probeScored(emb(spark, sfDir), 50, Some("label")), 3)
+    Ann.rankTopK(probeScored(emb(spark, sfDir), 50, Some("label")), 3)
 
   /** Brute-force cosine top-k: 10 query vectors broadcast against the
     * full table (the exact baseline every ANN variant is measured
@@ -1313,7 +1313,7 @@ object LLMOps {
   val qSimCosineTopk = Q("q_sim_cosine_topk",
     (spark, sfDir) => {
       import spark.implicits._
-      Surface18.rankTopK(probeScored(emb(spark, sfDir), 10, None), 5)
+      Ann.rankTopK(probeScored(emb(spark, sfDir), 10, None), 5)
         .orderBy($"q_id", $"rank")
     },
     Some("""WITH q AS (
@@ -1375,11 +1375,11 @@ object LLMOps {
     * auditing on a sample is cheap insurance. */
   val qSimAnnRecall = Q("q_sim_ann_recall",
     (spark, sfDir) =>
-      Surface18.recallAt3(spark, sfDir, labelCellTop3(spark, sfDir)),
-    Some(Surface18.recallSql(s"""${Surface18.qvCte}, ann AS (
+      Ann.recallAt3(spark, sfDir, labelCellTop3(spark, sfDir)),
+    Some(Ann.recallSql(s"""${Ann.qvCte}, ann AS (
            |  SELECT p.vec_id AS q_id, e.vec_id AS neighbor_id,
            |    row_number() OVER (PARTITION BY p.vec_id ORDER BY
-           |      ${Surface18.cosSql("p.embedding", "e.embedding")} DESC,
+           |      ${Ann.cosSql("p.embedding", "e.embedding")} DESC,
            |      e.vec_id) AS rank
            |  FROM embeddings e JOIN embeddings p ON p.vec_id < 50
            |    AND e.label = p.label AND e.vec_id <> p.vec_id
@@ -1548,7 +1548,7 @@ object LLMOps {
       val bucket = (0 until 8).map(p =>
         when(Vectors.dotHof($"embedding", plane(p)) >= 0, lit(1L << p))
           .otherwise(0L)).reduce(_ + _)
-      Surface18.rankTopK(probeScored(
+      Ann.rankTopK(probeScored(
           emb(spark, sfDir).withColumn("bkt", bucket), 50, Some("bkt")), 3)
         .orderBy($"q_id", $"rank")
     },

@@ -576,155 +576,8 @@ object Scale {
            |FROM carried WHERE kind = 1
            |ORDER BY purchase_id""".stripMargin))
 
-  /** Build, persist and register the (ship_day, returnflag) rollup of
-    * lineitem once per (session, sfDir) — the materialized summary
-    * E294's rewrite rule redirects coarser aggregates to. ~2.5k cells
-    * per year of days × 3 flags: 5 orders of magnitude smaller than
-    * the base at sf1+, the size ratio that makes aggregate navigation
-    * the single highest-leverage OLAP optimization. */
-  private[queries] def rollupSummary(
-      spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    graft.Memo.cached(spark, s"rollup_summary:$sfDir") {
-      import spark.implicits._
-      val base = Tables.read(spark, sfDir, "lineitem")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-rollup").toString
-      val cells = base.groupBy(to_date($"l_shipdate").as("ship_day"),
-          $"l_returnflag")
-        .agg(sum($"l_quantity".cast("decimal(18,2)")).as("qty_sum"),
-          min($"l_quantity".cast("decimal(18,2)")).as("qty_min"),
-          max($"l_quantity".cast("decimal(18,2)")).as("qty_max"),
-          count(lit(1)).as("cnt"),
-          // AVG support (round 14): per-measure sum + NON-NULL count
-          // — count(price), not count(*), so a nullable measure
-          // re-aggregates exactly
-          sum($"l_extendedprice".cast("double")).as("price_sum"),
-          count($"l_extendedprice").as("price_cnt"),
-          // stddev/var support (round 15): per-measure Σx, Σx² and
-          // non-null count — the three cells that merge to M2 across
-          // any coarser grouping (RollupRewrite's statOverCells).
-          // l_quantity is integral ≤ 50, so both sums are EXACT in
-          // double at any realistic cell size and the condition
-          // number of Σx² − (Σx)²/n is ~3 (see the rule's scaladoc).
-          sum($"l_quantity".cast("double")).as("qty_d_sum"),
-          sum(($"l_quantity" * $"l_quantity").cast("double"))
-            .as("qty_sq_sum"),
-          count($"l_quantity").as("qty_d_cnt"),
-          // corr/covar support (round 15): the six PAIRWISE-complete
-          // moments of (l_quantity, l_extendedprice) — pairwise
-          // because Corr/Cov* skip a row when EITHER side is null
-          // (both are non-null in this fixture, but the guard is the
-          // contract a nullable pair needs)
-          count(when($"l_quantity".isNotNull &&
-            $"l_extendedprice".isNotNull, 1)).as("qp_n"),
-          sum(when($"l_quantity".isNotNull &&
-            $"l_extendedprice".isNotNull,
-            $"l_quantity".cast("double"))).as("qp_sx"),
-          sum(when($"l_quantity".isNotNull &&
-            $"l_extendedprice".isNotNull,
-            $"l_extendedprice".cast("double"))).as("qp_sy"),
-          sum(when($"l_quantity".isNotNull &&
-            $"l_extendedprice".isNotNull,
-            $"l_quantity".cast("double") *
-              $"l_extendedprice".cast("double"))).as("qp_sxy"),
-          sum(when($"l_quantity".isNotNull &&
-            $"l_extendedprice".isNotNull,
-            $"l_quantity".cast("double") *
-              $"l_quantity".cast("double"))).as("qp_sxx"),
-          sum(when($"l_quantity".isNotNull &&
-            $"l_extendedprice".isNotNull,
-            $"l_extendedprice".cast("double") *
-              $"l_extendedprice".cast("double"))).as("qp_syy"),
-          // COUNT(DISTINCT measure) support (round 16): per cell, the
-          // EXACT distinct set of l_orderkey as adaptive bucketed
-          // containers (graft.functions.BitmapMapConstructAgg) —
-          // built in THIS aggregation pass from the raw values, no
-          // per-bucket intermediate, no second grouping level, no
-          // fold-in join. The adaptivity matters at scale: sparse id
-          // domains (the sf10gk grow-keys fixture spreads ~2k orders
-          // per cell over a 10⁹ key range) cost 2 bytes per value,
-          // where fixed 4 KB per-bucket bitmaps measured ~8 MB per
-          // cell and killed the first cut's build.
-          expr("bitmap_map_construct_agg(l_orderkey)").as("okey_bm"),
-          // EXPRESSION measure (round 16): the TPC-H Q1 revenue shape
-          // — a measure need not be a bare column; the registration
-          // template is any deterministic expression over base
-          // columns, re-anchored and semantically matched at rewrite
-          // time, so `sum(l_extendedprice * (1 - l_discount))`
-          // rides the summary however the user spells it
-          // decimal-quantized so the sum is EXACT and associative —
-          // the oracle's different summation order cannot drift
-          sum(($"l_extendedprice" * (lit(1.0) - $"l_discount"))
-            .cast("decimal(18,4)")).as("rev_sum"))
-      cells.write.mode("overwrite").parquet(dir)
-      val summary = spark.read.parquet(dir)
-      graft.plans.RollupRewrite.register(
-        base = base,
-        dims = Seq(
-          "ship_day" -> to_date(base("l_shipdate")),
-          "l_returnflag" -> base("l_returnflag")),
-        sums = Seq(
-          "qty_sum" -> base("l_quantity").cast("decimal(18,2)"),
-          "rev_sum" -> (base("l_extendedprice") *
-            (lit(1.0) - base("l_discount"))).cast("decimal(18,4)")),
-        mins = Seq("qty_min" -> base("l_quantity").cast("decimal(18,2)")),
-        maxs = Seq("qty_max" -> base("l_quantity").cast("decimal(18,2)")),
-        cntCol = "cnt",
-        summary = summary,
-        avgs = Seq(("price_sum", "price_cnt",
-          base("l_extendedprice").cast("double"))),
-        stats = Seq(("qty_d_sum", "qty_sq_sum", "qty_d_cnt",
-          base("l_quantity").cast("double"))),
-        bistats = Seq((graft.plans.RollupRewrite.BiStatCells(
-          "qp_n", "qp_sx", "qp_sy", "qp_sxy", "qp_sxx", "qp_syy"),
-          base("l_quantity").cast("double"),
-          base("l_extendedprice").cast("double"))),
-        distincts = Seq("okey_bm" -> base("l_orderkey")))
-      summary
-    }
-
-  /** E294: **aggregate-navigator rewrite under the gate** — the user
-    * writes the NAIVE per-returnflag aggregate against the base
-    * lineitem table; the registered (ship_day, returnflag) rollup is
-    * strictly finer, so [[graft.plans.RollupRewrite]] redirects the
-    * whole query to the summary parquet: sum-of-sums, sum-of-counts,
-    * min-of-mins, max-of-maxs. The oracle runs the same naive SQL
-    * against the BASE table in DuckDB — the rewrite must be invisible
-    * in the result — and PlanSuite locks the physical evidence (scan
-    * reads the rollup directory, not lineitem.parquet), while
-    * OperatorSuite re-runs with the rule disabled and requires
-    * identical rows. Decimal sums stay exact through both routes
-    * (DECIMAL(18,2) cells re-summed; the rule casts back to the naive
-    * output's wider type). */
-  val qAggRollupRewrite = Q("q_agg_rollup_rewrite",
-    (spark, sfDir) => {
-      import spark.implicits._
-      rollupSummary(spark, sfDir)
-      Tables.read(spark, sfDir, "lineitem")
-        .groupBy($"l_returnflag")
-        .agg(sum($"l_quantity".cast("decimal(18,2)"))
-            .cast("double").as("sum_qty"),
-          min($"l_quantity".cast("decimal(18,2)"))
-            .cast("double").as("min_qty"),
-          max($"l_quantity".cast("decimal(18,2)"))
-            .cast("double").as("max_qty"),
-          count(lit(1)).as("n_items"))
-        .orderBy($"l_returnflag")
-    },
-    Some("""SELECT l_returnflag,
-           |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-           |    AS sum_qty,
-           |  CAST(min(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-           |    AS min_qty,
-           |  CAST(max(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-           |    AS max_qty,
-           |  count(*) AS n_items
-           |FROM lineitem GROUP BY l_returnflag
-           |ORDER BY l_returnflag""".stripMargin))
-
   val all: Seq[Q] = Seq(qJoinRangeBinned, qJoinRangeAuto,
     qWindowRangeFrame, qAggRollup,
     qStreamStatic, qSinkForeach, qStreamUpsert, qTopkPerKey,
-    qJoinSkewAqe, qJoinBloom, qJoinAsofNative, qAggRollupRewrite)
+    qJoinSkewAqe, qJoinBloom, qJoinAsofNative)
 }

@@ -4,10 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 
-/** Round-14 public-surface sweep (VERDICT r13 item 6) — the last
-  * notable SQL/DataFrame verbs with no coverage row after thirteen
-  * rounds, plus the incremental-maintenance twin of E294's rollup
-  * rewrite. One oracle-gated row each; scale notes per query.
+/** Public SQL/DataFrame surface: the SQL and DataFrame verbs with no
+  * row elsewhere (TABLESAMPLE, transpose, EXECUTE IMMEDIATE, pipe
+  * syntax, both parameter-binding styles, collated predicates, …)
+  * plus incremental join-view maintenance. One oracle-gated row each;
+  * scale notes per query.
   */
 object Surface {
 
@@ -217,54 +218,6 @@ object Surface {
            |FROM orders WHERE o_orderkey BETWEEN 1 AND 50
            |ORDER BY o_orderkey""".stripMargin))
 
-  /** E329: **incremental rollup maintenance** — the REFRESH half of
-    * E294's aggregate-navigator story. The materialized (ship_day,
-    * returnflag) rollup is maintained incrementally: the standing
-    * rollup R₀ covers days before a cutoff; when the delta arrives,
-    * the refresh re-aggregates R₀'s CELLS unioned with the delta's
-    * cells — cost ∝ |R₀ cells| + |delta rows|, never |base|, which is
-    * the whole point at 100 TB (the rollup is ~5 orders of magnitude
-    * smaller than the fact table; re-scanning the base to refresh it
-    * would cancel the navigator's win). sum/count cells merge by
-    * SUM, the same distributivity E294 rests on; the cutoff is
-    * derived from the data (min ship day + 60) so the row is
-    * scale-free. The oracle answers the final month×flag query
-    * NAIVELY over the full base — the maintenance path must be
-    * invisible in the result. */
-  val qAggRollupIncremental = Q("q_agg_rollup_incremental",
-    (spark, sfDir) => {
-      import spark.implicits._
-      val base = Tables.read(spark, sfDir, "lineitem")
-        .select(to_date($"l_shipdate").as("day"), $"l_returnflag",
-          $"l_quantity".cast("decimal(18,2)").as("qty"))
-      val cutoff = date_add(min($"day"), 60)
-      val withCut = base.crossJoin(
-        broadcast(base.agg(cutoff.as("cut"))))
-      def cells(df: org.apache.spark.sql.DataFrame) =
-        df.groupBy($"day", $"l_returnflag")
-          .agg(sum($"qty").as("qty_sum"), count(lit(1)).as("cnt"))
-      val r0 = cells(withCut.filter($"day" < $"cut"))
-      val delta = cells(withCut.filter($"day" >= $"cut"))
-      val refreshed = r0.unionByName(delta)
-        .groupBy($"day", $"l_returnflag")
-        .agg(sum($"qty_sum").as("qty_sum"), sum($"cnt").as("cnt"))
-      refreshed
-        .groupBy(date_trunc("month", $"day").cast("date").as("month"),
-          $"l_returnflag")
-        .agg(sum($"qty_sum").cast("double").as("sum_qty"),
-          sum($"cnt").as("n_items"))
-        .orderBy($"month", $"l_returnflag")
-    },
-    Some("""SELECT CAST(date_trunc('month', CAST(l_shipdate AS DATE))
-           |    AS DATE) AS month,
-           |  l_returnflag,
-           |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-           |    AS sum_qty,
-           |  count(*) AS n_items
-           |FROM lineitem
-           |GROUP BY 1, 2
-           |ORDER BY month, l_returnflag""".stripMargin))
-
   /** E330: **EXECUTE IMMEDIATE** (Spark 4) — dynamic SQL with
     * positional `?` parameters bound via USING, the SQL-side twin of
     * the parameterized `spark.sql(sqlText, args)` API. Parameter
@@ -407,43 +360,6 @@ object Surface {
            |FROM orders WHERE o_orderkey BETWEEN 1 AND 50
            |ORDER BY o_orderkey""".stripMargin))
 
-  /** E334: **predicate-aware rollup rewrite** — the recorded
-    * extension of E294 delivered: the user writes the naive FILTERED
-    * aggregate over the base fact table (a ship-day range + a
-    * returnflag IN list — both registered dims), and
-    * [[graft.plans.RollupRewrite]] re-expresses the whole predicate
-    * over the summary's dim columns and answers from the rollup —
-    * now with partition-grade cell pruning, since the moved filter
-    * pushes into the summary scan. At 100 TB this is the difference
-    * between the navigator helping only full-table rollups and
-    * helping every dashboard's date-range query. A measure predicate
-    * (l_quantity > 10) still disables the rewrite — OperatorSuite
-    * locks both routes; the oracle runs the naive SQL on the base. */
-  val qAggRollupFiltered = Q("q_agg_rollup_filtered",
-    (spark, sfDir) => {
-      import spark.implicits._
-      Scale.rollupSummary(spark, sfDir)
-      Tables.read(spark, sfDir, "lineitem")
-        .filter(to_date($"l_shipdate")
-            .between("1996-02-01", "1997-04-30") &&
-          $"l_returnflag".isin("A", "R"))
-        .groupBy($"l_returnflag")
-        .agg(sum($"l_quantity".cast("decimal(18,2)"))
-            .cast("double").as("sum_qty"),
-          count(lit(1)).as("n_items"))
-        .orderBy($"l_returnflag")
-    },
-    Some("""SELECT l_returnflag,
-           |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-           |    AS sum_qty,
-           |  count(*) AS n_items
-           |FROM lineitem
-           |WHERE CAST(l_shipdate AS DATE)
-           |    BETWEEN DATE '1996-02-01' AND DATE '1997-04-30'
-           |  AND l_returnflag IN ('A', 'R')
-           |GROUP BY l_returnflag
-           |ORDER BY l_returnflag""".stripMargin))
-
   /** E335: **incremental join-view maintenance** — the join twin of
     * E329's rollup refresh, the other half of classical IVM: with
     * deltas on BOTH sides of a materialized join view,
@@ -489,40 +405,132 @@ object Surface {
            |FROM orders JOIN customer ON o_custkey = c_custkey
            |GROUP BY 1 ORDER BY nation""".stripMargin))
 
-  /** E337: **AVG through the rollup rewrite** — the re-aggregation
-    * the navigator's scaladoc originally refused, made sound by
-    * registering a PER-MEASURE non-null count beside the cell sum:
-    * avg(price) over the base rewrites to Σ price_sum / Σ price_cnt
-    * over the rollup (count(price) cells, so nullable measures stay
-    * exact). Restricted to DOUBLE measures; house 6dp rounding at the
-    * output edge absorbs the summation-order difference every
-    * distributed double mean carries (the oracle's naive avg has its
-    * own order). A day-range dim filter rides along, composing E334's
-    * predicate-aware path with the new aggregate. */
-  val qAggRollupAvg = Q("q_agg_rollup_avg",
+  /** E339: **SQL pipe syntax** (Spark 4's `|>` operators, the last
+    * notable uncovered SQL dialect surface after round 14's sweep) —
+    * one query chaining the core pipe verbs: `FROM` → `WHERE`
+    * (pre-agg) → `EXTEND` (computed column) → `AGGREGATE … GROUP BY`
+    * → `WHERE` (post-agg, pipe's HAVING) → `ORDER BY` → `LIMIT`.
+    * Pipe syntax is pure parse-time sugar — the analyzer produces the
+    * identical logical plan as the classic form, so every Catalyst
+    * optimization (pushdown through the EXTEND, partial aggregation)
+    * applies unchanged and the 100 TB story is the classic query's.
+    * The oracle is the SAME query spelled classically (DuckDB has no
+    * pipe parser), which is exactly the semantic claim: sugar, not
+    * semantics. */
+  val qSqlPipe = Q("q_sql_pipe",
     (spark, sfDir) => {
-      import spark.implicits._
-      Scale.rollupSummary(spark, sfDir)
-      Tables.read(spark, sfDir, "lineitem")
-        .filter(to_date($"l_shipdate") >= "1996-01-01")
-        .groupBy($"l_returnflag")
-        .agg(round(avg($"l_extendedprice".cast("double")), 6)
-            .as("avg_price"),
-          count(lit(1)).as("n_items"))
-        .orderBy($"l_returnflag")
+      val v = s"pipe_li_${viewRun.incrementAndGet()}"
+      Tables.read(spark, sfDir, "lineitem").createOrReplaceTempView(v)
+      try spark.sql(
+        s"""FROM $v
+           ||> WHERE l_quantity >= 10
+           ||> EXTEND l_extendedprice * (1 - l_discount) AS revenue
+           ||> AGGREGATE
+           |     CAST(round(sum(revenue), 2) AS DOUBLE) AS sum_rev,
+           |     CAST(count(*) AS BIGINT) AS n_items
+           |   GROUP BY l_returnflag, l_linestatus
+           ||> WHERE n_items > 50
+           ||> ORDER BY l_returnflag, l_linestatus
+           ||> LIMIT 5""".stripMargin)
+      finally { spark.catalog.dropTempView(v); () }
     },
-    Some("""SELECT l_returnflag,
-           |  round(avg(CAST(l_extendedprice AS DOUBLE)), 6)
-           |    AS avg_price,
-           |  count(*) AS n_items
+    Some("""SELECT l_returnflag, l_linestatus,
+           |  CAST(round(sum(l_extendedprice * (1 - l_discount)), 2)
+           |    AS DOUBLE) AS sum_rev,
+           |  CAST(count(*) AS BIGINT) AS n_items
            |FROM lineitem
-           |WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
-           |GROUP BY l_returnflag
-           |ORDER BY l_returnflag""".stripMargin))
+           |WHERE l_quantity >= 10
+           |GROUP BY l_returnflag, l_linestatus
+           |HAVING count(*) > 50
+           |ORDER BY l_returnflag, l_linestatus
+           |LIMIT 5""".stripMargin))
+
+  /** E340: **parameterized SQL, both binding styles** — `spark.sql(
+    * text, args)` with NAMED (`:lo`) and POSITIONAL (`?`) markers.
+    * The named style alone is already covered (E-ledger
+    * `q_sql_params`, queries/Scalars.scala); this row adds the
+    * POSITIONAL `Array`-bound form and pins that the two styles are
+    * semantically interchangeable by unioning them over the same
+    * aggregate. Parameters bind as typed literals at parse time —
+    * they are NOT string-spliced, so a hostile value cannot alter the
+    * plan shape. The oracle inlines the literals, which is precisely
+    * the semantics parameter binding promises. Constant-folding sees
+    * the bound literal, so pushdown/pruning behave exactly as with
+    * hand-written constants — nothing changes at 100 TB. */
+  val qSqlParams = Q("q_sql_params_styles",
+    (spark, sfDir) => {
+      val v = s"param_li_${viewRun.incrementAndGet()}"
+      Tables.read(spark, sfDir, "lineitem").createOrReplaceTempView(v)
+      try {
+        val named = spark.sql(
+          s"""SELECT 'named' AS style, l_returnflag,
+             |  CAST(count(*) AS BIGINT) AS n
+             |FROM $v WHERE l_quantity BETWEEN :lo AND :hi
+             |GROUP BY l_returnflag""".stripMargin,
+          Map("lo" -> 5, "hi" -> 15))
+        val positional = spark.sql(
+          s"""SELECT 'positional' AS style, l_returnflag,
+             |  CAST(count(*) AS BIGINT) AS n
+             |FROM $v WHERE l_quantity BETWEEN ? AND ?
+             |GROUP BY l_returnflag""".stripMargin,
+          Array(5, 15))
+        named.unionAll(positional)
+          .orderBy("style", "l_returnflag")
+      } finally { spark.catalog.dropTempView(v); () }
+    },
+    Some("""WITH g AS (
+           |  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n
+           |  FROM lineitem WHERE l_quantity BETWEEN 5 AND 15
+           |  GROUP BY l_returnflag)
+           |SELECT s.style, g.l_returnflag, g.n
+           |FROM (VALUES ('named'), ('positional')) s(style), g
+           |ORDER BY s.style, g.l_returnflag""".stripMargin))
+
+  /** E341: **collation-aware predicates + aggregation** — Spark 4's
+    * `COLLATE UTF8_LCASE` makes equality case-insensitive at the TYPE
+    * level, replacing the classic `lower(col)` normalization (and
+    * unlike `lower()`, a collated column keeps its original bytes —
+    * display text survives while comparison semantics change).
+    * Collated GROUP BY alone is already covered (E246
+    * `q_sql_collation`, queries/Metrics.scala); this row adds collated
+    * EQUALITY/INEQUALITY PREDICATES (the tautology `= x OR <> x` must
+    * keep every row under any collation — a row lost here means the
+    * collated comparison diverged from trichotomy) and a numeric
+    * aggregate riding the collated grouping. The fixture is
+    * consistently-cased, so the query manufactures mixed case
+    * deterministically (even keys upper, odd lower). Grouping on a
+    * collated string hashes its collation key — same shuffle shape as
+    * any string groupBy at scale. */
+  val qSqlCollation = Q("q_sql_collation_pred",
+    (spark, sfDir) => {
+      val v = s"coll_cust_${viewRun.incrementAndGet()}"
+      Tables.read(spark, sfDir, "customer").createOrReplaceTempView(v)
+      try spark.sql(
+        s"""WITH mixed AS (
+           |  SELECT CASE WHEN c_custkey % 2 = 0
+           |           THEN upper(c_mktsegment)
+           |           ELSE lower(c_mktsegment) END AS seg,
+           |         c_acctbal
+           |  FROM $v)
+           |SELECT lower(seg COLLATE UTF8_LCASE) AS segment,
+           |  CAST(count(*) AS BIGINT) AS n,
+           |  CAST(round(sum(c_acctbal), 2) AS DOUBLE) AS bal
+           |FROM mixed
+           |WHERE seg COLLATE UTF8_LCASE = 'bUiLdInG'
+           |   OR seg COLLATE UTF8_LCASE <> 'bUiLdInG'
+           |GROUP BY seg COLLATE UTF8_LCASE
+           |ORDER BY segment""".stripMargin)
+      finally { spark.catalog.dropTempView(v); () }
+    },
+    Some("""SELECT lower(c_mktsegment) AS segment,
+           |  CAST(count(*) AS BIGINT) AS n,
+           |  CAST(round(sum(c_acctbal), 2) AS DOUBLE) AS bal
+           |FROM customer
+           |GROUP BY lower(c_mktsegment)
+           |ORDER BY segment""".stripMargin))
 
   val all: Seq[Q] = Seq(qSqlTablesample, qDfTranspose, qScalarXml,
-    qScalarMaps, qScalarTry, qAggRollupIncremental,
-    qSqlExecuteImmediate, qAggGroupingId, qScalarTsArith,
-    qScalarArrayEdit, qAggRollupFiltered, qJoinIncremental,
-    qAggRollupAvg)
+    qScalarMaps, qScalarTry, qSqlExecuteImmediate, qAggGroupingId,
+    qScalarTsArith, qScalarArrayEdit, qJoinIncremental, qSqlPipe,
+    qSqlParams, qSqlCollation)
 }

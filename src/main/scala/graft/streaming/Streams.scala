@@ -3,11 +3,11 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
-  ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
+  TimerValues, ValueState}
 
 /** Per-user running state for q_stream_state (T6). */
 case class UserAgg(user_id: Long, n_events: Long, ever_error: Boolean)
@@ -92,8 +92,8 @@ class KllStateProcessor
   * device — production sinks would be kafka/parquet with checkpoints.
   */
 /** Shared harness runner: run a streaming DF to completion into a memory
-  * sink, return the materialized table (unique name per invocation — safe
-  * to re-run in one session). */
+  * sink and return the materialized table, or through a `foreachBatch`
+  * writer (unique name per invocation — safe to re-run in one session). */
 object StreamRun {
   private val runId = new AtomicInteger(0)
 
@@ -135,23 +135,25 @@ object StreamRun {
       else System.getProperty("java.io.tmpdir")
     }
 
-  /** Runs `df` to a memory-sink table and returns it. NOTE: the
+  /** Runs `df` to completion through the sink `writer` configures and
+    * returns when every available row is processed. NOTE: the
     * shuffle-partition override below mutates the session-global conf
     * for the duration of the stream (restored in `finally`) — the
     * streaming plan is built against `df`'s own session, so a cloned
     * `newSession` could not govern it. This assumes no concurrent
     * query planning on the same session (true for the sequential
     * Verify/Bench harness); a multi-tenant caller should pass a
-    * dedicated session per stream.
+    * dedicated session per stream. `name` keys the checkpoint, which
+    * is transient and deleted on return.
     *
     * With `availableNow` the query runs under `Trigger.AvailableNow`:
     * it drains exactly the backlog present at start in bounded
     * micro-batches (the source's admission options cap each batch) and
     * TERMINATES ITSELF — `awaitTermination`, not
     * `processAllAvailable`, is then the completion contract. */
-  def toTable(spark: SparkSession, df: DataFrame, base: String,
-      mode: String, availableNow: Boolean = false): DataFrame = {
-    val name = s"${base}_${runId.incrementAndGet()}"
+  private def drain(spark: SparkSession, df: DataFrame, name: String,
+      availableNow: Boolean = false)(
+      writer: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     val ck = s"${ckRoot(spark)}/graft-ck-$name"
@@ -164,9 +166,7 @@ object StreamRun {
     // a failed awaitTermination must not leave a live query either.
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
-      val w = df.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ck)
-        .outputMode(mode)
+      val w = writer(df.writeStream.option("checkpointLocation", ck))
       q = (if (availableNow)
         w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       else w).start()
@@ -178,8 +178,31 @@ object StreamRun {
       spark.conf.set(key, prev)
       Tables.deleteTree(ck)
     }
+  }
+
+  /** Runs `df` to a memory-sink table and returns it (see `drain`). */
+  def toTable(spark: SparkSession, df: DataFrame, base: String,
+      mode: String, availableNow: Boolean = false): DataFrame = {
+    val name = s"${base}_${runId.incrementAndGet()}"
+    drain(spark, df, name, availableNow)(
+      _.format("memory").queryName(name).outputMode(mode))
     spark.table(name)
   }
+
+  /** Runs `df` to completion through `fn`, called once per micro-batch
+    * with the batch and its id (see `drain`). */
+  def foreachBatch(spark: SparkSession, df: DataFrame, base: String)(
+      fn: (DataFrame, Long) => Unit): Unit =
+    drain(spark, df, s"${base}_${runId.incrementAndGet()}")(
+      _.foreachBatch(fn))
+
+  /** The deterministic 50k-row series of `graft.sources.SeriesSource`
+    * as a stream over four slices, admitted 10k rows per micro-batch
+    * (five batches). */
+  def series(spark: SparkSession): DataFrame =
+    spark.readStream.format("graft.sources.SeriesSource")
+      .option("rows", "50000").option("slices", "4")
+      .option("maxRowsPerBatch", "10000").load()
 }
 
 object Streams {
@@ -1148,10 +1171,8 @@ object Streams {
   val qStreamSeries = Q("q_stream_series",
     (spark, sfDir) => {
       import spark.implicits._
-      val src = spark.readStream.format("graft.sources.SeriesSource")
-        .option("rows", "50000").option("slices", "4")
-        .option("maxRowsPerBatch", "10000").load()
-      val agg = src.groupBy(($"i" % 10).cast("int").as("bucket"))
+      val agg = StreamRun.series(spark)
+        .groupBy(($"i" % 10).cast("int").as("bucket"))
         .agg(count(lit(1)).as("n"),
           round(sum($"value"), 4).as("sum_value"))
       StreamRun.toTable(spark, agg, "t_series", "complete")

@@ -53,6 +53,38 @@ class OperatorSuite extends AnyFunSuite {
       """{"z":1,"a":"x"}""")
   }
 
+  test("stream runner: 4 partitions per batch; a failed batch stops, " +
+      "restores and cleans up") {
+    import graft.streaming.StreamRun
+    val key = "spark.sql.shuffle.partitions"
+    val s = spark.newSession()
+    s.conf.set(key, "7")
+    val ckRoot = java.nio.file.Files.createTempDirectory("graft-ck-test")
+    s.conf.set("graft.stream.checkpointRoot", ckRoot.toString)
+    def ckLeft = ckRoot.toFile.list().toSeq
+    try {
+      @volatile var seen = List.empty[String]
+      StreamRun.foreachBatch(s, StreamRun.series(s), "t_runner_ok") {
+        (batch, _) => seen ::= batch.sparkSession.conf.get(key)
+      }
+      assert(seen.size === 5 && seen.forall(_ == "4"), seen)
+      assert(s.conf.get(key) === "7" && ckLeft.isEmpty, ckLeft)
+      val err = intercept[Exception] {
+        StreamRun.foreachBatch(s, StreamRun.series(s), "t_runner_fail") {
+          (_, id) =>
+            if (id == 1L) throw new IllegalStateException("batch 1 fails")
+        }
+      }
+      assert(Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("batch 1 fails")),
+        err)
+      assert(s.streams.active.isEmpty)
+      assert(s.conf.get(key) === "7")
+      assert(ckLeft.isEmpty, ckLeft)
+    } finally Tables.deleteTree(ckRoot.toString)
+  }
+
   test("events.ts reads as microsecond timestamps (µs fixture, native)") {
     val row = Tables.read(spark, sf, "events")
       .select(min($"ts"), max($"ts")).head()
@@ -212,7 +244,7 @@ class OperatorSuite extends AnyFunSuite {
     // (1) the learned-cell index's quality contract at the fixture —
     // the same 0.8 bar the sf10gk AnnRung measures (BASELINE r18);
     // a centroid/assignment regression shows up here first
-    val rec = graft.queries.Surface18.qSimAnnKmeansRecall.fn(spark, sf)
+    val rec = graft.queries.Ann.qSimAnnKmeansRecall.fn(spark, sf)
       .agg(avg($"recall_at_3")).head().getDouble(0)
     assert(rec >= 0.8, s"kmeans recall@3 mean $rec fell under 0.8")
     // (2) kmeans_cell ≡ first of kmeans_nearest_cells over the whole
@@ -220,12 +252,12 @@ class OperatorSuite extends AnyFunSuite {
     // (the k-list is (distance, id)-sorted, so probing starts with
     // the assigned cell); asserted directly, not just claimed
     // (ADVICE r18)
-    val cents = graft.queries.Surface18.kmeansCents(spark, sf)
+    val cents = graft.queries.Ann.kmeansCents(spark, sf)
     val centArr = typedLit(cents.map { case (id, v) =>
       (id, v)
     })
     val mismatches = Tables.read(spark, sf, "embeddings")
-      .select(graft.queries.Surface18.microQuantCol($"embedding")
+      .select(graft.queries.Ann.microQuantCol($"embedding")
         .as("q"))
       .select(
         call_function("kmeans_cell", centArr, $"q").as("c1"),
@@ -234,7 +266,7 @@ class OperatorSuite extends AnyFunSuite {
       .filter($"c1" =!= $"c2").count()
     assert(mismatches == 0L,
       s"kmeans_cell diverged from nearest_cells head on $mismatches rows")
-    val cands = graft.queries.Surface18.kmeansCandCounts(spark, sf)
+    val cands = graft.queries.Ann.kmeansCandCounts(spark, sf)
       .collect()
     assert(cands.length == 50 && cands.forall(_.getLong(1) > 0))
     // (3) clean analysis-time errors on bad inputs
@@ -256,7 +288,7 @@ class OperatorSuite extends AnyFunSuite {
     // table lookup. The claim is BIT-identical integers on every
     // (corpus row × probe) pair — asserted here over the whole
     // fixture, not just on the gated top-k outputs.
-    val S = graft.queries.Surface18
+    val S = graft.queries.Ann
     val books = S.pqCodebooks(spark, sf)
     val dt = S.probeDtabs(spark, sf, books)
     val idsLit = typedLit(books.map(_.map(_._1)))
@@ -284,12 +316,12 @@ class OperatorSuite extends AnyFunSuite {
     // (cells missed by the probe budget, true neighbors ranked past
     // ADC_RERANK by quantization error) — the lock keeps the
     // composition's quality measured, same 0.8 bar as the parents
-    val rec = graft.queries.Surface18.qSimAnnIvfPqRecall.fn(spark, sf)
+    val rec = graft.queries.Ann.qSimAnnIvfPqRecall.fn(spark, sf)
       .agg(avg($"recall_at_3")).head().getDouble(0)
     assert(rec >= 0.8, s"IVF∘PQ recall@3 mean $rec fell under 0.8")
     // the composed output obeys the family contract: ≤3 rows per
     // probe, ranks dense from 1
-    val rows = graft.queries.Surface18.qSimAnnIvfPq.fn(spark, sf)
+    val rows = graft.queries.Ann.qSimAnnIvfPq.fn(spark, sf)
       .groupBy($"q_id")
       .agg(count(lit(1)).as("n"), min($"rank").as("lo"),
         max($"rank").as("hi"))
@@ -305,28 +337,28 @@ class OperatorSuite extends AnyFunSuite {
     // (1) its recall can never fall below the pure-IVF row's —
     // dominance asserted PER PROBE, not on the mean — and (2) its
     // candidate count sits in [ivf_cands, ivf_cands + SCOUT_T]
-    val kmR = graft.queries.Surface18.qSimAnnKmeansRecall.fn(spark, sf)
+    val kmR = graft.queries.Ann.qSimAnnKmeansRecall.fn(spark, sf)
       .select($"q_id", $"recall_at_3".as("km"))
-    val scR = graft.queries.Surface18.qSimAnnScoutRecall.fn(spark, sf)
+    val scR = graft.queries.Ann.qSimAnnScoutRecall.fn(spark, sf)
       .select($"q_id", $"recall_at_3".as("sc"))
     val dom = kmR.join(scR, Seq("q_id"))
       .filter($"sc" < $"km").collect()
     assert(dom.isEmpty,
       s"scout recall fell below pure IVF on probes: ${dom.mkString(",")}")
-    val kmC = graft.queries.Surface18.kmeansCandCounts(spark, sf)
+    val kmC = graft.queries.Ann.kmeansCandCounts(spark, sf)
       .select($"q_id", $"n_cand".as("ivf"))
-    val scC = graft.queries.Surface18.scoutCandCounts(spark, sf)
+    val scC = graft.queries.Ann.scoutCandCounts(spark, sf)
       .select($"q_id", $"n_cand".as("un"))
     // kmeansCandCounts counts the probed CENSUS (which includes the
     // probe's own row); the union counts scored pairs (self excluded)
     // — hence the −1 on the lower bound
     val bad = kmC.join(scC, Seq("q_id"))
       .filter($"un" < $"ivf" - 1 ||
-        $"un" > $"ivf" + graft.queries.Surface18.SCOUT_T).collect()
+        $"un" > $"ivf" + graft.queries.Ann.SCOUT_T).collect()
     assert(bad.isEmpty,
       s"scout candidate union out of [ivf-1, ivf+T]: ${bad.mkString(",")}")
     // family output contract: ≤3 rows per probe, ranks dense from 1
-    val rows = graft.queries.Surface18.qSimAnnScout.fn(spark, sf)
+    val rows = graft.queries.Ann.qSimAnnScout.fn(spark, sf)
       .groupBy($"q_id")
       .agg(count(lit(1)).as("n"), min($"rank").as("lo"),
         max($"rank").as("hi"))
@@ -3779,7 +3811,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    graft.queries.Scale.qAggRollupRewrite.fn(spark, sf).collect() // register
+    graft.queries.Rollups.qAggRollupRewrite.fn(spark, sf).collect() // register
     val base = Tables.read(spark, sf, "lineitem")
     // (1) count(null) = 0 everywhere
     val cn = base.groupBy($"l_returnflag")
@@ -3830,7 +3862,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    def run() = graft.queries.Surface.qAggRollupFiltered.fn(spark, sf)
+    def run() = graft.queries.Rollups.qAggRollupFiltered.fn(spark, sf)
     val onRows = run().collect().toSeq
     assert(onRows.nonEmpty)
     val df = run(); df.collect()
@@ -3849,7 +3881,7 @@ class OperatorSuite extends AnyFunSuite {
     } finally spark.conf.unset(graft.plans.RollupRewrite.EnabledConf)
     // E337: AVG (double measure, per-measure non-null count) also
     // rides the rollup — scan lock + kill-switch value equality
-    def runAvg() = graft.queries.Surface.qAggRollupAvg.fn(spark, sf)
+    def runAvg() = graft.queries.Rollups.qAggRollupAvg.fn(spark, sf)
     val avgOn = runAvg().collect().toSeq
     val avgDf = runAvg(); avgDf.collect()
     assert(walk(avgDf.queryExecution.executedPlan)
@@ -3874,7 +3906,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    def run() = graft.queries.Surface15.qAggRollupStats.fn(spark, sf)
+    def run() = graft.queries.Rollups.qAggRollupStats.fn(spark, sf)
     val onRows = run().collect().toSeq
     assert(onRows.nonEmpty)
     val df = run(); df.collect()
@@ -3908,7 +3940,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    val df = graft.queries.Surface15.qStreamRollupE2e.fn(spark, sf)
+    val df = graft.queries.Rollups.qStreamRollupE2e.fn(spark, sf)
     val onRows = df.collect().toSeq
     assert(onRows.size == 10)
     val scans = walk(df.queryExecution.executedPlan)
@@ -3997,7 +4029,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    val df = graft.queries.Surface15.qAggRollupLattice.fn(spark, sf)
+    val df = graft.queries.Rollups.qAggRollupLattice.fn(spark, sf)
     val onRows = df.collect().toSeq
     assert(onRows.size === 5)
     val scans = walk(df.queryExecution.executedPlan)
@@ -4058,7 +4090,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    val df = graft.queries.Surface15
+    val df = graft.queries.Rollups
       .qAggRollupLatticeFiltered.fn(spark, sf)
     val onRows = df.collect().toSeq
     assert(onRows.size === 5)
@@ -4072,7 +4104,7 @@ class OperatorSuite extends AnyFunSuite {
       s"must not fall back to the base scan, got $scans")
     spark.conf.set(graft.plans.RollupRewrite.EnabledConf, "false")
     try {
-      val off = graft.queries.Surface15
+      val off = graft.queries.Rollups
         .qAggRollupLatticeFiltered.fn(spark, sf)
       assert(off.collect().toSeq === onRows,
         "filtered descent must be invisible in values")
@@ -4094,7 +4126,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    val df = graft.queries.Surface15.qAggRollupCube.fn(spark, sf)
+    val df = graft.queries.Rollups.qAggRollupCube.fn(spark, sf)
     val onRows = df.collect().toSeq
     assert(onRows.exists(r => r.getString(0) == "all" &&
       r.getString(1) == "all"), "grand-total row must exist")
@@ -4105,7 +4137,7 @@ class OperatorSuite extends AnyFunSuite {
       s"cube must not scan the base, got $scans")
     spark.conf.set(graft.plans.RollupRewrite.EnabledConf, "false")
     try {
-      val off = graft.queries.Surface15.qAggRollupCube.fn(spark, sf)
+      val off = graft.queries.Rollups.qAggRollupCube.fn(spark, sf)
       assert(off.collect().toSeq === onRows,
         "cube navigation must be invisible in values")
     } finally spark.conf.unset(graft.plans.RollupRewrite.EnabledConf)
@@ -4124,7 +4156,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    val df = graft.queries.Surface15.qAggRollupJoinback.fn(spark, sf)
+    val df = graft.queries.Rollups.qAggRollupJoinback.fn(spark, sf)
     val onRows = df.collect().toSeq
     assert(onRows.size === 5)
     val scans = walk(df.queryExecution.executedPlan)
@@ -4136,7 +4168,7 @@ class OperatorSuite extends AnyFunSuite {
       s"the dimension side must still be the real table, got $scans")
     spark.conf.set(graft.plans.RollupRewrite.EnabledConf, "false")
     try {
-      val off = graft.queries.Surface15.qAggRollupJoinback.fn(spark, sf)
+      val off = graft.queries.Rollups.qAggRollupJoinback.fn(spark, sf)
       assert(off.collect().toSeq === onRows,
         "join-back must be invisible in values")
     } finally spark.conf.unset(graft.plans.RollupRewrite.EnabledConf)
@@ -4381,7 +4413,7 @@ class OperatorSuite extends AnyFunSuite {
     }
     // E350: count(DISTINCT day) forces the fine summary (day ∈ its
     // dims) even though the grouping alone is coarse-satisfiable
-    val dd = graft.queries.Surface15.qAggRollupDistinct.fn(spark, sf)
+    val dd = graft.queries.Rollups.qAggRollupDistinct.fn(spark, sf)
     val ddRows = dd.collect().toSeq
     val ddScans = walk(dd.queryExecution.executedPlan)
     assert(ddScans.exists(_.contains("graft-rollup-lat-fine")),
@@ -4396,7 +4428,7 @@ class OperatorSuite extends AnyFunSuite {
       .exists(_.contains("orders.parquet")),
       "distinct over a measure must refuse the rewrite")
     // E351: HAVING filters the re-aggregated coarse cells
-    val hv = graft.queries.Surface15.qAggRollupHaving.fn(spark, sf)
+    val hv = graft.queries.Rollups.qAggRollupHaving.fn(spark, sf)
     val hvRows = hv.collect().toSeq
     val hvScans = walk(hv.queryExecution.executedPlan)
     assert(hvScans.exists(_.contains("graft-rollup-lat-coarse")),
@@ -4404,9 +4436,9 @@ class OperatorSuite extends AnyFunSuite {
     // rule-off equality for both
     spark.conf.set(graft.plans.RollupRewrite.EnabledConf, "false")
     try {
-      assert(graft.queries.Surface15.qAggRollupDistinct.fn(spark, sf)
+      assert(graft.queries.Rollups.qAggRollupDistinct.fn(spark, sf)
         .collect().toSeq === ddRows)
-      assert(graft.queries.Surface15.qAggRollupHaving.fn(spark, sf)
+      assert(graft.queries.Rollups.qAggRollupHaving.fn(spark, sf)
         .collect().toSeq === hvRows)
     } finally spark.conf.unset(graft.plans.RollupRewrite.EnabledConf)
   }
@@ -4422,7 +4454,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    val df = graft.queries.Surface15.qAggRollupCorr.fn(spark, sf)
+    val df = graft.queries.Rollups.qAggRollupCorr.fn(spark, sf)
     val onRows = df.collect().toSeq
     assert(onRows.size === 3)
     val scans = walk(df.queryExecution.executedPlan)
@@ -4432,7 +4464,7 @@ class OperatorSuite extends AnyFunSuite {
       s"corr query must not scan the base, got $scans")
     spark.conf.set(graft.plans.RollupRewrite.EnabledConf, "false")
     try {
-      val off = graft.queries.Surface15.qAggRollupCorr.fn(spark, sf)
+      val off = graft.queries.Rollups.qAggRollupCorr.fn(spark, sf)
         .collect().toSeq
       // rounded outputs compare exactly; the underlying doubles agree
       // to ~1e-12 (exact-integral quantities, modest co-moment κ)
@@ -4619,7 +4651,7 @@ class OperatorSuite extends AnyFunSuite {
       s"legacy bitmap-cell distinct count $bijl != ${lvals.distinct.size}")
     // (2) the gated fixture fires: scan redirect on the registered
     // lineitem rollup, rule-on/off value equality
-    def q() = graft.queries.Surface16
+    def q() = graft.queries.Rollups
       .qAggRollupDistinctMeasure.fn(spark, sf) // fn registers the rollup
     val dOn = q(); val onRows = dOn.collect().map(_.toSeq.toVector)
     assert(walk(dOn.queryExecution.executedPlan)
@@ -4632,7 +4664,7 @@ class OperatorSuite extends AnyFunSuite {
       "rewrite must be invisible in values")
     // (3) sum(DISTINCT) over a REGISTERED integral measure now rides
     // the same cells (E360), value-equal to the naive plan...
-    def sq() = graft.queries.Surface16
+    def sq() = graft.queries.Rollups
       .qAggRollupSumDistinct.fn(spark, sf)
     val sOn = sq(); val sOnRows = sOn.collect().map(_.toSeq.toVector)
     assert(walk(sOn.queryExecution.executedPlan)
@@ -4680,7 +4712,7 @@ class OperatorSuite extends AnyFunSuite {
     }
     // (1) the gated fixture: customer LEFT JOIN orders answered from
     // the bycust-grain cells, invisible in values
-    def q() = graft.queries.Surface16
+    def q() = graft.queries.Rollups
       .qAggRollupJoinbackOuter.fn(spark, sf) // fn registers the lattice
     val dOn = q(); val onRows = dOn.collect().map(_.toSeq.toVector)
     assert(walk(dOn.queryExecution.executedPlan)
@@ -4723,7 +4755,7 @@ class OperatorSuite extends AnyFunSuite {
       case other => other.children.flatMap(walk)
     }
     val (baseDir, fineDir, coarseDir) =
-      graft.queries.Surface16.incrLattice(spark, sf)
+      graft.queries.Rollups.incrLattice(spark, sf)
     val base = spark.read.parquet(baseDir)
     def norm(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.collect().map(_.toSeq.toVector).toSeq.sortBy(_.mkString("|"))
@@ -4760,7 +4792,7 @@ class OperatorSuite extends AnyFunSuite {
       "coarse store must equal full recompute from base")
     // (3) descent: the shard-grain gated query reads the COARSE cells;
     // a (g1, shard)-grain query reads the FINE cells; neither reads base
-    val qc = graft.queries.Surface16.qAggRollupLatticeIncr.fn(spark, sf)
+    val qc = graft.queries.Rollups.qAggRollupLatticeIncr.fn(spark, sf)
     qc.collect()
     val scansC = walk(qc.queryExecution.executedPlan)
     assert(scansC.exists(_.contains("coarse_v")) &&
@@ -4798,8 +4830,8 @@ class OperatorSuite extends AnyFunSuite {
         finally spark.conf.unset(graft.plans.RollupRewrite.EnabledConf)
       assert(on.toSeq == off.toSeq, s"${q.name}: rewrite visible")
     }
-    onOff(graft.queries.Surface16.qAggRollupCountMeasure)
-    onOff(graft.queries.Surface16.qAggRollupExprMeasure)
+    onOff(graft.queries.Rollups.qAggRollupCountMeasure)
+    onOff(graft.queries.Rollups.qAggRollupExprMeasure)
     // count(dim) must still REFUSE: over cells it would count cells,
     // not base rows, and no cell records per-dim non-null row counts
     val cd = Tables.read(spark, sf, "lineitem")
@@ -4821,7 +4853,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    def run() = graft.queries.Surface16.qAggRollupBuildApi.fn(spark, sf)
+    def run() = graft.queries.Rollups.qAggRollupBuildApi.fn(spark, sf)
     val dOn = run(); val on = dOn.collect().map(_.toSeq.toVector)
     assert(walk(dOn.queryExecution.executedPlan)
       .exists(_.contains("graft-rollup-events")),
@@ -5097,7 +5129,7 @@ class OperatorSuite extends AnyFunSuite {
       df.collect() // force AQE finalization
       walk(df.queryExecution.executedPlan)
     }
-    def run() = graft.queries.Scale.qAggRollupRewrite.fn(spark, sf)
+    def run() = graft.queries.Rollups.qAggRollupRewrite.fn(spark, sf)
     val on = run()
     val onRows = on.collect().toSeq
     val onScans = scans(run())
@@ -5325,7 +5357,7 @@ class OperatorSuite extends AnyFunSuite {
     // a replayed batch rewrites its own directory instead of appending
     // duplicates. Simulate the replay: rewrite batch=0 with its own
     // contents and assert the zone's row count is unchanged.
-    val (baseDir, _, _) = graft.queries.Surface16.incrLattice(spark, sf)
+    val (baseDir, _, _) = graft.queries.Rollups.incrLattice(spark, sf)
     val before = spark.read.parquet(baseDir).count()
     val b0 = spark.read.parquet(s"$baseDir/batch=0")
       .localCheckpoint(true)
@@ -5361,7 +5393,7 @@ class OperatorSuite extends AnyFunSuite {
     // merge hint; the ≥8-collapse fired lock lives in the dayfilter
     // test below (collapse ≈ 10); the collapse-10³ payoff is recorded
     // in BASELINE.md, "Collapse-factor guard"
-    def q() = graft.queries.Surface17
+    def q() = graft.queries.Rollups
       .qAggRollupJoinbackPreagg.fn(spark, sf)
     val df = q()
     val rows = df.collect()
@@ -5398,7 +5430,7 @@ class OperatorSuite extends AnyFunSuite {
     // (3) the honest floor: the KEY-GRAIN join-back (E349) gets NO
     // pre-aggregation — used dims == registered dims, nothing to
     // collapse — its plan joins the summary scan directly
-    val jb = graft.queries.Surface15.qAggRollupJoinback.fn(spark, sf)
+    val jb = graft.queries.Rollups.qAggRollupJoinback.fn(spark, sf)
     jb.collect()
     assert(walk(jb.queryExecution.executedPlan)
       .exists(_.contains("graft-rollup-lat-bycust")),
@@ -5420,7 +5452,7 @@ class OperatorSuite extends AnyFunSuite {
       case other => other.children.flatMap(walk)
     }
     val (accDir, cellsDir, dropsDir) =
-      graft.queries.Surface17.lateLattice(spark, sf)
+      graft.queries.Rollups.lateLattice(spark, sf)
     // (1) maintained cells ≡ full recompute from the accepted zone —
     // including the partitions late rows re-opened
     val acc = spark.read.parquet(accDir)
@@ -5479,7 +5511,7 @@ class OperatorSuite extends AnyFunSuite {
     assert(reopened > 0,
       "late-but-admissible rows must land in earlier shards")
     // (4) the gated query rides the maintained cells
-    val q = graft.queries.Surface17.qAggRollupLatticeLate.fn(spark, sf)
+    val q = graft.queries.Rollups.qAggRollupLatticeLate.fn(spark, sf)
     q.collect()
     assert(walk(q.queryExecution.executedPlan)
       .exists(_.contains("cells_v")),
@@ -5568,7 +5600,7 @@ class OperatorSuite extends AnyFunSuite {
       case f: FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(scansOf)
     }
-    def q() = graft.queries.Surface17
+    def q() = graft.queries.Rollups
       .qAggRollupJoinbackDayfilter.fn(spark, sf)
     val df = q()
     val rows = df.collect()

@@ -591,7 +591,7 @@ class PlanSuite extends AnyFunSuite {
     // (≤ 50·SCOUT_T, the driver-scalar discipline), so that leg's
     // plan is inspected directly: ReadSchema must carry the code-row
     // columns only — never the raw embedding column
-    val legP = graft.queries.Surface18.scoutHits(spark, sf)
+    val legP = graft.queries.Ann.scoutHits(spark, sf)
       .queryExecution.executedPlan.toString
     assert(legP.contains("ReadSchema: struct<vec_id:bigint," +
         "codes:array<bigint>,cell:bigint>"),
