@@ -41,6 +41,30 @@ import org.apache.spark.sql.SparkSession
   *    landing in compile garbage they catch those live pages: with
   *    isolation off alone, peak heap per `query_mix` pass rose from 112
   *    to 142 MB; with 4 MB pages it is 102 MB.
+  *
+  * Two more fixed values keep local files from forking a process each.
+  * Without libhadoop (`NativeIO` unavailable, as in tarball and pip
+  * Spark installs) Hadoop's `file:` filesystem runs `chmod` for every
+  * file and directory it creates and `readlink` for every FileContext
+  * rename, about 3–4 ms a process start. JFR `jdk.ProcessStart`
+  * counted 9 per 4CE CSV output and about 150 per `q_stream_tumbling`
+  * drain; with the two values both are 0, and a full sf0.01 Verify or
+  * test-suite run starts no `chmod` or `readlink` outside the
+  * filesystem tests' own Hadoop comparisons. Traced `query_mix` (seed 4402, local[4], 4 cores):
+  * `stream.trigger_ms` 645 → 290, `stream.state_commit_ms` 354 → 39,
+  * `stream.wal_commit_ms` 37.5 → 3, `stream.commit_offsets_ms` 39 → 5,
+  * `stream.query_planning_ms` 137 → 31 (planning writes the state
+  * schema and metadata files):
+  *  - `spark.hadoop.fs.file.impl`: the FileSystem API of the CSV and
+  *    parquet sinks and sources, [[graft.sources.ForkFreeLocalFileSystem]];
+  *  - `spark.hadoop.fs.AbstractFileSystem.file.impl`: the FileContext
+  *    API of the stream checkpoints, [[graft.sources.ForkFreeLocalFs]].
+  * Both keep Hadoop's checksummed wrappers (`.crc` files, verified
+  * reads) and swap only the raw filesystem's `setPermission` (nio
+  * `setPosixFilePermissions`) and `getFileLinkStatus` (no `readlink`
+  * unless the path is a symlink). The `file:` FileSystem is cached per
+  * JVM by scheme and user, so these must be set before anything in the
+  * JVM asks Hadoop for it: opening the session first does that.
   */
 object Sessions {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -76,6 +100,11 @@ object Sessions {
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.buffer.pageSize", "4m")
+      // no process per local file (see the scaladoc above)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.ForkFreeLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

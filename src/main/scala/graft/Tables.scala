@@ -303,6 +303,23 @@ object Tables {
     }
   }
 
+  /** Directories [[scratchDir]] made; one shutdown hook deletes them. */
+  private[graft] val scratchDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val scratchHook =
+    sys.addShutdownHook(scratchDirs.forEach(d => deleteTree(d)))
+
+  /** A new directory under the JVM temp dir, named `prefix` plus a
+    * unique suffix, that is deleted with [[deleteTree]] when the JVM
+    * exits. For stores that live as long as the JVM's memo entries (the
+    * navigator summaries), which no `finally` can clear. */
+  def scratchDir(prefix: String): String = {
+    scratchHook
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    scratchDirs.add(dir)
+    dir
+  }
+
   /** Deletes `path` and everything under it, best effort: what cannot
     * be deleted stays, so a `finally` that clears a scratch directory
     * never masks the error it is unwinding. */

@@ -43,8 +43,7 @@ object Rollups {
     graft.Memo.cached(spark, s"rollup_summary:$sfDir") {
       import spark.implicits._
       val base = Tables.read(spark, sfDir, "lineitem")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-rollup").toString
+      val dir = Tables.scratchDir("graft-rollup")
       val cells = base.groupBy(to_date($"l_shipdate").as("ship_day"),
           $"l_returnflag")
         .agg(sum($"l_quantity".cast("decimal(18,2)")).as("qty_sum"),
@@ -373,8 +372,7 @@ object Rollups {
   val qStreamRollupE2e = Q("q_stream_rollup_e2e",
     (spark, sfDir) => {
       import spark.implicits._
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-e2e-rollup").toString
+      val root = Tables.scratchDir("graft-e2e-rollup")
       val baseDir = s"$root/base"
       @volatile var cellsDir: String = null
       StreamRun.foreachBatch(spark, StreamRun.series(spark),
@@ -443,7 +441,7 @@ object Rollups {
   private def priceSummary(spark: SparkSession, base: DataFrame,
       prefix: String, dims: Seq[(String, Column)]): DataFrame = {
     val price = base("o_totalprice").cast("decimal(18,2)")
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val dir = Tables.scratchDir(prefix)
     base.groupBy(dims.map { case (n, c) => c.as(n) }: _*)
       .agg(sum(price).as("price_sum"), min(price).as("price_min"),
         max(price).as("price_max"), count(lit(1)).as("cnt"))
@@ -468,8 +466,7 @@ object Rollups {
       val fine = priceSummary(spark, base, "graft-rollup-lat-fine",
         Seq("o_day" -> to_date(base("o_orderdate")),
           "o_orderpriority" -> base("o_orderpriority")))
-      val coarseDir = java.nio.file.Files
-        .createTempDirectory("graft-rollup-lat-coarse").toString
+      val coarseDir = Tables.scratchDir("graft-rollup-lat-coarse")
       fine.groupBy($"o_orderpriority")
         .agg(sum($"price_sum").as("price_sum"),
           min($"price_min").as("price_min"),
@@ -891,8 +888,7 @@ object Rollups {
       spark: SparkSession, sfDir: String): (String, String, String) = {
     graft.Memo.value(spark, s"lat_incr:$sfDir") {
       import spark.implicits._
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-lat-incr").toString
+      val root = Tables.scratchDir("graft-lat-incr")
       val baseDir = s"$root/base"
       @volatile var fineDir: String = null
       @volatile var coarseDir: String = null
@@ -1087,8 +1083,7 @@ object Rollups {
       import spark.implicits._
       val base = Tables.read(spark, sfDir, "events")
       graft.Memo.once(spark, s"rollup_events:$sfDir") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-rollup-events").toString
+        val dir = Tables.scratchDir("graft-rollup-events")
         graft.plans.RollupBuild.materialize(spark, base, dir,
           dims = Seq("day" -> to_date($"ts"),
             "event_type" -> $"event_type"),
@@ -1323,8 +1318,7 @@ object Rollups {
       spark: SparkSession, sfDir: String): (String, String, String) = {
     graft.Memo.value(spark, s"lat_late:$sfDir") {
       import spark.implicits._
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-lat-late").toString
+      val root = Tables.scratchDir("graft-lat-late")
       val accDir = s"$root/accepted"
       val dropsDir = s"$root/drops"
       @volatile var cellsDir: String = null
@@ -1489,8 +1483,7 @@ object Rollups {
     graft.Memo.cached(spark, s"rollup_jb_daycust:$sfDir") {
       import spark.implicits._
       val base = Tables.read(spark, sfDir, "orders")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-rollup-daycust").toString
+      val dir = Tables.scratchDir("graft-rollup-daycust")
       base.groupBy(to_date($"o_orderdate").as("o_day"), $"o_custkey")
         .agg(sum($"o_totalprice".cast("decimal(18,2)"))
             .as("price_sum"),

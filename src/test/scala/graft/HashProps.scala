@@ -158,8 +158,7 @@ object HashProps extends Properties("graft") {
     forAll(Gen.nonEmptyListOf(Gen.zip(
       Gen.choose(-2208988800000000L, 4102444800000000L), // 1900..2100
       Gen.choose(-999L, 999L)))) { rows =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-prop-ts")
+      val dir = java.nio.file.Paths.get(Tables.scratchDir("graft-prop-ts"))
       val (usDir, nsDir) =
         (dir.resolve("us").toString, dir.resolve("ns").toString)
       val base = rows.zipWithIndex.map { case ((m, d), i) =>
