@@ -428,9 +428,6 @@ object Bench {
     // "SparkEnv not active" WARN + stack trace is exactly the post-line
     // noise that beheaded the r9 line inside the harness's tail window.
     spark.sparkContext.setLogLevel("OFF")
-    // no cached relation outlives the sweep (VERDICT r10 item 5)
-    try graft.queries.Extras.releaseCacheReuse(spark)
-    catch { case _: Throwable => () }
     try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     catch { case _: Throwable => () }
     spark.stop()

@@ -1,25 +1,29 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
 
-/** Session-scoped memoization of persisted DataFrames — the Spark analog
-  * of the reference's temp-table barrier for intermediates reused by
-  * several queries (cohort, shingle table).
+/** Session-scoped memoization of persisted DataFrames, scalars and
+  * side-effecting loads — the Spark analog of the reference's temp-table
+  * barrier for intermediates reused by several queries (cohort, shingle
+  * table).
   *
-  * Keys hold the `SparkSession` itself (reference equality), not
+  * One cell table holds every entry, keyed by (scope, key): the scope is
+  * the `SparkSession` itself (reference equality) for [[cached]],
+  * [[value]] and [[once]], and its `SparkContext` for [[onceJvm]]. Not
   * `System.identityHashCode(session)`: an identity hash can be reused
   * after the original session is GC'd, which could hand a caller a
-  * DataFrame bound to a dead session (ADVICE r2 item 4). Entries are
-  * evicted when the owning session's context stops (application end), so
-  * cached blocks are not pinned past the session's life. Sessions that
-  * stop while sharing a still-live SparkContext keep their entries until
-  * that context ends — acceptable for this engine's one-context-per-JVM
-  * deployments.
+  * DataFrame bound to a dead session (ADVICE r2 item 4). One listener per
+  * context evicts the context's entries and those of all its sessions
+  * when that context stops (application end), so cached blocks are not
+  * pinned past the session's life. Sessions that stop while sharing a
+  * still-live SparkContext keep their entries until that context ends —
+  * acceptable for this engine's one-context-per-JVM deployments.
   *
   * Concurrency: the map stores a lazy HOLDER, not the built value, so a
   * build/load runs EXACTLY ONCE per key even when several queries
@@ -51,13 +55,8 @@ object Memo {
     def settled: Option[A] = synchronized(peek)
   }
 
-  private val entries = TrieMap.empty[(SparkSession, String), Cell[DataFrame]]
-  private val actions = TrieMap.empty[(SparkSession, String), Cell[Unit]]
-  private val values = TrieMap.empty[(SparkSession, String), Cell[Any]]
-  private val jvmActions =
-    TrieMap.empty[(org.apache.spark.SparkContext, String), Cell[Unit]]
-  private val hooked = TrieMap.empty[SparkSession, Unit]
-  private val hookedJvm = TrieMap.empty[org.apache.spark.SparkContext, Unit]
+  private val cells = TrieMap.empty[(AnyRef, String), Cell[Any]]
+  private val hooked = TrieMap.empty[SparkContext, Unit]
   // builds actually EXECUTED (not cache hits) — Bench snapshots this
   // around each timed run to attribute memo-rebuild cost per query
   // (VERDICT r7 item 1: run1/run2 spread must be explainable)
@@ -66,42 +65,23 @@ object Memo {
   /** Build-once per (session, key); the result is persisted
     * MEMORY_AND_DISK. */
   def cached(spark: SparkSession, key: String)
-      (build: => DataFrame): DataFrame = {
-    hook(spark)
-    entries.getOrElseUpdate((spark, key), new Cell(() => {
-      buildsDone.incrementAndGet()
-      build.persist(StorageLevel.MEMORY_AND_DISK)
-    })).value
-  }
+      (build: => DataFrame): DataFrame =
+    cell(spark.sparkContext, spark, key)(
+      build.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Compute a driver-side SCALAR once per (session, key) — corpus row
     * counts and sketch-sizing constants that gate a query's plan shape
     * (verify-form switch, CMS width). Without this every invocation of
     * the gated query re-runs a count() job for a value that is constant
-    * per (session, sfDir) (ADVICE r17 low). Same once-only Cell
-    * discipline and context-end eviction as [[cached]]. */
-  def value[A](spark: SparkSession, key: String)(build: => A): A = {
-    hook(spark)
-    values.getOrElseUpdate((spark, key), new Cell(() => {
-      buildsDone.incrementAndGet()
-      build
-    })).value.asInstanceOf[A]
-  }
+    * per (session, sfDir) (ADVICE r17 low). */
+  def value[A](spark: SparkSession, key: String)(build: => A): A =
+    cell(spark.sparkContext, spark, key)(build)
 
   /** Run a side-effecting load (Derby fill, bucketed-table CTAS) once
-    * per (session, key). Entries follow [[cached]]'s eviction contract
-    * (the object doc above): they are released when the owning
-    * session's CONTEXT ends — sessions stopped while sharing a
-    * still-live SparkContext keep their entries until that context
-    * ends, the accepted bound for this engine's one-context-per-JVM
-    * deployments (ADVICE r6 item 4). */
-  def once(spark: SparkSession, key: String)(load: => Unit): Unit = {
-    hook(spark)
-    actions.getOrElseUpdate((spark, key), new Cell(() => {
-      buildsDone.incrementAndGet()
-      load
-    })).value
-  }
+    * per (session, key). Entries are released when the owning session's
+    * CONTEXT ends (the object doc above; ADVICE r6 item 4). */
+  def once(spark: SparkSession, key: String)(load: => Unit): Unit =
+    cell(spark.sparkContext, spark, key)(load)
 
   /** Run a side-effecting load once per (SparkContext, key) — the
     * JVM-GLOBAL variant of [[once]], for side stores whose backing state
@@ -117,14 +97,10 @@ object Memo {
     * The in-place DROP+rewrite inside such a load is safe exactly
     * because it can only run on true first touch, when no reader can
     * hold a listing yet (stale files from a PREVIOUS JVM have no live
-    * readers either). Entries evict when the owning context ends. */
+    * readers either). */
   def onceJvm(spark: SparkSession, key: String)(load: => Unit): Unit = {
     val sc = spark.sparkContext
-    hookJvm(sc)
-    jvmActions.getOrElseUpdate((sc, key), new Cell(() => {
-      buildsDone.incrementAndGet()
-      load
-    })).value
+    cell(sc, sc, key)(load)
   }
 
   /** Monotone count of builds/loads that actually ran (cache misses).
@@ -132,53 +108,47 @@ object Memo {
     * SECOND run proves a rebuild that min-of-2 was assumed to amortize. */
   def buildCount: Long = buildsDone.get()
 
-  /** Test hook: the memo/load keys held for exactly this session —
-    * lets suites prove per-session isolation (a sibling session must
-    * build its OWN entries, not observe another's). */
+  /** Test hook: every memo key held for exactly this session — lets
+    * suites prove per-session isolation (a sibling session must build
+    * its OWN entries, not observe another's). */
   private[graft] def keysFor(spark: SparkSession): Set[String] =
-    (entries.keysIterator ++ actions.keysIterator)
-      .collect { case (s, k) if s eq spark => k }.toSet
+    cells.keysIterator.collect { case (s, k) if s eq spark => k }.toSet
 
-  /** Test hook: evict one entry, unpersisting its blocks if (and only
-    * if) the build ran — lets a suite that invalidated an entry's
-    * backing store (e.g. deleted its reliable-checkpoint files) retire
-    * the entry instead of leaving a cache whose recompute path is
-    * broken (ADVICE r7 item 2). A build in flight at drop time is
-    * waited out (`Cell.settled`) so its persisted blocks are released,
-    * not leaked (ADVICE r8 item 2); the residual race — a cached()
-    * call landing between remove and unpersist re-builds the entry
-    * fresh — matches drop's eviction semantics and is benign. */
-  private[graft] def drop(spark: SparkSession, key: String): Unit = {
-    entries.remove((spark, key))
-      .foreach(_.settled.foreach(_.unpersist(blocking = false)))
-    actions.remove((spark, key))
-    values.remove((spark, key))
-    ()
-  }
-
-  private def hook(spark: SparkSession): Unit =
-    if (hooked.putIfAbsent(spark, ()).isEmpty) {
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(
-            end: SparkListenerApplicationEnd): Unit = {
-          entries.filterInPlace { case ((s, _), _) => s ne spark }
-          actions.filterInPlace { case ((s, _), _) => s ne spark }
-          values.filterInPlace { case ((s, _), _) => s ne spark }
-          hooked.remove(spark)
-          ()
-        }
-      })
+  /** Test hook: evict one session entry, unpersisting its blocks if (and
+    * only if) it is a DataFrame whose build ran — lets a suite that
+    * invalidated an entry's backing store (e.g. deleted its
+    * reliable-checkpoint files) retire the entry instead of leaving a
+    * cache whose recompute path is broken (ADVICE r7 item 2). A build in
+    * flight at drop time is waited out (`Cell.settled`) so its persisted
+    * blocks are released, not leaked (ADVICE r8 item 2); the residual
+    * race — a cached() call landing between remove and unpersist
+    * re-builds the entry fresh — matches drop's eviction semantics and
+    * is benign. */
+  private[graft] def drop(spark: SparkSession, key: String): Unit =
+    cells.remove((spark, key)).flatMap(_.settled).foreach {
+      case ds: Dataset[_] => ds.unpersist(blocking = false)
+      case _              => ()
     }
 
-  private def hookJvm(sc: org.apache.spark.SparkContext): Unit =
-    if (hookedJvm.putIfAbsent(sc, ()).isEmpty) {
+  /** The one cell lookup behind every public call: registers `sc`'s
+    * eviction hook, then forces the single cell that won `(scope, key)`. */
+  private def cell[A](sc: SparkContext, scope: AnyRef, key: String)
+      (build: => A): A = {
+    if (hooked.putIfAbsent(sc, ()).isEmpty)
       sc.addSparkListener(new SparkListener {
         override def onApplicationEnd(
             end: SparkListenerApplicationEnd): Unit = {
-          jvmActions.filterInPlace { case ((c, _), _) => c ne sc }
-          hookedJvm.remove(sc)
+          cells.filterInPlace {
+            case ((s: SparkSession, _), _) => s.sparkContext ne sc
+            case ((c, _), _)               => c ne sc
+          }
+          hooked.remove(sc)
           ()
         }
       })
-    }
+    cells.getOrElseUpdate((scope, key), new Cell[Any](() => {
+      buildsDone.incrementAndGet()
+      build
+    })).value.asInstanceOf[A]
+  }
 }

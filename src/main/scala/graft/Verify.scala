@@ -34,8 +34,6 @@ object Verify {
     val json = SparkEntry.jsonObj(SparkEntry.oracleSql.toSeq
       .map { case (k, v) => k -> SparkEntry.jsonStr(v) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // no cached relation outlives the sweep (VERDICT r10 item 5)
-    graft.queries.Extras.releaseCacheReuse(spark)
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(

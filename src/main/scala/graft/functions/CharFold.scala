@@ -80,7 +80,16 @@ object PortableHash {
        |  (a, c) -> (a * 31 + c) % $P)""".stripMargin
 
   /** Full-width 64-bit form ([[CharFoldHelper.fold64]]) — the shingle
-    * IDENTITY hash of the exact-Jaccard family. Native only (requires
+    * IDENTITY hash of the exact-Jaccard family: verifyJaccard,
+    * ngramPairs and their oracles join on this, not on [[charFold]].
+    * The mod-P fold's ~2^20-value range is pigeonhole-collided once the
+    * distinct-shingle vocabulary passes a million (the ×1000 rung corpus
+    * holds orders of magnitude more), which would silently inflate
+    * common-shingle counts and leak false near-dup pairs into every
+    * pair-graph consumer (ADVICE r17 high). [[charFold]] remains the
+    * BUCKETING hash where a bounded range is the point (minhash band
+    * permutations mod P, simhash bit votes, blur noise, sampling
+    * spread). Native only (requires
     * the `char_fold64` function [[GraftExtensions]] registers): a
     * built-in HOF form cannot exist under ANSI mode, where Spark's
     * `Multiply`/`Add` raise on the very 64-bit wraparound the hash is

@@ -151,6 +151,27 @@ object FourCE {
       .agg(counts.head, counts.tail: _*)
   }
 
+  /** Every calendar day of a visit, start to end inclusive — the
+    * inpatient stay-day expansion of DailyCounts and ClinicalCourse. */
+  private val stayDays: Column =
+    explode(sequence(to_date(col("start_date")), to_date(col("end_date"))))
+
+  /** The `patient_dimension` columns, age band and race of
+    * Demographics and the patient summary. Race carries the `-999`
+    * "not collected" sentinel unless `includeRace`. */
+  private def patientCols(cfg: FourCEConfig): Seq[Column] =
+    Seq(col("patient_num"), col("sex_cd"), col("age_in_years_num")) ++
+      (if (cfg.includeRace) Seq(col("race_cd")) else Nil)
+
+  private val ageGroup: Column = when(col("age_in_years_num") < 21, "00to20")
+    .when(col("age_in_years_num") < 46, "21to45")
+    .when(col("age_in_years_num") < 66, "46to65")
+    .otherwise("66plus")
+
+  private def race(cfg: FourCEConfig): Column =
+    if (cfg.includeRace) coalesce(col("race_cd"), lit("other"))
+    else lit("-999")
+
   /** Trace B — DailyCounts.csv: per calendar date, cumulative
     * all/severe/dead cohort patients + in-hospital census. One stream
     * of (d, kind, patient) rows — the cohort's admission, severe and
@@ -178,8 +199,7 @@ object FourCE {
       .join(cohortDf.select(col("patient_num"), col("severe")),
         Seq("patient_num"))
       .select(col("patient_num"), col("severe"), lit("hosp").as("kind"),
-        explode(sequence(to_date(col("start_date")),
-          to_date(col("end_date")))).as("d"))
+        stayDays.as("d"))
     val kind = col("kind")
     val perDay = distinctPatients(marks.unionByName(stays), Seq("d"),
       "n_new" -> (kind === "new"), "n_sev" -> (kind === "sev"),
@@ -223,20 +243,10 @@ object FourCE {
     * `patient_dimension.race_cd` becomes the third dimension. */
   def demographics(cohortDf: DataFrame, patients: DataFrame,
       cfg: FourCEConfig): DataFrame = {
-    val ageGroup = when(col("age_in_years_num") < 21, "00to20")
-      .when(col("age_in_years_num") < 46, "21to45")
-      .when(col("age_in_years_num") < 66, "46to65")
-      .otherwise("66plus")
-    val race =
-      if (cfg.includeRace) coalesce(col("race_cd"), lit("other"))
-      else lit("-999")
-    val patCols = Seq(col("patient_num"), col("sex_cd"),
-      col("age_in_years_num")) ++
-      (if (cfg.includeRace) Seq(col("race_cd")) else Nil)
     val joined = cohortDf
-      .join(patients.select(patCols: _*), Seq("patient_num"))
+      .join(patients.select(patientCols(cfg): _*), Seq("patient_num"))
       .select(col("patient_num"), col("severe"),
-        col("sex_cd"), ageGroup.as("age_group"), race.as("race"))
+        col("sex_cd"), ageGroup.as("age_group"), race(cfg).as("race"))
     val cubed =
       if (cfg.includeRace)
         joined.cube(col("sex_cd"), col("age_group"), col("race"))
@@ -339,8 +349,7 @@ object FourCE {
       .join(cohortDf.select(col("patient_num"), col("admission_date"),
         col("severe")), Seq("patient_num"))
       .select(col("patient_num"), col("severe"), col("admission_date"),
-        explode(sequence(to_date(col("start_date")),
-          to_date(col("end_date")))).as("hosp_day"))
+        stayDays.as("hosp_day"))
       .select(col("patient_num"), col("severe"),
         datediff(col("hosp_day"), col("admission_date"))
           .as("days_since_admission"))
@@ -499,25 +508,15 @@ object FourCE {
     * Race carries the `-999` sentinel unless `includeRace`. */
   def patientSummary(cohortDf: DataFrame, visits: DataFrame,
       patients: DataFrame, cfg: FourCEConfig): DataFrame = {
-    val ageGroup = when(col("age_in_years_num") < 21, "00to20")
-      .when(col("age_in_years_num") < 46, "21to45")
-      .when(col("age_in_years_num") < 66, "46to65")
-      .otherwise("66plus")
     val perDay = patientClinicalCourse(cohortDf, visits, cfg)
       .groupBy(col("patient_num"))
       .agg(sum(col("in_hospital")).cast("long")
           .as("num_days_in_hospital"),
         max(when(col("in_hospital") === 1, col("calendar_date")))
           .as("last_hospital_date"))
-    val patCols = Seq(col("patient_num"), col("sex_cd"),
-      col("age_in_years_num")) ++
-      (if (cfg.includeRace) Seq(col("race_cd")) else Nil)
-    val race =
-      if (cfg.includeRace) coalesce(col("race_cd"), lit("other"))
-      else lit("-999")
     cohortDf
       .join(perDay, Seq("patient_num"), "left")
-      .join(patients.select(patCols: _*), Seq("patient_num"))
+      .join(patients.select(patientCols(cfg): _*), Seq("patient_num"))
       .select(lit(cfg.siteId).as("siteid"), col("patient_num"),
         col("admission_date"),
         coalesce(col("num_days_in_hospital"), lit(0L))
@@ -527,7 +526,7 @@ object FourCE {
         when(col("death_date").isNotNull, 1).otherwise(0).as("deceased"),
         col("death_date"),
         col("sex_cd").as("sex"), ageGroup.as("age_group"),
-        race.as("race"))
+        race(cfg).as("race"))
       .orderBy(col("patient_num"))
   }
 

@@ -711,41 +711,14 @@ object Extras {
     * invocation put the whole materialization in every timed run
     * (VERDICT r9 item 3, measured 14-19 s; reuse is sub-second). The
     * one cached view per input lives for the session — bounded (one
-    * ~150k-row aggregate per sfDir) and deliberate; the harness mains
-    * (Verify/Bench) release it via [[releaseCacheReuse]] after their
-    * sweep (VERDICT r10 item 5), and ad-hoc callers can use
-    * spark.catalog.clearCache() at teardown.
+    * ~150k-row aggregate per sfDir) and deliberate; `spark.stop()` drops
+    * its blocks with every other cached relation (VERDICT r10 item 5),
+    * and ad-hoc callers can use spark.catalog.clearCache() at teardown.
     *
     * Scale: this is the §4.2 Memo story as USER surface — at 100 TB
     * you cache (or persist DISK_ONLY) the shared frontier exactly like
     * this, and every downstream branch skips the base shuffle; Spark's
     * columnar cache is partition-local, so the reuse adds no exchange. */
-  /** Views built by [[qCacheReuse]], per session — what
-    * [[releaseCacheReuse]] tears down. Weak session keys are
-    * unnecessary: the harness runs one session per JVM and the map
-    * holds names, not data. */
-  private val cacheReuseViews =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), Unit]()
-
-  /** Release every cached view [[qCacheReuse]] built on `spark`:
-    * uncache + drop, so no cached relation outlives the sweep that
-    * built it (VERDICT r10 item 5). Safe to call repeatedly. */
-  def releaseCacheReuse(spark: org.apache.spark.sql.SparkSession): Unit =
-    this.synchronized {
-      import scala.jdk.CollectionConverters._
-      cacheReuseViews.keySet.asScala
-        .filter(_._1 eq spark).toSeq.foreach { case k @ (s, v) =>
-          try {
-            if (s.catalog.tableExists(v) && s.catalog.isCached(v))
-              s.catalog.uncacheTable(v)
-            s.catalog.dropTempView(v)
-          } catch { case _: Throwable => () }
-          cacheReuseViews.remove(k)
-          ()
-        }
-    }
-
   val qCacheReuse = Q("q_cache_reuse",
     (spark, sfDir) => {
       import spark.implicits._
@@ -757,19 +730,15 @@ object Extras {
       // stores.
       val view = "cache_spend_" +
         sfDir.replaceAll("[^A-Za-z0-9]", "_")
-      // serialize the check-then-build so concurrent invocations on one
-      // session (OperatorSuite's concurrency test) build the cache once
-      this.synchronized {
-        if (!spark.catalog.tableExists(view) ||
-            !spark.catalog.isCached(view)) {
-          Tables.read(spark, sfDir, "orders")
-            .groupBy($"o_custkey")
-            .agg(count(lit(1)).as("n_orders"),
-              sum($"o_totalprice".cast("decimal(18,6)")).as("spend"))
-            .createOrReplaceTempView(view)
-          spark.sql(s"CACHE TABLE $view") // eager: materialized once
-          cacheReuseViews.put((spark, view), ())
-        }
+      // once per (session, input dir), also under concurrent invocations
+      // on one session (OperatorSuite's concurrency test)
+      graft.Memo.once(spark, s"cache_reuse:$sfDir") {
+        Tables.read(spark, sfDir, "orders")
+          .groupBy($"o_custkey")
+          .agg(count(lit(1)).as("n_orders"),
+            sum($"o_totalprice".cast("decimal(18,6)")).as("spend"))
+          .createOrReplaceTempView(view)
+        spark.sql(s"CACHE TABLE $view") // eager: materialized once
       }
       val buckets = spark.sql(
         s"""SELECT 'bucket' AS part,

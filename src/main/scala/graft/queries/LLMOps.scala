@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.{Q, Sessions, Tables}
+import graft.functions.PortableHash.{charFold, charFold64, charFold64Sql,
+  charFoldSql}
 import graft.functions.Vectors
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -46,38 +48,6 @@ case class MediaMeta(doc_id: Long, n_bytes: Int, width: Int, height: Int,
 object LLMOps {
 
   private val P = 1000003L // prime modulus for all portable hashing
-
-  /** Portable char-code polynomial hash (see object doc) — dispatches
-    * to the native codegen'd CharFoldExpr. Shared impl lives in
-    * [[graft.functions.PortableHash]]. */
-  private[graft] def charFold(s: Column): Column =
-    graft.functions.PortableHash.charFold(s)
-
-  /** Pure-built-in HOF form of [[charFold]] — identical values; kept
-    * as the no-extensions fallback and for equivalence tests. */
-  private[graft] def charFoldHof(s: Column): Column =
-    graft.functions.PortableHash.charFoldHof(s)
-
-  /** Same hash in DuckDB SQL. */
-  private def charFoldSql(s: String): String =
-    graft.functions.PortableHash.charFoldSql(s)
-
-  /** Full-width 64-bit shingle-IDENTITY hash — the exact-Jaccard
-    * family (verifyJaccard, ngramPairs, their oracles) joins on this,
-    * not on [[charFold]]: the mod-P fold's ~2^20-value range is
-    * pigeonhole-collided once the distinct-shingle vocabulary passes a
-    * million (the ×1000 rung corpus holds orders of magnitude more),
-    * which would silently inflate common-shingle counts and leak false
-    * near-dup pairs into every pair-graph consumer (ADVICE r17 high).
-    * [[charFold]] remains the BUCKETING hash where a bounded range is
-    * the point (minhash band permutations mod P, simhash bit votes,
-    * blur noise, sampling spread). */
-  private[graft] def charFold64(s: Column): Column =
-    graft.functions.PortableHash.charFold64(s)
-
-  /** Same 64-bit hash in DuckDB SQL. */
-  private def charFold64Sql(s: String): String =
-    graft.functions.PortableHash.charFold64Sql(s)
 
   /** Corpus row count, memoized per (session, sfDir) — gates the
     * verify-form switch and sizes the vocabulary CMS; constant per

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.streaming.StreamRun
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -205,39 +206,37 @@ object Scale {
       import spark.implicits._
       val dir = java.nio.file.Files
         .createTempDirectory("graft_fb_").toString
-      val src = Tables.readStream(spark, sfDir, "events")
-        .select($"event_id", $"event_type", $"value")
-      val q = src.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          // mode=append + per-batch task retry safety comes from parquet
-          // file-commit atomicity; real deployments key on batchId for
-          // exactly-once into transactional stores
-          batch.write.mode("append").parquet(dir)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
       // The per-run batch dir is scratch: reduce it to the (tiny,
       // per-event-type) aggregate ENTIRELY executor-side — written to a
-      // second scratch parquet — then delete the batch dir, so repeated
-      // bench/verify runs don't accumulate micro-batch files in /tmp
-      // and no driver collect sits in the query path (VERDICT r8
-      // item 7). The returned frame reads the aggregate parquet, so
-      // laziness can't resurrect the deleted batch path; the previous
-      // invocation's (already consumed) aggregate dir is retired on the
-      // next invocation, bounding scratch to one tiny file per JVM.
-      val aggDir = java.nio.file.Files
-        .createTempDirectory("graft_fb_agg_").toString
-      try {
-        spark.read.parquet(dir)
-          .groupBy($"event_type")
-          .agg(count(lit(1)).as("n"),
-            round(sum($"value").cast("decimal(18,6)"), 6)
-              .cast("double").as("sum_value"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(aggDir)
-      } finally Tables.deleteTree(dir)
+      // second scratch parquet — then delete the batch dir, also when
+      // the stream fails, so repeated bench/verify runs don't accumulate
+      // micro-batch files in /tmp and no driver collect sits in the
+      // query path (VERDICT r8 item 7). The returned frame reads the
+      // aggregate parquet, so laziness can't resurrect the deleted batch
+      // path; the previous invocation's (already consumed) aggregate dir
+      // is retired on the next invocation, bounding scratch to one tiny
+      // file per JVM, and the last one when the JVM exits.
+      val aggDir =
+        try {
+          StreamRun.foreachBatch(spark,
+            Tables.readStream(spark, sfDir, "events")
+              .select($"event_id", $"event_type", $"value"),
+            "sink_foreach") { (batch, _) =>
+            // mode=append + per-batch task retry safety comes from
+            // parquet file-commit atomicity; real deployments key on
+            // batchId for exactly-once into transactional stores
+            batch.write.mode("append").parquet(dir)
+          }
+          val agg = Tables.scratchDir("graft_fb_agg_")
+          spark.read.parquet(dir)
+            .groupBy($"event_type")
+            .agg(count(lit(1)).as("n"),
+              round(sum($"value").cast("decimal(18,6)"), 6)
+                .cast("double").as("sum_value"))
+            .coalesce(1)
+            .write.mode("overwrite").parquet(agg)
+          agg
+        } finally Tables.deleteTree(dir)
       val prev = sinkAggDir.getAndSet(aggDir)
       if (prev != null) Tables.deleteTree(prev)
       spark.read.parquet(aggDir).orderBy($"event_type")
@@ -321,43 +320,37 @@ object Scale {
           .schema("user_id BIGINT, value DOUBLE, us BIGINT, eid BIGINT")
           .option("maxFilesPerTrigger", 1)
           .parquet(feedDir)
-        val q = src.writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[
-              org.apache.spark.sql.Row], batchId: Long) =>
-            upsertBatches.incrementAndGet()
-            // foreachBatch runs in the stream's CLONED session — the
-            // view must register there, and the catalog store being
-            // name-keyed (see MemRowTableCatalog) is what lets this
-            // MERGE see the outer session's table
-            val bs = batch.sparkSession
-            val view = s"upsert_src_${id}_$batchId"
-            batch.groupBy(col("user_id"))
-              .agg(max(struct(col("us"), col("eid"), col("value")))
-                .as("m"))
-              .select(col("user_id").as("key"), col("m.us").as("us"),
-                col("m.eid").as("eid"), col("m.value").as("value"))
-              .createOrReplaceTempView(view)
-            try {
-              bs.sql(
-                s"""MERGE INTO $tbl t USING $view s ON t.key = s.key
-                   |WHEN MATCHED AND (t.applied_us IS NULL
-                   |    OR s.us > t.applied_us
-                   |    OR (s.us = t.applied_us
-                   |        AND s.eid > t.applied_eid)) THEN
-                   |  UPDATE SET balance = s.value,
-                   |    applied_us = s.us, applied_eid = s.eid
-                   |WHEN NOT MATCHED THEN
-                   |  INSERT (key, c_mktsegment, balance,
-                   |          applied_us, applied_eid)
-                   |  VALUES (s.key, NULL, s.value, s.us, s.eid)"""
-                  .stripMargin)
-              ()
-            } finally { bs.catalog.dropTempView(view); () }
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        StreamRun.foreachBatch(spark, src, "upsert") { (batch, batchId) =>
+          upsertBatches.incrementAndGet()
+          // foreachBatch runs in the stream's CLONED session — the
+          // view must register there, and the catalog store being
+          // name-keyed (see MemRowTableCatalog) is what lets this
+          // MERGE see the outer session's table
+          val bs = batch.sparkSession
+          val view = s"upsert_src_${id}_$batchId"
+          batch.groupBy(col("user_id"))
+            .agg(max(struct(col("us"), col("eid"), col("value")))
+              .as("m"))
+            .select(col("user_id").as("key"), col("m.us").as("us"),
+              col("m.eid").as("eid"), col("m.value").as("value"))
+            .createOrReplaceTempView(view)
+          try {
+            bs.sql(
+              s"""MERGE INTO $tbl t USING $view s ON t.key = s.key
+                 |WHEN MATCHED AND (t.applied_us IS NULL
+                 |    OR s.us > t.applied_us
+                 |    OR (s.us = t.applied_us
+                 |        AND s.eid > t.applied_eid)) THEN
+                 |  UPDATE SET balance = s.value,
+                 |    applied_us = s.us, applied_eid = s.eid
+                 |WHEN NOT MATCHED THEN
+                 |  INSERT (key, c_mktsegment, balance,
+                 |          applied_us, applied_eid)
+                 |  VALUES (s.key, NULL, s.value, s.us, s.eid)"""
+                .stripMargin)
+            ()
+          } finally { bs.catalog.dropTempView(view); () }
+        }
       } finally Tables.deleteTree(feedDir)
       spark.table(tbl).orderBy($"key")
     },

@@ -204,10 +204,6 @@ object StreamRun {
 
 object Streams {
 
-  private def runToTable(spark: SparkSession, df: DataFrame,
-      base: String, mode: String): DataFrame =
-    StreamRun.toTable(spark, df, base, mode)
-
   /** T1: tumbling 1-hour window counts per event_type. */
   val qStreamTumbling = Q("q_stream_tumbling",
     (spark, sfDir) => {
@@ -216,7 +212,7 @@ object Streams {
         .groupBy(window($"ts", "1 hour"), $"event_type")
         .agg(count(lit(1)).as("n"))
         .select($"window.start".as("window_start"), $"event_type", $"n")
-      runToTable(spark, s, "t_tumbling", "complete")
+      StreamRun.toTable(spark, s, "t_tumbling", "complete")
         .orderBy($"window_start", $"event_type")
     },
     Some("""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP))
@@ -234,7 +230,7 @@ object Streams {
         .groupBy(window($"ts", "1 hour", "15 minutes"))
         .agg(count(lit(1)).as("n"))
         .select($"window.start".as("window_start"), $"n")
-      runToTable(spark, s, "t_sliding", "complete")
+      StreamRun.toTable(spark, s, "t_sliding", "complete")
         .orderBy($"window_start")
     },
     Some("""SELECT time_bucket(INTERVAL 15 MINUTE,
@@ -254,7 +250,7 @@ object Streams {
         .agg(count(lit(1)).as("n_events"))
         .select($"session_window.start".as("session_start"),
           $"user_id", $"n_events")
-      runToTable(spark, s, "t_session", "append")
+      StreamRun.toTable(spark, s, "t_session", "append")
         .orderBy($"user_id", $"session_start")
     },
     Some("""WITH marked AS (
@@ -293,7 +289,7 @@ object Streams {
         .groupBy(window($"ts", "1 hour"))
         .agg(count(lit(1)).as("n"))
         .select($"window.start".as("window_start"), $"n")
-      runToTable(spark, s, "t_watermark", "append")
+      StreamRun.toTable(spark, s, "t_watermark", "append")
         .orderBy($"window_start")
     },
     Some("""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP))
@@ -313,7 +309,7 @@ object Streams {
       val s = Tables.readStream(spark, sfDir, "events")
         .select($"event_id", $"user_id", $"event_type")
         .dropDuplicates("event_id")
-      runToTable(spark, s, "t_dedup", "append")
+      StreamRun.toTable(spark, s, "t_dedup", "append")
         .orderBy($"event_id")
     },
     Some("""SELECT DISTINCT event_id, user_id, event_type
@@ -335,7 +331,7 @@ object Streams {
         .select($"user_id", $"event_type", $"ts")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
-      runToTable(spark, s, "t_dedup_wm", "append")
+      StreamRun.toTable(spark, s, "t_dedup_wm", "append")
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n_users"))
         .orderBy($"event_type")
@@ -371,7 +367,7 @@ object Streams {
         .groupBy(window($"ts", "1 day"))
         .agg(count(lit(1)).as("n_active"))
         .select($"window.start".as("window_start"), $"n_active")
-      runToTable(spark, s, "t_dedup_agg", "append")
+      StreamRun.toTable(spark, s, "t_dedup_agg", "append")
         .orderBy($"window_start")
     },
     Some("""WITH ev AS (
@@ -412,7 +408,7 @@ object Streams {
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(updateFn)
         .toDF()
       // update-mode emission: the last row per user is the final state
-      runToTable(spark, s, "t_state", "update")
+      StreamRun.toTable(spark, s, "t_state", "update")
         .groupBy($"user_id")
         .agg(max($"n_events").as("n_events"),
           max($"ever_error").as("ever_error"))
@@ -443,7 +439,7 @@ object Streams {
           .transformWithState(new UserAggProcessor,
             TimeMode.None(), OutputMode.Update())
           .toDF()
-        runToTable(spark, s, "t_tws", "update")
+        StreamRun.toTable(spark, s, "t_tws", "update")
           .groupBy($"user_id")
           .agg(max($"n_events").as("n_events"),
             max($"ever_error").as("ever_error"))
@@ -521,7 +517,7 @@ object Streams {
         .flatMapGroupsWithState(OutputMode.Append,
           GroupStateTimeout.EventTimeTimeout)(fn)
         .toDF()
-      runToTable(spark, s, "t_timeout", "append")
+      StreamRun.toTable(spark, s, "t_timeout", "append")
         .groupBy($"user_id")
         .agg(count(lit(1)).as("n_closed"),
           sum($"n_events").as("n_events"),
@@ -595,7 +591,7 @@ object Streams {
           $"p_ts" > $"s_ts" &&
           $"p_ts" <= $"s_ts" + expr("INTERVAL 3 DAYS"),
         "left_outer")
-      val out = runToTable(spark, joined, "t_join_outer", "append")
+      val out = StreamRun.toTable(spark, joined, "t_join_outer", "append")
       out.groupBy($"s_user".as("user_id"))
         .agg(count($"p_ts").as("n_matched"),
           count(when($"p_ts".isNull, 1)).as("n_expired"))
@@ -654,7 +650,7 @@ object Streams {
           $"p_ts" > $"s_ts" &&
           $"p_ts" <= $"s_ts" + expr("INTERVAL 3 DAYS"),
         "full_outer")
-      val out = runToTable(spark, joined, "t_join_full", "append")
+      val out = StreamRun.toTable(spark, joined, "t_join_full", "append")
       out.groupBy(coalesce($"s_user", $"p_user").as("user_id"))
         .agg(
           count(when($"s_ts".isNotNull && $"p_ts".isNotNull, 1))
@@ -717,7 +713,7 @@ object Streams {
         $"s_user" === $"p_user" &&
           $"p_ts" > $"s_ts" &&
           $"p_ts" <= $"s_ts" + expr("INTERVAL 14 DAYS"))
-      val out = runToTable(spark, joined, "t_join", "append")
+      val out = StreamRun.toTable(spark, joined, "t_join", "append")
       out.groupBy($"s_user".as("user_id"))
         .agg(count(lit(1)).as("n_windowed_purchases"))
         .orderBy($"user_id")
@@ -850,7 +846,7 @@ object Streams {
           .transformWithState(new KllStateProcessor,
             TimeMode.None(), OutputMode.Update())
           .toDF("event_type", "n_seen", "sk")
-        val emitted = runToTable(spark, s, "t_kll", "update")
+        val emitted = StreamRun.toTable(spark, s, "t_kll", "update")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"event_type").orderBy($"n_seen".desc)
         val finals = emitted
@@ -989,7 +985,7 @@ object Streams {
           call_function("kmv_kept", $"sk").as("n_kept"),
           round(call_function("kmv_estimate", $"sk"), 2)
             .as("kmv_estimate"))
-      runToTable(spark, s, "t_kmv", "complete")
+      StreamRun.toTable(spark, s, "t_kmv", "complete")
         .orderBy($"source")
     },
     Some("""WITH hashed AS (

@@ -239,6 +239,26 @@ class BucketingSuite extends AnyFunSuite {
       s"estimate $est outside the 4-sigma theta error bound")
   }
 
+  test("new sessions share one memo eviction listener per context") {
+    // every perfbench pass opens a session; a listener per session would
+    // pin each of them and grow the bus by one per pass
+    import org.apache.spark.ListenerBusProbe
+    val sessions = Seq.fill(5)(spark.newSession())
+    val before = ListenerBusProbe.size(spark.sparkContext)
+    sessions.zipWithIndex.foreach { case (s, i) =>
+      assert(Memo.value(s, s"listener_probe:$i")(i) === i)
+    }
+    val added = ListenerBusProbe.size(spark.sparkContext) - before
+    assert(added <= 1, s"five sessions added $added listeners")
+  }
+
+  test("keysFor lists value keys with the session's other keys") {
+    val s2 = spark.newSession()
+    Memo.value(s2, "value_probe")(42)
+    Memo.once(s2, "once_probe")(())
+    assert(Memo.keysFor(s2) === Set("value_probe", "once_probe"))
+  }
+
   test("concurrent first touch of a memo key runs the build exactly once") {
     // ADVICE r7 item 1: with batch queries racing on one session, a
     // side-effecting load (Derby fill, side-store rewrite) must never

@@ -22,7 +22,7 @@ class FormatsSuite extends AnyFunSuite {
     StructField("value", DoubleType)))
 
   private def writeFixture(): String = {
-    val dir = Files.createTempDirectory("fmt_bad_").toString
+    val dir = Tables.scratchDir("fmt_bad_")
     val lines = Seq(
       """{"event_id":1,"user_id":10,"event_type":"click","value":1.5}""",
       """{"event_id":2,"user_id":11,"event_type":"view""", // truncated
@@ -31,12 +31,6 @@ class FormatsSuite extends AnyFunSuite {
     Files.write(Paths.get(dir, "part.json"),
       lines.mkString("\n").getBytes("UTF-8"))
     dir
-  }
-
-  private def rmrf(dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    Files.walk(Paths.get(dir)).iterator().asScala.toSeq
-      .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
   }
 
   test("PERMISSIVE quarantines corrupt JSON rows into _corrupt_record") {
@@ -55,7 +49,7 @@ class FormatsSuite extends AnyFunSuite {
       assert(good.count() === 2)
       assert(good.agg(sum($"value")).head().getDouble(0) === 3.5)
       df.unpersist()
-    } finally rmrf(dir)
+    } finally Tables.deleteTree(dir)
   }
 
   test("DROPMALFORMED keeps only parseable rows; FAILFAST is loud") {
@@ -67,7 +61,7 @@ class FormatsSuite extends AnyFunSuite {
         spark.read.schema(slim)
           .option("mode", "FAILFAST").json(dir).count()
       }
-    } finally rmrf(dir)
+    } finally Tables.deleteTree(dir)
   }
 
   test("rebalance hint collapses output files and plans RebalancePartitions") {
@@ -152,8 +146,7 @@ class FormatsSuite extends AnyFunSuite {
     // must ignore the former and null-fill the latter — never fail,
     // never misalign surviving columns.
     import TestSpark.sf
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-drift").toString
+    val dir = Tables.scratchDir("graft-drift")
     val ev = Tables.read(spark, sf, "events")
     // "newer writer": extra column appended
     ev.withColumn("new_writer_col", lit("x"))

@@ -205,13 +205,7 @@ class FourCESuite extends AnyFunSuite {
         FourCE.demographics(tinyCohort, tinyPatients, cfg)).collect()
       assert(lines.forall(_.getString(0).count(_ == '|') === 5))
       assert(lines.exists(_.getString(0).startsWith("site|")))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    } finally Tables.deleteTree(dir)
   }
 
   test("obfuscation: masked small counts, blur bounded, deterministic") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.LLMOps
+import graft.functions.PortableHash
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
@@ -24,10 +24,10 @@ object HashProps extends Properties("graft") {
   property("charFold lands in [0, P) and is deterministic") =
     forAll(Gen.nonEmptyListOf(asciiWord)) { words =>
       val out = words.toDF("s")
-        .select(LLMOps.charFold(col("s")).as("h"))
+        .select(PortableHash.charFold(col("s")).as("h"))
         .collect().map(_.getLong(0))
       val again = words.toDF("s")
-        .select(LLMOps.charFold(col("s")).as("h"))
+        .select(PortableHash.charFold(col("s")).as("h"))
         .collect().map(_.getLong(0))
       out.forall(h => h >= 0L && h < 1000003L) && out.sameElements(again)
     }

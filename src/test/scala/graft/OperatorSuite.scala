@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.Vectors
+import graft.functions.{PortableHash, Vectors}
 import graft.queries.{Aggregates, Cohort, LLMOps, Relational}
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
@@ -97,8 +97,7 @@ class OperatorSuite extends AnyFunSuite {
     // nothing pins WHICH timestamp column the next writer changes, so
     // re-encode orders.o_orderdate as raw int64-nanos and read through
     // the same Tables.read path.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ns-orders").toString
+    val dir = Tables.scratchDir("graft-ns-orders")
     Tables.read(spark, sf, "orders")
       .withColumn("o_orderdate",
         expr("unix_micros(o_orderdate) * 1000L"))
@@ -116,8 +115,7 @@ class OperatorSuite extends AnyFunSuite {
     // Re-encode the fixture's events as raw epoch-nanos int64 — the
     // legacy writer encoding Tables.read's footer probe must still adapt
     // to (a mixed-writer lake contains both; VERDICT r9 item 1).
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ns-events").toString
+    val dir = Tables.scratchDir("graft-ns-events")
     Tables.read(spark, sf, "events")
       .withColumn("ts", expr("unix_micros(ts) * 1000L"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -131,7 +129,7 @@ class OperatorSuite extends AnyFunSuite {
   test("charFold matches the portable reference value") {
     // DuckDB: list_reduce fold of 'key agg' == 940086 (verified there)
     val v = Seq("key agg").toDF("s")
-      .select(LLMOps.charFold($"s").as("h")).head().getLong(0)
+      .select(PortableHash.charFold($"s").as("h")).head().getLong(0)
     assert(v === 940086L)
   }
 
@@ -140,8 +138,8 @@ class OperatorSuite extends AnyFunSuite {
       .select(explode(split(trim($"text"), " ")).as("w"))
       .filter($"w" =!= "").distinct()
     val diff = words
-      .select(LLMOps.charFold($"w").as("a"),
-        LLMOps.charFoldHof($"w").as("b"))
+      .select(PortableHash.charFold($"w").as("a"),
+        PortableHash.charFoldHof($"w").as("b"))
       .filter($"a" =!= $"b").count()
     assert(diff === 0L)
   }
@@ -162,8 +160,8 @@ class OperatorSuite extends AnyFunSuite {
       acc
     }
     val rows = samples.toDF("s")
-      .select($"s", LLMOps.charFold($"s").as("a"),
-        LLMOps.charFoldHof($"s").as("b")).collect()
+      .select($"s", PortableHash.charFold($"s").as("a"),
+        PortableHash.charFoldHof($"s").as("b")).collect()
     rows.foreach { r =>
       val s = r.getString(0)
       assert(r.getLong(1) === fold(s), s"native char_fold($s)")
@@ -189,7 +187,7 @@ class OperatorSuite extends AnyFunSuite {
       "the quick brown fox jumps over the lazy dog 1234567890",
       "😀", "a😀b", "𝕍park 𠀀", "mixed😀𐍈x")
     val rows = samples.toDF("s")
-      .select($"s", LLMOps.charFold64($"s").as("h")).collect()
+      .select($"s", PortableHash.charFold64($"s").as("h")).collect()
     rows.foreach { r =>
       assert(r.getLong(1) === fold64(r.getString(0)),
         s"char_fold64(${r.getString(0)})")
@@ -480,7 +478,7 @@ class OperatorSuite extends AnyFunSuite {
     // the leakage-safety invariant q_split_group exists for: fold is a
     // function of the group key, so (source, fold) pairs == sources
     val bucket =
-      LLMOps.charFold($"source") * 2654435761L % 2147483648L % 100L
+      PortableHash.charFold($"source") * 2654435761L % 2147483648L % 100L
     val folded = Tables.read(spark, sf, "documents")
       .withColumn("fold", when(bucket < 80, "train").otherwise("test"))
     val pairs = folded.select($"source", $"fold").distinct().count()
@@ -839,7 +837,7 @@ class OperatorSuite extends AnyFunSuite {
   test("cluster labels are identical under reliable checkpoint") {
     val base = LLMOps.qDedupCluster.fn(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_")
+    val dir = java.nio.file.Paths.get(Tables.scratchDir("graft_ckpt_"))
     spark.conf.set("graft.checkpoint.dir", dir.toString)
     try {
       val reliable = LLMOps.qDedupCluster.fn(spark, sf).collect()
@@ -1427,9 +1425,8 @@ class OperatorSuite extends AnyFunSuite {
     // converge to the exact batch answer and (b) read only the files
     // that arrived while it was down — checkpointed offsets + state
     // make the restart exactly-once, no double counting.
-    import java.nio.file.Files
-    val srcDir = Files.createTempDirectory("graft_ckpt_src_").toString
-    val ckptDir = Files.createTempDirectory("graft_ckpt_").toString
+    val srcDir = Tables.scratchDir("graft_ckpt_src_")
+    val ckptDir = Tables.scratchDir("graft_ckpt_")
     val ev = Tables.read(spark, sf, "events")
       .select($"event_id", $"event_type")
     val firstHalf = ev.filter($"event_id" % 2 === 0)
@@ -1471,8 +1468,7 @@ class OperatorSuite extends AnyFunSuite {
     // never enters one batch) and self-termination (the query ends on
     // its own once the start-time backlog is drained; awaitTermination
     // returns). Result must equal the batch aggregate exactly.
-    import java.nio.file.Files
-    val srcDir = Files.createTempDirectory("graft_avnow_").toString
+    val srcDir = Tables.scratchDir("graft_avnow_")
     val ev = Tables.read(spark, sf, "events")
       .select($"event_id", $"event_type")
     ev.repartition(8, $"event_id").write.mode("overwrite")
@@ -1996,8 +1992,7 @@ class OperatorSuite extends AnyFunSuite {
     // 333, 444 with six customers each. Segment 111 totals 10000.65,
     // so its average is exactly 1666.775 and must round to 1666.78;
     // the double quotient 10000.65 / 6 prints as 1666.7749999999999.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-rfm-halfcent").toString
+    val dir = Tables.scratchDir("graft-rfm-halfcent")
     val prices = Seq("1700.65", "1690.00", "1680.00", "1660.00",
       "1650.00", "1620.00") ++ (7 to 24).map(k => s"${1000 - k}.00")
     val day = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
@@ -2535,8 +2530,7 @@ class OperatorSuite extends AnyFunSuite {
     // The audit left-joins the staged orders to the customer keys; a
     // key listed twice in `customer` must not double that customer's
     // orders into "duplicate PKs".
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-wap-dupcust").toString
+    val dir = Tables.scratchDir("graft-wap-dupcust")
     Seq((1L, "a"), (1L, "a"), (2L, "b"), (3L, "c"))
       .map { case (k, n) => (k, n, 1, 0.0, "BUILDING") }
       .toDF(Tables.customer.fieldNames.toIndexedSeq: _*)
@@ -2560,8 +2554,7 @@ class OperatorSuite extends AnyFunSuite {
     // publishing run, a rerun over the same input directory in which
     // an orphan order fails the clean candidate too must report 0
     // published rows, not the earlier run's batch.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-wap-nopublish").toString
+    val dir = Tables.scratchDir("graft-wap-nopublish")
     Seq((1L, "a"), (2L, "b"))
       .map { case (k, n) => (k, n, 1, 0.0, "BUILDING") }
       .toDF(Tables.customer.fieldNames.toIndexedSeq: _*)
@@ -3109,10 +3102,8 @@ class OperatorSuite extends AnyFunSuite {
     // and a NEW query restarted from the same checkpoint must resume
     // the state store and produce exactly the single-pass batch
     // answer — no dropped pre-restart state, no double counting.
-    val in = java.nio.file.Files
-      .createTempDirectory("graft-restart-in").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-restart-ckpt").toString
+    val in = Tables.scratchDir("graft-restart-in")
+    val ckpt = Tables.scratchDir("graft-restart-ckpt")
     val events = Tables.read(spark, sf, "events")
     events.filter($"event_id" % 2 === 0).write
       .mode("overwrite").parquet(s"$in/batch1")
@@ -4203,8 +4194,7 @@ class OperatorSuite extends AnyFunSuite {
       val m2 = java.lang.Long.valueOf(rnd.nextInt(500).toLong)
       (d1, d2, m1, m2)
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-fuzz-base").toString
+    val dir = Tables.scratchDir("graft-fuzz-base")
     spark.createDataFrame(
         spark.sparkContext.parallelize(rows.map(r =>
           org.apache.spark.sql.Row(r._1, r._2, r._3, r._4)), 4),
@@ -4219,8 +4209,7 @@ class OperatorSuite extends AnyFunSuite {
             org.apache.spark.sql.types.LongType))))
       .write.mode("overwrite").parquet(dir)
     val base = spark.read.parquet(dir)
-    val sumDir = java.nio.file.Files
-      .createTempDirectory("graft-fuzz-cells").toString
+    val sumDir = Tables.scratchDir("graft-fuzz-cells")
     // bivariate cells PAIRWISE-guarded: m1 carries nulls, so a cell
     // built over m1-non-null rows alone would diverge from corr/cov*
     // semantics (they skip a row when EITHER side is null)
@@ -4489,8 +4478,7 @@ class OperatorSuite extends AnyFunSuite {
     // session's default ANSI mode the old session-eval-mode Divide
     // threw DIVIDE_BY_ZERO here. Register a dedicated tiny rollup
     // whose base has one fully-NULL group.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-rollup-nulls").toString
+    val dir = Tables.scratchDir("graft-rollup-nulls")
     Seq(("a", "x", Some(1.0)), ("a", "y", Some(3.0)),
         ("b", "x", None), ("b", "y", None))
       .toDF("g", "sub", "x")
@@ -4551,8 +4539,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(scans)
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-rollup-multiroot").toString
+    val dir = Tables.scratchDir("graft-rollup-multiroot")
     Seq(("a", 1L), ("a", 2L), ("b", 3L)).toDF("g", "x")
       .write.mode("overwrite").parquet(s"$dir/rootA")
     Seq(("a", 10L), ("c", 20L)).toDF("g", "x")
@@ -4611,8 +4598,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bmdm").toString
+    val dir = Tables.scratchDir("graft-bmdm")
     // (1a) bijection property through the CONSTRUCT path: negatives,
     // zero, bucket boundaries, and one bucket driven past 2048
     // distinct values (the sparse→dense container promotion) must all
@@ -4874,8 +4860,7 @@ class OperatorSuite extends AnyFunSuite {
   }
 
   test("rollup advisor: alias resolution, absorption, non-file refusal (E359)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-advisor").toString
+    val dir = Tables.scratchDir("graft-advisor")
     Seq(("x", "u", 1.0), ("y", "v", 2.0)).toDF("a", "b", "m")
       .write.mode("overwrite").parquet(dir)
     val base = spark.read.parquet(dir)
@@ -4914,8 +4899,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(scans)
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-streamguard").toString
+    val dir = Tables.scratchDir("graft-streamguard")
     (1 to 1000).map(i => (i.toLong, s"t${i % 4}")).toDF("v", "kind")
       .repartition(2).write.parquet(s"$dir/base")
     val base = spark.read.parquet(s"$dir/base")
@@ -5202,8 +5186,7 @@ class OperatorSuite extends AnyFunSuite {
         cur = cur.getCause }
       sb.toString
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-r17").toString
+    val dir = Tables.scratchDir("graft-r17")
     Seq((1L, "a", 1.5), (2L, "a", 1.7), (3L, "b", 2.0), (3L, "b", 9.0))
       .toDF("k", "g", "d")
       .write.mode("overwrite").parquet(s"$dir/base")
@@ -5282,8 +5265,7 @@ class OperatorSuite extends AnyFunSuite {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     import org.apache.spark.sql.types.{DoubleType, IntegerType,
       StringType}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-r17x").toString
+    val dir = Tables.scratchDir("graft-r17x")
     Seq(("a", "x", 1.0), ("a", "y", 3.0), ("b", "x", 5.0))
       .toDF("g", "sub", "x")
       .write.mode("overwrite").parquet(s"$dir/base")
@@ -5550,8 +5532,7 @@ class OperatorSuite extends AnyFunSuite {
         Seq(f.relation.location.rootPaths.map(_.toString).mkString(","))
       case other => other.children.flatMap(walk)
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-r17adv").toString
+    val dir = Tables.scratchDir("graft-r17adv")
     Seq(("a", "x", 1.0), ("a", "y", 3.0), ("b", "x", 5.0),
         ("b", "y", 7.0))
       .toDF("g", "sub", "x")

@@ -960,14 +960,6 @@ class PlanSuite extends AnyFunSuite {
     }
     assert(baseAggDownstream.isEmpty,
       "the per-customer base aggregate must not be recomputed downstream")
-    // teardown surface (VERDICT r10 item 5): release drops the cached
-    // view, and a later invocation transparently rebuilds it
-    graft.queries.Extras.releaseCacheReuse(spark)
-    val view = "cache_spend_" + sf.replaceAll("[^A-Za-z0-9]", "_")
-    assert(!spark.catalog.tableExists(view),
-      "releaseCacheReuse must drop the cached view")
-    assert(SparkEntry.queries("q_cache_reuse")(spark, sf).count() > 0,
-      "query must rebuild after release")
   }
 
   test("join hints steer the planner to three distinct physical joins") {
