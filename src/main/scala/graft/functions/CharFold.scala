@@ -80,8 +80,10 @@ object PortableHash {
        |  (a, c) -> (a * 31 + c) % $P)""".stripMargin
 
   /** Full-width 64-bit form ([[CharFoldHelper.fold64]]) — the shingle
-    * IDENTITY hash of the exact-Jaccard family: verifyJaccard,
-    * ngramPairs and their oracles join on this, not on [[charFold]].
+    * IDENTITY hash of the exact-Jaccard family: verifyJaccard and
+    * ngramPairs join on this, not on [[charFold]]. Their DuckDB oracles
+    * join on the shingle strings themselves, so strict parity checks
+    * that no two shingles of the fixture share a 64-bit value.
     * The mod-P fold's ~2^20-value range is pigeonhole-collided once the
     * distinct-shingle vocabulary passes a million (the ×1000 rung corpus
     * holds orders of magnitude more), which would silently inflate
@@ -95,28 +97,6 @@ object PortableHash {
     * `Multiply`/`Add` raise on the very 64-bit wraparound the hash is
     * defined by; the native expression uses raw Java arithmetic. */
   def charFold64(s: Column): Column = call_function("char_fold64", s)
-
-  /** DuckDB mirror of [[charFold64]]. DuckDB BIGINT arithmetic raises
-    * on overflow (no wrap), so the fold runs in HUGEINT with an
-    * explicit mod-2^64 each step — `a*31 + c` for a < 2^64 stays well
-    * inside the 128-bit range — and the final unsigned representative
-    * in [0, 2^64) maps to Java's signed long via the branch-free
-    * `((r + 2^63) mod 2^64) − 2^63`. The empty string folds to 0 on
-    * the Spark side (zero iterations) but DuckDB's
-    * `string_split('','')` yields [''] with `unicode('') = -1`, so it
-    * is guarded explicitly; no shingle is empty (every bigram contains
-    * a space), the guard just keeps the mirror total. */
-  def charFold64Sql(s: String): String =
-    s"""(CASE WHEN $s = '' THEN 0 ELSE CAST(
-       |  (list_reduce(list_prepend(CAST(0 AS HUGEINT),
-       |     list_transform(string_split($s, ''),
-       |       c -> CAST(unicode(c) AS HUGEINT))),
-       |     (a, c) -> (a * 31 + c)
-       |       % CAST('18446744073709551616' AS HUGEINT))
-       |   + CAST('9223372036854775808' AS HUGEINT))
-       |  % CAST('18446744073709551616' AS HUGEINT)
-       |  - CAST('9223372036854775808' AS HUGEINT) AS BIGINT) END)"""
-      .stripMargin
 }
 
 /** Native codegen'd form of the portable char-fold polynomial hash
@@ -148,8 +128,7 @@ case class CharFoldExpr(child: Expression) extends UnaryExpression {
   * family must not ride the mod-P fold). Registered as `char_fold64`
   * by [[GraftExtensions]]. No HOF fallback exists: under ANSI mode
   * Spark's arithmetic raises on the 64-bit wraparound this hash is
-  * defined by, so the only portable mirrors are this expression and
-  * the DuckDB HUGEINT fold ([[PortableHash.charFold64Sql]]). */
+  * defined by, so this expression is its only form. */
 case class CharFold64Expr(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType

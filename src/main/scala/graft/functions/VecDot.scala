@@ -132,33 +132,6 @@ object GraftExtensions {
         "damerau_levenshtein"),
       (children: Seq[Expression]) =>
         DamerauLevenshteinExpr(children(0), children(1))))
-    // mergeable KLL quantile-sketch family (KllSketch.scala): build
-    // from doubles, re-aggregate persisted sketch bytes, extract
-    ext.injectFunction((
-      new FunctionIdentifier("kll_sketch_agg"),
-      new ExpressionInfo(classOf[KllSketchAgg].getName, "kll_sketch_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v) => KllSketchAgg(v, 200)
-        case Seq(v, k) => KllSketchAgg(v,
-          k.eval().asInstanceOf[Number].intValue())
-        case _ => throw new IllegalArgumentException(
-          "kll_sketch_agg(value[, k])")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("kll_merge_agg"),
-      new ExpressionInfo(classOf[KllMergeAgg].getName, "kll_merge_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(sk) => KllMergeAgg(sk)
-        case Seq(sk, k) => KllMergeAgg(sk,
-          k.eval().asInstanceOf[Number].intValue())
-        case _ => throw new IllegalArgumentException(
-          "kll_merge_agg(sketch[, k])")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("kll_quantile"),
-      new ExpressionInfo(classOf[KllQuantileExpr].getName, "kll_quantile"),
-      (children: Seq[Expression]) =>
-        KllQuantileExpr(children(0), children(1))))
     // custom generator (TextBigrams.scala): row-local bigram fan-out,
     // replacing the posexplode→window-lead route with a Generate node
     ext.injectFunction((
@@ -194,42 +167,6 @@ object GraftExtensions {
       new FunctionIdentifier("kmv_kept"),
       new ExpressionInfo(classOf[KmvKeptExpr].getName, "kmv_kept"),
       (children: Seq[Expression]) => KmvKeptExpr(children.head)))
-    // theta-sketch set algebra (ThetaSketch.scala): build from longs,
-    // re-aggregate persisted sketch bytes, estimate union /
-    // intersection / difference cardinality
-    ext.injectFunction((
-      new FunctionIdentifier("theta_sketch_agg"),
-      new ExpressionInfo(classOf[ThetaSketchAgg].getName,
-        "theta_sketch_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v) => ThetaSketchAgg(v, 4096)
-        case Seq(v, k) => ThetaSketchAgg(v,
-          k.eval().asInstanceOf[Number].intValue())
-        case _ => throw new IllegalArgumentException(
-          "theta_sketch_agg(value[, nominal_entries])")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("theta_merge_agg"),
-      new ExpressionInfo(classOf[ThetaMergeAgg].getName,
-        "theta_merge_agg"),
-      (children: Seq[Expression]) => ThetaMergeAgg(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("theta_estimate"),
-      new ExpressionInfo(classOf[ThetaEstimateExpr].getName,
-        "theta_estimate"),
-      (children: Seq[Expression]) => ThetaEstimateExpr(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("theta_intersect_estimate"),
-      new ExpressionInfo(classOf[ThetaSetOpExpr].getName,
-        "theta_intersect_estimate"),
-      (children: Seq[Expression]) =>
-        ThetaSetOpExpr(children(0), children(1), intersect = true)))
-    ext.injectFunction((
-      new FunctionIdentifier("theta_anotb_estimate"),
-      new ExpressionInfo(classOf[ThetaSetOpExpr].getName,
-        "theta_anotb_estimate"),
-      (children: Seq[Expression]) =>
-        ThetaSetOpExpr(children(0), children(1), intersect = false)))
     // single-pass Rabin-Karp window fingerprints (RollingHash.scala):
     // the substring-dedup scale path (E288) — n/stride longs per doc
     // instead of materialized window strings

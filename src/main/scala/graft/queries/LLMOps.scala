@@ -1,8 +1,7 @@
 package graft.queries
 
 import graft.{Q, Sessions, Tables}
-import graft.functions.PortableHash.{charFold, charFold64, charFold64Sql,
-  charFoldSql}
+import graft.functions.PortableHash.{charFold, charFold64, charFoldSql}
 import graft.functions.Vectors
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -154,8 +153,8 @@ object LLMOps {
     // (doc, hash) rows cut the shuffled volume ~2.5× vs strings;
     // round 18 widened it from the mod-P fold, whose ~2^20-value range
     // is pigeonhole-collided at rung-scale vocabularies — see
-    // charFold64's doc). The DuckDB mirror folds the identical
-    // polynomial, so parity is by construction.
+    // charFold64's doc). The DuckDB oracle joins on the shingle
+    // strings, so parity also checks that no two shingles share a hash.
     val sh = shingles(spark, sfDir)
       .select($"doc_id", charFold64($"s").as("h"))
     // TWO verify shapes, chosen by corpus size (round 17, the second
@@ -230,10 +229,11 @@ object LLMOps {
   }
 
   /** DuckDB mirror of [[verifyJaccard]] — expects CTEs `cand(d1,d2)`
-    * and `sh(doc_id,s)` in scope. */
+    * and `sh(doc_id,s)` in scope. It joins on the shingle strings, not
+    * on the engine's `charFold64`. */
   private def verifyJaccardSql(threshold: String): String =
     s"""vh AS (
-       |  SELECT DISTINCT doc_id, ${charFold64Sql("s")} AS h FROM sh
+       |  SELECT DISTINCT doc_id, s AS h FROM sh
        |), sizes AS (
        |  SELECT doc_id, count(*) AS n FROM vh GROUP BY 1
        |), common AS (
@@ -661,7 +661,7 @@ object LLMOps {
     // hash (round 17 introduced the hash ride to cut shuffle bytes
     // ~2.5×; round 18 widened it from mod-P, which pigeonhole-collides
     // at rung vocabularies — ADVICE r17 high, see charFold64). The
-    // oracle CTEs hash identically.
+    // oracle CTEs join on the shingle strings instead.
     val sh = shingles(spark, sfDir)
       .select($"doc_id", charFold64($"s").as("h"))
     // capOverride is a TEST hook: the fixtures' max df sits under the
@@ -722,7 +722,7 @@ object LLMOps {
       ngramPairs(spark, sfDir).orderBy($"d1", $"d2")
     },
     Some(s"""WITH $shCte, vh AS (
-            |  SELECT doc_id, ${charFold64Sql("s")} AS h FROM sh
+            |  SELECT doc_id, s AS h FROM sh
             |), sizes AS (
             |  SELECT doc_id, count(*) AS n FROM vh GROUP BY 1
             |), common AS (
@@ -876,7 +876,7 @@ object LLMOps {
     * the recursive-SQL oracle (Extras.qSqlRecursive). */
   private[graft] val pairsCte: String =
     s"""$shCte, vh AS MATERIALIZED (
-       |  SELECT doc_id, ${charFold64Sql("s")} AS h FROM sh
+       |  SELECT doc_id, s AS h FROM sh
        |), sizes AS MATERIALIZED (
        |  SELECT doc_id, count(*) AS n FROM vh GROUP BY 1
        |), common AS MATERIALIZED (
@@ -4017,7 +4017,7 @@ object LLMOps {
             |    ON a.band = b.band AND a.mv1 = b.mv1
             |   AND a.mv2 = b.mv2 AND a.doc_id < b.doc_id
             |), vh AS MATERIALIZED (
-            |  SELECT DISTINCT doc_id, ${charFold64Sql("s")} AS h
+            |  SELECT DISTINCT doc_id, s AS h
             |  FROM rsh
             |), sizes AS (
             |  SELECT doc_id, count(*) AS n FROM vh GROUP BY 1

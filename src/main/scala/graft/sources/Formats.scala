@@ -518,10 +518,11 @@ object Formats {
     * re-aggregable from saved state), then merged at query time to
     * answer p50/p95-over-any-date-range without rescanning raw events —
     * THE production latency-percentile architecture at 100 TB.
-    * `kll_sketch_agg`/`kll_merge_agg` are native
-    * TypedImperativeAggregates (graft.functions.KllSketch — live heap
-    * sketch as the buffer, zero per-row serialization, map-side
-    * partials), registered by GraftExtensions like vec_dot. Sketch
+    * `kll_sketch_agg_double`/`kll_merge_agg_double` are Spark's own
+    * DataSketches aggregates (default k = 200) and
+    * `kll_sketch_get_quantile_double` reads the merged sketch; it
+    * raises on an EMPTY sketch, which no group here can build (every
+    * group is a non-empty event type with non-null values). Sketch
     * estimates are engine-specific → the public query is the
     * bounded-gate form ([[approxEst]] doc): exact p50/p95 (Spark
     * `percentile` vs DuckDB `quantile_cont`, the E9 precedent) and
@@ -538,14 +539,14 @@ object Formats {
     import spark.implicits._
     val daily = Tables.read(spark, sfDir, "events")
       .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(call_function("kll_sketch_agg", $"value").as("sk"))
+      .agg(kll_sketch_agg_double($"value").as("sk"))
     daily.groupBy($"event_type")
-      .agg(call_function("kll_merge_agg", $"sk").as("msk"),
+      .agg(kll_merge_agg_double($"sk").as("msk"),
         count(lit(1)).as("n_days"))
       .select($"event_type",
-        round(call_function("kll_quantile", $"msk", lit(0.5)), 6)
+        round(kll_sketch_get_quantile_double($"msk", lit(0.5)), 6)
           .as("p50"),
-        round(call_function("kll_quantile", $"msk", lit(0.95)), 6)
+        round(kll_sketch_get_quantile_double($"msk", lit(0.95)), 6)
           .as("p95"),
         $"n_days")
   }
@@ -584,13 +585,15 @@ object Formats {
            |       TRUE AS p95_within_bound
            |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin))
 
-  /** Theta-sketch SET-ALGEBRA re-aggregation — the fourth sketch verb
-    * (ThetaSketch.scala): per-day theta sketches of the user set are
-    * merged into two month-half windows IN ONE PASS (the CASE-routed
-    * conditional merge — `theta_merge_agg` skips nulls), then the
-    * final row asks the questions HLL state cannot answer: how many
-    * users in each half, how many in BOTH (intersection), how many
-    * only in the first (difference) — corpus/cohort overlap without
+  /** Theta-sketch SET-ALGEBRA re-aggregation — the fourth sketch verb,
+    * on Spark's own DataSketches theta functions: per-day theta
+    * sketches of the user set (`theta_sketch_agg`, default
+    * lgNomEntries 12 = 4096 nominal entries) are merged into two
+    * month-half windows IN ONE PASS (the CASE-routed conditional
+    * merge — `theta_union_agg` skips nulls), then the final row asks
+    * the questions HLL state cannot answer: how many users in each
+    * half, how many in BOTH (`theta_intersection`), how many only in
+    * the first (`theta_difference`) — corpus/cohort overlap without
     * ever joining raw rows. Unlike the KLL/HLL/CMS rows this one
     * carries a FULL oracle: theta sketches are exact until retained
     * entries exceed nominal k (4096), and fixture cardinalities stay
@@ -603,22 +606,18 @@ object Formats {
       import spark.implicits._
       val daily = Tables.read(spark, sfDir, "events")
         .groupBy(to_date($"ts").as("day"))
-        .agg(call_function("theta_sketch_agg", $"user_id").as("sk"))
+        .agg(theta_sketch_agg($"user_id").as("sk"))
       daily
         .agg(
-          call_function("theta_merge_agg",
-            when(dayofmonth($"day") <= 15, $"sk")).as("ua"),
-          call_function("theta_merge_agg",
-            when(dayofmonth($"day") > 15, $"sk")).as("ub"))
+          theta_union_agg(when(dayofmonth($"day") <= 15, $"sk")).as("ua"),
+          theta_union_agg(when(dayofmonth($"day") > 15, $"sk")).as("ub"))
         .select(
-          round(call_function("theta_estimate", $"ua"))
-            .cast("long").as("n_a"),
-          round(call_function("theta_estimate", $"ub"))
-            .cast("long").as("n_b"),
-          round(call_function("theta_intersect_estimate", $"ua", $"ub"))
-            .cast("long").as("n_overlap"),
-          round(call_function("theta_anotb_estimate", $"ua", $"ub"))
-            .cast("long").as("n_only_a"))
+          theta_sketch_estimate($"ua").as("n_a"),
+          theta_sketch_estimate($"ub").as("n_b"),
+          theta_sketch_estimate(theta_intersection($"ua", $"ub"))
+            .as("n_overlap"),
+          theta_sketch_estimate(theta_difference($"ua", $"ub"))
+            .as("n_only_a"))
     },
     Some("""WITH ev AS (
            |  SELECT user_id,
@@ -635,9 +634,9 @@ object Formats {
 
   /** E313: **native approx_top_k sketch rollup** — Spark 4's built-in
     * frequent-items sketch run through the SAME composable pre-agg
-    * architecture as the custom sketch rows (E44 HLL / E51 CMS /
-    * E61 KLL / E69 theta): per-day `approx_top_k_accumulate` states
-    * (the layer a 100 TB deployment persists once per partition),
+    * architecture as the other built-in sketch rows (E44 HLL / E51
+    * CMS / E61 KLL / E69 theta): per-day `approx_top_k_accumulate`
+    * states (the layer a 100 TB deployment persists once per partition),
     * merged at query time with `approx_top_k_combine` and read with
     * `approx_top_k_estimate` — the daily states never rescan raw
     * data. The audit contract is the E44 driver-gated pattern: the

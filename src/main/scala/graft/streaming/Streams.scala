@@ -48,7 +48,10 @@ class UserAggProcessor
   * length — the whole point of sketch state vs buffering values), each
   * micro-batch folds its rows in and emits (key, n_seen, bytes); the
   * final batch-side step picks each key's last emission and extracts
-  * quantiles with the same `kll_quantile` expression batch uses. */
+  * quantiles with Spark's `kll_sketch_get_quantile_double`, the same
+  * extraction batch uses (the bytes are a DataSketches
+  * `KllDoublesSketch`, k = 200, the format Spark's KLL functions
+  * read). */
 class KllStateProcessor
     extends StatefulProcessor[String, (String, Double),
       (String, Long, Array[Byte])] {
@@ -115,7 +118,7 @@ object StreamRun {
     * fixture state, so one constant serves them all; a production
     * stream sizes `spark.sql.shuffle.partitions` to its own load before
     * its first start, which bakes the count into its checkpoint. */
-  private val stateParts = 4
+  private[streaming] val stateParts = 4
 
   /** Checkpoint root for the harness's TRANSIENT streams: the JVM temp
     * dir, or `graft.stream.checkpointRoot` where set (perfbench points
@@ -827,11 +830,11 @@ object Streams {
     * (buffering raw values for exact streaming quantiles is unbounded
     * state — the disallowed design). Runs under the RocksDB provider
     * like the T6b twin; the final emission per key (max n_seen) feeds
-    * the same `kll_quantile` extraction batch uses, and the oracle is
-    * the E61-style driver-gated bounded pass: the engine checks its
-    * estimates against exact percentile BANDS (±3.5 rank points — the
-    * k=200 guarantee with margin) and ships booleans the oracle
-    * expects TRUE, alongside exact values it recomputes. */
+    * the same `kll_sketch_get_quantile_double` extraction batch uses,
+    * and the oracle is the E61-style driver-gated bounded pass: the
+    * engine checks its estimates against exact percentile BANDS (±3.5
+    * rank points — the k=200 guarantee with margin) and ships booleans
+    * the oracle expects TRUE, alongside exact values it recomputes. */
   val qStreamQuantile = Q("q_stream_quantile",
     (spark, sfDir) => {
       import spark.implicits._
@@ -852,8 +855,8 @@ object Streams {
         val finals = emitted
           .withColumn("rk", row_number().over(w)).filter($"rk" === 1)
           .select($"event_type", $"n_seen",
-            call_function("kll_quantile", $"sk", lit(0.5)).as("p50"),
-            call_function("kll_quantile", $"sk", lit(0.95)).as("p95"))
+            kll_sketch_get_quantile_double($"sk", lit(0.5)).as("p50"),
+            kll_sketch_get_quantile_double($"sk", lit(0.95)).as("p95"))
         val exact = Tables.read(spark, sfDir, "events")
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n_exact"),
@@ -933,7 +936,7 @@ object Streams {
       val partsKey = "spark.sql.shuffle.partitions"
       val prevParts = spark.conf.get(partsKey)
       spark.conf.set(progKey, "10000")
-      spark.conf.set(partsKey, "4")
+      spark.conf.set(partsKey, StreamRun.stateParts.toString)
       try {
         val s = Tables.readStream(spark, sfDir, "events")
           .groupBy($"event_type").agg(count(lit(1)).as("n"))

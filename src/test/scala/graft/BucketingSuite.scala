@@ -228,15 +228,40 @@ class BucketingSuite extends AnyFunSuite {
     // regime 2 (the 100 TB premise): force estimation mode with a
     // small nominal k over a larger id domain; theta RSE = 1/√k →
     // k=256 gives 6.25% at 1σ; assert within 4σ AND that sampling
-    // really engaged (an exact-mode pass would vacuously succeed)
+    // really engaged (an exact-mode pass would vacuously succeed).
+    // Spark's second argument is log2 of k: 8 → k=256
     val big = spark.range(20000).select($"id")
-    val sk = big.agg(
-      call_function("theta_sketch_agg", $"id", lit(256)).as("sk"))
-    val est = sk.select(
-      call_function("theta_estimate", $"sk")).collect().head.getDouble(0)
-    assert(est !== 20000.0, "k=256 over 20k ids must be estimating")
+    val sk = big.agg(theta_sketch_agg($"id", 8).as("sk"))
+    val est = sk.select(theta_sketch_estimate($"sk"))
+      .collect().head.getLong(0)
+    assert(est !== 20000L, "k=256 over 20k ids must be estimating")
     assert(math.abs(est - 20000.0) / 20000.0 < 0.25,
       s"estimate $est outside the 4-sigma theta error bound")
+  }
+
+  test("GraftExtensions shadows no built-in function") {
+    // an injected name Spark already ships replaces the built-in in
+    // every session the extension wires (Spark only logs a warning),
+    // so Spark's documented calls of that name would run other code
+    import org.apache.spark.sql.SparkSessionExtensions
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val injected = scala.collection.mutable.Buffer.empty[FunctionIdentifier]
+    graft.functions.GraftExtensions.register(new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1
+        super.injectFunction(f)
+      }
+    })
+    assert(injected.nonEmpty)
+    val shadowed = injected.filter(FunctionRegistry.builtin.functionExists)
+    assert(shadowed.isEmpty, s"built-in functions replaced: $shadowed")
+    // Spark's own doc example: the second argument is lgNomEntries
+    val n = spark.sql(
+      """SELECT theta_sketch_estimate(theta_sketch_agg(col, 12))
+        |FROM VALUES (1), (1), (2), (2), (3) tab(col)""".stripMargin)
+      .collect().head.getLong(0)
+    assert(n === 3L)
   }
 
   test("new sessions share one memo eviction listener per context") {
