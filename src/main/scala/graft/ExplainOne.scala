@@ -57,7 +57,9 @@ object ExplainOne {
 
   /** Runs `df` through a `noop` write and returns the formatted plan of
     * that write's own QueryExecution. Fails unless the top adaptive node
-    * reports `isFinalPlan=true`. */
+    * reports `isFinalPlan=true`; a plan with no adaptive node (no
+    * exchange and no subquery, e.g. a TakeOrderedAndProject) runs as
+    * planned, so its plan is final too. */
   def executedPlan(spark: SparkSession, df: DataFrame): String = {
     val captured = new AtomicReference[QueryExecution]()
     val listener = new QueryExecutionListener {
@@ -83,7 +85,7 @@ object ExplainOne {
     val top = qe.executedPlan.collectFirst {
       case a: AdaptiveSparkPlanExec => a
     }
-    require(top.exists(_.isFinalPlan),
+    require(top.forall(_.isFinalPlan),
       "the noop write's plan is not the AQE final plan (isFinalPlan=false)")
     qe.explainString(FormattedMode)
   }

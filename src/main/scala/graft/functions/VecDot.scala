@@ -267,5 +267,7 @@ object GraftExtensions {
     // bounded-heap operator and the native streaming-merge as-of join
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    // AQE query-stage preparation: small total-order sorts in one task
+    ext.injectQueryStagePrepRule(graft.plans.SmallSortOneTask)
   }
 }

@@ -50,7 +50,9 @@ case class FourCEConfig(
   * counts across cells, and Labs' stats aggregate; the cohort is the
   * only materialization barrier (caller may persist); the date spine
   * stays tiny so its one join broadcasts; every output ends in a
-  * total-order sort.
+  * total-order sort, which for a small output (at most
+  * `spark.sql.adaptive.coalescePartitions.minPartitionSize`) runs in
+  * one task with no range exchange ([[graft.plans.SmallSortOneTask]]).
   */
 object FourCE {
 
@@ -535,7 +537,11 @@ object FourCE {
     * outputs are site-level files (≤ thousands of rows), so they
     * coalesce to ONE csv part like the reference's single flat file;
     * set `singlePart = false` for the patient-level Phase-2 files,
-    * which can be arbitrarily large and stay partitioned. */
+    * which can be arbitrarily large and stay partitioned. A small
+    * output's total-order sort already runs in one task
+    * ([[graft.plans.SmallSortOneTask]]), so there the `coalesce(1)`
+    * changes nothing; a larger one keeps its range exchange, whose
+    * partitions the one writing task sorts and writes in order. */
   def writeCsv(df: DataFrame, path: String,
       singlePart: Boolean = true): Unit = {
     val out = if (singlePart) df.coalesce(1) else df

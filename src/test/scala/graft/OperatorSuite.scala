@@ -5677,4 +5677,33 @@ class OperatorSuite extends AnyFunSuite {
     assert(conf.get("spark.sql.codegen.cache.maxEntries") === "2000")
     assert(conf.get("spark.buffer.pageSize") === "4m")
   }
+
+  test("one-task small sort keeps the total order on both sides of its gate") {
+    // SmallSortOneTask sorts inputs estimated at most minPartitionSize
+    // in one task and leaves larger ones to the range exchange; 13
+    // distinct keys over tens of thousands of rows stress the ties
+    import org.apache.spark.sql.internal.SQLConf
+    import TestSpark.{finalPlan, sortsInOneTask}
+    val gate = spark.sessionState.conf
+      .getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    def frame(n: Long) = spark.range(0, n)
+      .select(((col("id") * 7919) % 13).as("k"), col("id").as("v"))
+    def estimate(n: Long) = frame(n).queryExecution.optimizedPlan.stats
+      .sizeInBytes
+    val perRow = estimate(1000) / 1000
+    val edge = (BigInt(gate) / perRow).toLong
+    for ((n, oneTask) <- Seq(edge - 100 -> true, edge + 100 -> false)) {
+      assert((estimate(n) <= gate) == oneTask, s"n=$n misses its side")
+      val sorted = frame(n).orderBy(col("k"))
+      val (p, _) = finalPlan(sorted)
+      assert(sortsInOneTask(p) == oneTask, s"n=$n planned:\n$p")
+      val rows = sorted.collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(rows.iterator.map(_._1).sliding(2).forall {
+        case Seq(a, b) => a <= b
+        case _ => true
+      }, s"n=$n: keys out of order")
+      val input = frame(n).collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(rows.sorted.sameElements(input.sorted), s"n=$n: rows differ")
+    }
+  }
 }

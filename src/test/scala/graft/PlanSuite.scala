@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * incident. Streaming queries are excluded (their fn executes the
   * stream; plans are checked by their own suite's equivalence tests). */
 class PlanSuite extends AnyFunSuite {
-  import TestSpark.{sf, spark}
+  import TestSpark.{finalPlan, sf, sortsInOneTask, spark}
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf)
@@ -363,6 +363,72 @@ class PlanSuite extends AnyFunSuite {
     assert(p.toLowerCase.contains("rangepartitioning"),
       s"expected a RangePartitioning exchange in:\n$p")
     assert(p.contains("Sort ["), "expected the in-partition sort")
+  }
+
+  test("small total-order sort runs in one task: no range exchange") {
+    // SmallSortOneTask: below minPartitionSize the range exchange (its
+    // sampling job and its shuffle) becomes Coalesce 1 under the Sort.
+    // Static arm: a tiny scan is small before anything runs.
+    import org.apache.spark.sql.functions.col
+    val scan = Tables.read(spark, sf, "orders")
+      .filter(col("o_totalprice") > 1000)
+      .orderBy(col("o_orderdate"), col("o_orderkey"))
+    val (p, parts) = finalPlan(scan)
+    assert(sortsInOneTask(p) && parts == 1,
+      s"expected Coalesce 1 under the output Sort in:\n$p")
+    assert(!p.toString.toLowerCase.contains("rangepartitioning"), s"$p")
+    // Runtime arm: 2M ids estimate 16 MB through the aggregate, so the
+    // initial plan keeps the exchange; the partial aggregate's stage
+    // measures a few hundred bytes and the re-plan drops it
+    val agg = spark.range(0, 2000000).groupBy((col("id") % 10).as("k"))
+      .count().orderBy(col("k"))
+    assert(agg.queryExecution.executedPlan.toString.toLowerCase
+      .contains("rangepartitioning"), "the static estimate is above the gate")
+    val (pa, partsA) = finalPlan(agg)
+    assert(sortsInOneTask(pa) && partsA == 1,
+      s"expected the re-plan to sort in one task:\n$pa")
+    assert(!pa.toString.toLowerCase.contains("rangepartitioning"), s"$pa")
+  }
+
+  test("above-gate sort keeps a multi-partition range exchange") {
+    import org.apache.spark.sql.functions.col
+    val (p, parts) = finalPlan(spark.range(0, 2000000).orderBy(col("id").desc))
+    assert(p.toString.toLowerCase.contains("rangepartitioning"),
+      s"16 MB of ids must keep the range exchange:\n$p")
+    assert(!sortsInOneTask(p) && parts > 1, s"$parts partitions:\n$p")
+  }
+
+  test("small-sort gate refuses estimates through Generate and Sample") {
+    // both children estimate under 1 MB, so only the refusal keeps
+    // their exchanges: explode multiplies rows (not the estimate), and
+    // a sample's estimate is a fraction of the input the task would read
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.{col, explode, lit, sequence}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.internal.SQLConf
+    val gate = spark.sessionState.conf
+      .getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    val exploded = spark.range(0, 10)
+      .select(col("id"), explode(sequence(lit(0), lit(20000))).as("x"))
+      .select((col("x") % 97).as("k"), col("id"))
+      .orderBy(col("k"), col("id"))
+    val sampled = spark.range(0, 100000000L).sample(0.00001, 7L)
+      .orderBy(col("id").desc)
+    for (df <- Seq(exploded, sampled)) {
+      val p = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan // the initial plan
+        case other => other
+      }
+      val ex = p.collect { case e: ShuffleExchangeExec => e }
+      assert(ex.size == 1 &&
+        p.toString.toLowerCase.contains("rangepartitioning"),
+        s"expected the range exchange to stay:\n$p")
+      assert(ex.head.child.logicalLink.get.stats.sizeInBytes <= gate,
+        "the estimate must be under the gate for the refusal to matter")
+    }
+    val (p, _) = finalPlan(exploded)
+    assert(p.toString.toLowerCase.contains("rangepartitioning"),
+      s"the 200k exploded rows keep their range exchange:\n$p")
   }
 
   test("heaviest round-11 operators keep their intended join shapes") {
